@@ -1,4 +1,4 @@
-"""Main-content extraction from HTML: stdlib DOM walk + Boilerpipe-style
+"""Main-content extraction from HTML: regex token scan + Boilerpipe-style
 number-of-words / link-density block classification.
 
 This is the HTML analogue of the reference's "extract the document's text"
@@ -8,8 +8,13 @@ per document plus a flat span list
 (/root/reference/src/infrastructure/services/optional_services.py:33-42).
 
 Design (public knowledge only):
-* Parsing: ``html.parser.HTMLParser`` (stdlib) streaming into a flat list of
-  *text blocks*, flushed at block-level tag boundaries.
+* Parsing: one possessive regex (``_SCAN``) locates every markup token;
+  a single fused loop (``_blocks_fused``) walks the tokens with local
+  skip/link depth counters and collects a flat list of *text blocks*,
+  flushed at block-level tag boundaries.  script/style bodies are CDATA
+  (jumped to their close tag).  The stdlib ``html.parser`` twin lives
+  test-side as the oracle (tests/test_core.py::
+  test_fast_tokenizer_matches_stdlib).
 * Boilerplate classification: the published Boilerpipe
   ``NumWordsRulesClassifier`` decision tree (Kohlschütter et al., WSDM 2010,
   "Boilerplate Detection using Shallow Text Features") over
@@ -28,12 +33,10 @@ levels structural rather than coincidental.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import re
 from html import unescape
-from html.parser import HTMLParser
 
-from .html_tokenize import _CDATA_CLOSE, _SCAN
-from .normalize import canonical_text, collapse_ws
+from .normalize import canonical_text
 from .spans import Span
 
 # Subtrees that never contribute content text.
@@ -55,84 +58,43 @@ BLOCK_TAGS = {
 
 HEADING_TAGS = {"h1", "h2", "h3", "h4", "h5", "h6"}
 
+_CDATA_CLOSE = {
+    "script": re.compile(r"</\s*script[^>]*>", re.IGNORECASE),
+    "style": re.compile(r"</\s*style[^>]*>", re.IGNORECASE),
+}
 
-@dataclass
-class _Block:
-    tag: str
-    pieces: list = field(default_factory=list)        # (collapsed_piece, is_link)
+# one scan token = comment | declaration/PI | complete tag.  The attr
+# run uses a POSSESSIVE star (Python 3.11): the alternatives are
+# mutually exclusive at every position (plain chars / slash / quoted
+# string start on disjoint characters), so possessive matching accepts
+# the identical language — but a failing tag (a '<name' with no
+# terminating '>' in 4 KB of garbage) fails in linear time instead of
+# exponentially re-splitting the run.  A fuzz probe caught the
+# backtracking blowup: 4 KB of random bytes sniffed as HTML took >10 s
+# per document with the old `(?:...)*` — a crawl-scale DoS, present
+# since round 1 and never triggered by well-formed fixtures.
+# '/' is consumed as attr content only when NOT followed by '>' —
+# otherwise the greedy attr run would swallow the self-close slash of
+# '<iframe/>' and the skip-tag depth counter would never come back
+# down.  The comment alternative is first (a comment may contain '>')
+# and swallows to EOF when unterminated, matching the old find-based
+# behavior.  groups: (1)=closing '/', (2)=tag name, (3)=self-close '/'
+_SCAN = re.compile(
+    r"<!--.*?(?:-->|$)"
+    r"|<(?:"
+    r"[!?][^>]*>"
+    r"|(/)?([a-zA-Z][-.a-zA-Z0-9:_]*)"
+    r"(?:[^<>'\"/]+|/(?!>)|\"[^\"]*\"|'[^']*')*+"
+    r"(/)?>"
+    r")",
+    re.DOTALL,
+)
 
-    def finish(self):
-        # single pass over pieces (this runs once per flushed block on
-        # every document; it was 3 generator passes)
-        link_chars = total_chars = 0
-        parts = []
-        for p, is_link in self.pieces:
-            parts.append(p)
-            n = len(p)
-            total_chars += n
-            if is_link:
-                link_chars += n
-        text = collapse_ws(" ".join(parts))
-        words = len(text.split()) if text else 0
-        link_density = (link_chars / total_chars) if total_chars > 0 else 0.0
-        return text, words, link_density
-
-
-class _BlockHandler:
-    """Event consumer shared by the fast tokenizer (production path) and
-    the stdlib HTMLParser (cross-check twin in tests)."""
-
-    def __init__(self):
-        self.blocks: list[tuple[str, int, float, str]] = []  # (text, words, ld, tag)
-        self._skip_depth = 0
-        self._link_depth = 0
-        self._cur = _Block("body")
-
-    # -- flushing ---------------------------------------------------------
-    def _flush(self, next_tag: str):
-        text, words, ld = self._cur.finish()
-        if text:
-            self.blocks.append((text, words, ld, self._cur.tag))
-        self._cur = _Block(next_tag)
-
-    # -- HTMLParser hooks --------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        if tag in SKIP_TAGS:
-            self._skip_depth += 1
-            return
-        if self._skip_depth:
-            return
-        if tag == "a":
-            self._link_depth += 1
-        if tag in BLOCK_TAGS:
-            self._flush(tag if tag not in ("br", "hr") else self._cur.tag)
-
-    def handle_endtag(self, tag):
-        if tag in SKIP_TAGS:
-            if self._skip_depth:
-                self._skip_depth -= 1
-            return
-        if self._skip_depth:
-            return
-        if tag == "a" and self._link_depth:
-            self._link_depth -= 1
-        if tag in BLOCK_TAGS:
-            self._flush(self._cur.tag)
-
-    def handle_startendtag(self, tag, attrs):
-        self.handle_starttag(tag, attrs)
-        if tag not in SKIP_TAGS:
-            self.handle_endtag(tag)
-        else:
-            # self-closing skip tag opens nothing
-            self._skip_depth -= 1
-
-    def handle_data(self, data):
-        if self._skip_depth:
-            return
-        piece = collapse_ws(data)
-        if piece:
-            self._cur.pieces.append((piece, self._link_depth > 0))
+# the fused loop's CDATA branch closes the element as a skip tag (it
+# decrements skip_depth without checking SKIP_TAGS), so every CDATA
+# element must be a skip tag or a later close of it would end an
+# enclosing skipped subtree early and leak its content
+assert _CDATA_CLOSE.keys() <= SKIP_TAGS
 
 
 def _is_content(prev, curr, nxt) -> bool:
@@ -156,26 +118,26 @@ def _is_content(prev, curr, nxt) -> bool:
     return True
 
 
-class _StdlibBlockParser(_BlockHandler, HTMLParser):
-    """stdlib-tokenized twin (tests assert corpus-wide equality with the
-    fast tokenizer; see html_tokenize.py)."""
-
-    def __init__(self):
-        _BlockHandler.__init__(self)
-        HTMLParser.__init__(self, convert_charrefs=True)
-
-
 def _blocks_fused(raw: str) -> list[tuple[str, int, float, str]]:
-    """Fused tokenizer + block extractor: the feed_events scan loop and the
-    _BlockHandler event logic inlined into ONE function with local state.
+    """Tokenize ``raw`` and collect its text blocks in ONE loop with local
+    state: ``(text, words, link_density, tag)`` per nonempty block.
 
-    Profiling put the per-event Python method dispatch (4 hook calls per
-    markup token, ~140 events/doc over 70% of the corpus) at a third of
-    HTML-route CPU; fusing removes every hook call and the per-block
-    dataclass.  Event-for-event identical to
-    ``feed_events(raw, _BlockHandler())`` — pinned three-ways against the
-    handler and the stdlib twin over the whole corpus
-    (tests/test_core.py::test_fast_tokenizer_matches_stdlib).
+    Repeated C-level ``_SCAN.search(raw, pos)`` calls locate every markup
+    token; text between tokens (including a bare '<' that opens no tag)
+    is data.  CDATA bodies (script/style) are jumped by moving ``pos``
+    past the close tag and resuming the search THERE — a plain
+    ``finditer`` is wrong here because a match that starts inside the
+    jumped region but ends past it would swallow real markup after the
+    CDATA close (``<script><p x='</script><b>z</b>'>`` lost the <b>).
+
+    Semantics match a block extractor driven by the stdlib ``html.parser``
+    with ``convert_charrefs=True``: comments/declarations/PIs are silent,
+    tag names lowercase, quoted '>' in attributes tolerated.  Pinned
+    block-for-block against that independent twin over the whole tiny
+    corpus plus edge cases
+    (tests/test_core.py::test_fast_tokenizer_matches_stdlib).  Profiling
+    put per-event hook dispatch at a third of HTML-route CPU; this loop
+    has no hooks and no per-block object.
 
     Two algebraic shortcuts (exact, not approximations):
     * pieces are ``collapse_ws`` outputs (nonempty, single internal
@@ -252,15 +214,13 @@ def _blocks_fused(raw: str) -> list[tuple[str, int, float, str]]:
                     flush(tag if tag not in ("br", "hr") else cur_tag)
             cd = _CDATA_CLOSE.get(tag)
             if cd is not None:                  # CDATA content element
-                # raw CDATA body bypasses unescape (feed_events calls
-                # handle_data directly); script/style are SKIP_TAGS so
-                # the body is dropped by the skip guard exactly as the
-                # handler drops it — only the position jump matters
+                # script/style are SKIP_TAGS (asserted at import), so
+                # the body is dropped and only the position jump matters
                 mc = cd.search(raw, pos)
                 if mc is None:
                     pos = n
                 else:
-                    # handle_endtag(tag): tag is a SKIP_TAG
+                    # the endtag of a SKIP_TAG
                     if skip_depth:
                         skip_depth -= 1
                     pos = mc.end()
@@ -279,18 +239,9 @@ def _blocks_fused(raw: str) -> list[tuple[str, int, float, str]]:
     return blocks
 
 
-def extract_html(payload: bytes,
-                 _stdlib_tokenizer: bool = False) -> tuple[str, list[Span]]:
+def extract_html(payload: bytes) -> tuple[str, list[Span]]:
     """Extract main content text + block spans from raw HTML bytes."""
-    raw = payload.decode("utf-8", errors="replace")
-    if _stdlib_tokenizer:
-        parser = _StdlibBlockParser()
-        parser.feed(raw)
-        parser.close()
-        parser._flush(parser._cur.tag)
-        blocks = parser.blocks
-    else:
-        blocks = _blocks_fused(raw)
+    blocks = _blocks_fused(payload.decode("utf-8", errors="replace"))
     feats = [(w, ld) for (_, w, ld, _) in blocks]
     kept: list[tuple[str, str]] = []
     for i, (text, words, ld, tag) in enumerate(blocks):

@@ -228,19 +228,10 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         # remove it with a broadcast ANTI-join — zero added shuffle on the
         # main path and no sort, vs. the count-over-window formulation
         # that sorted the full exploded band rows (round-2 bench: +196%).
-        # One explicit repartition on the join key makes the bucket-count
-        # subtree and the self-join sides share a single ReusedExchange:
-        # the expensive signature stage runs ONCE and the guard adds no
-        # full-row shuffle.  Two plan-shape subtleties, both verified in
-        # the executed (post-AQE) plan:
-        # * count("doc_id") not count("*"): counting a literal lets column
-        #   pruning drop doc_id BELOW the exchange in the count subtree,
-        #   which breaks canonical equality with the join-side exchange
-        #   and silently doubles the signature computation (doc_id is
-        #   never null here, so the value is identical);
-        # * the anti-join itself is erased by AQE's empty-relation
-        #   propagation whenever no bucket exceeds the cap, so the guard's
-        #   steady-state cost is just the per-bucket count.
+        # The count reads the checkpointed band table below, never the
+        # signature stage.  The anti-join itself is erased by AQE's
+        # empty-relation propagation whenever no bucket exceeds the cap,
+        # so the guard's steady-state cost is just the per-bucket count.
         # partition count = defaultParallelism, not shuffle.partitions:
         # the exploded band rows are narrow (ints + one md5), so the
         # exchange wants exactly one bucket per core — measured ~1 s of

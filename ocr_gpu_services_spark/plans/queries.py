@@ -12,6 +12,8 @@ no SQL twin and get the driver's rows-only check.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -523,7 +525,7 @@ def _layout_truth_values() -> str:
             "AS t(doc_id, template_id, cost)" % ", ".join(rows))
 
 
-@q("layout_classify", _layout_truth_values())
+@q("layout_classify", _layout_truth_values)
 def layout_classify(spark, sf_dir):
     import pandas as pd
 
@@ -1082,7 +1084,16 @@ def deskew_angle(spark, sf_dir):
                     F.round(angle, 4).alias("rotation_deg")))
 
 
-def _image_truth_values() -> tuple[str, str]:
+def _tiny_spans(spark):
+    """(url, content_type, s): one row per kernel span of the tiny
+    extraction, ``s`` the span struct — the shared prologue of the span
+    queries."""
+    return (extract_pipeline(synthetic_pages(spark, "tiny"))
+            .select("url", "content_type", F.explode("spans").alias("s")))
+
+
+@functools.cache
+def _image_truth_values() -> tuple[str, str, str]:
     """(qr VALUES sql, signature VALUES sql, ean VALUES sql) from the
     fixture generator's PLAN geometry (fixtures/gen.image_expectations)
     — placement arithmetic only, independent of the detection pipeline
@@ -1133,10 +1144,7 @@ def _image_truth_values() -> tuple[str, str]:
     return qr_sql, sig_sql, ean_sql
 
 
-_QR_TRUTH_SQL, _SIG_TRUTH_SQL, _EAN_TRUTH_SQL = _image_truth_values()
-
-
-@q("qr_extract", _QR_TRUTH_SQL)
+@q("qr_extract", lambda: _image_truth_values()[0])
 def qr_extract(spark, sf_dir):
     """U3 (pyzbar QR decode, /root/reference/src/infrastructure/services/
     optional_services.py:56-78): record shape {data: str(utf-8), type}.
@@ -1146,14 +1154,12 @@ def qr_extract(spark, sf_dir):
     Reed-Solomon correction (core/qrcode.py).  The oracle is
     the generator's planted ground truth, so a decode that merely looks
     plausible cannot pass."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.select("url", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "qr")
+    return (_tiny_spans(spark).filter(F.col("s.kind") == "qr")
             .select("url", F.col("s.text").alias("data"),
                     F.lit("QRCODE").alias("type")))
 
 
-@q("barcode_extract", _EAN_TRUTH_SQL)
+@q("barcode_extract", lambda: _image_truth_values()[2])
 def barcode_extract(spark, sf_dir):
     """U3, 1-D symbologies (pyzbar reads retail/logistics codes alongside
     QR, reference optional_services.py:56-78): EAN-13, Code 128 and
@@ -1165,8 +1171,7 @@ def barcode_extract(spark, sf_dir):
     Oracle = the generator's planted payloads + placement arithmetic, so
     payload, the derived EAN check digit AND the box are all
     hard-gated."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.select("url", F.explode("spans").alias("s"))
+    return (_tiny_spans(spark)
             .filter(F.col("s.kind").isin("barcode", "code128", "code39"))
             .select("url", F.col("s.text").alias("data"),
                     F.when(F.col("s.kind") == "barcode", F.lit("EAN13"))
@@ -1175,6 +1180,7 @@ def barcode_extract(spark, sf_dir):
                     "s.x0", "s.y0", "s.x1", "s.y1"))
 
 
+@functools.cache
 def _ocr_span_truth_sql() -> tuple[str, str]:
     """(line VALUES sql, word VALUES sql): the dual-engine OCR record
     families over every tiny image row, from the generator's plan
@@ -1195,10 +1201,7 @@ def _ocr_span_truth_sql() -> tuple[str, str]:
     return tmpl % ", ".join(line_rows), tmpl % ", ".join(word_rows)
 
 
-_OCR_LINE_TRUTH_SQL, _OCR_WORD_TRUTH_SQL = _ocr_span_truth_sql()
-
-
-@q("ocr_line_spans", _OCR_LINE_TRUTH_SQL)
+@q("ocr_line_spans", lambda: _ocr_span_truth_sql()[0])
 def ocr_line_spans(spark, sf_dir):
     """Dual-engine OCR records, family 1 — PaddleOCR line records
     (reference ocr_service.py:26-36: {text, confidence, position} per
@@ -1206,24 +1209,22 @@ def ocr_line_spans(spark, sf_dir):
     confidence is the mean of the member words' confidences.  Oracle =
     plan placement arithmetic, so text, confidence AND geometry are all
     hard-gated."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.filter(F.col("content_type") == "image")
-            .select("url", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "line")
+    return (_tiny_spans(spark)
+            .filter((F.col("content_type") == "image")
+                    & (F.col("s.kind") == "line"))
             .select("url", F.col("s.text").alias("text"),
                     F.col("s.conf").alias("conf"),
                     "s.x0", "s.y0", "s.x1", "s.y1"))
 
 
-@q("ocr_word_spans", _OCR_WORD_TRUTH_SQL)
+@q("ocr_word_spans", lambda: _ocr_span_truth_sql()[1])
 def ocr_word_spans(spark, sf_dir):
     """Dual-engine OCR records, family 2 — docTR word records
     (reference optional_services.py:33-42: {text, confidence, bbox} per
     WORD) with independent per-word confidence."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.filter(F.col("content_type") == "image")
-            .select("url", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "word")
+    return (_tiny_spans(spark)
+            .filter((F.col("content_type") == "image")
+                    & (F.col("s.kind") == "word"))
             .select("url", F.col("s.text").alias("text"),
                     F.col("s.conf").alias("conf"),
                     "s.x0", "s.y0", "s.x1", "s.y1"))
@@ -1244,7 +1245,7 @@ def _pdf_scan_truth_sql() -> str:
             % ", ".join(rows))
 
 
-@q("pdf_scan_ocr", _pdf_scan_truth_sql())
+@q("pdf_scan_ocr", _pdf_scan_truth_sql)
 def pdf_scan_ocr(spark, sf_dir):
     """S4 completion (scanned/raster PDFs): the reference OCRs every pdf
     by rasterizing it (/root/reference/src/api/v1/routers/ocr.py:64-67,
@@ -1262,16 +1263,14 @@ def pdf_scan_ocr(spark, sf_dir):
             .select("url", "extracted_text"))
 
 
-@q("signature_spans", _SIG_TRUTH_SQL)
+@q("signature_spans", lambda: _image_truth_values()[1])
 def signature_spans(spark, sf_dir):
     """P6+P7 from pixels (reference optional_services.py:86-106): contour
     boxes of the decoded page filtered by the signature predicate, emitted
     by the extraction kernel as kind='signature' spans.  Oracle = the
     generator's planted scribble geometry (canonical frame), which the
     kernel must re-discover via decode -> deskew -> connected components."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.select("url", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "signature")
+    return (_tiny_spans(spark).filter(F.col("s.kind") == "signature")
             .select("url", "s.x0", "s.y0", "s.x1", "s.y1"))
 
 
@@ -1332,10 +1331,8 @@ def spans_flatten(spark, sf_dir):
     the kernel emits spans nested per document; this is the explicit
     explode to one row per span — `F.inline`-style flatten of
     ARRAY<STRUCT> with the parent url carried along."""
-    ext = extract_pipeline(synthetic_pages(spark, "tiny"))
-    return (ext.select("url", F.explode("spans").alias("s"))
-            .select("url", "s.text", "s.conf", "s.x0", "s.y0", "s.x1",
-                    "s.y1", "s.kind"))
+    return _tiny_spans(spark).select("url", "s.text", "s.conf", "s.x0",
+                                     "s.y0", "s.x1", "s.y1", "s.kind")
 
 
 _WINNOW_K, _WINNOW_W = 8, 4

@@ -2,6 +2,7 @@
 
 import json
 import os
+from html.parser import HTMLParser
 
 import numpy as np
 import pytest
@@ -9,7 +10,8 @@ import pytest
 from ocr_gpu_services_spark.core import glyph_ocr
 from ocr_gpu_services_spark.core.classify import classify_text
 from ocr_gpu_services_spark.core.extract import extract_document
-from ocr_gpu_services_spark.core.html_extract import extract_html
+from ocr_gpu_services_spark.core.html_extract import (BLOCK_TAGS, SKIP_TAGS,
+                                                      extract_html)
 from ocr_gpu_services_spark.core.normalize import canonical_text, collapse_ws
 from ocr_gpu_services_spark.core.pdf_extract import extract_pdf
 from ocr_gpu_services_spark.core.png import png_decode, png_encode
@@ -248,27 +250,69 @@ def test_nfc_canon_rule_is_deterministic():
     assert unicodedata.normalize("NFC", ws.sub(" ", canon).strip()) == canon
 
 
+class _StdlibBlocks(HTMLParser):
+    """Independent twin of html_extract._blocks_fused, the test oracle: the
+    same block rules driven by the stdlib tokenizer's hooks.  Each block's
+    text, word count and link density are recomputed from its raw pieces
+    (none of the fused loop's running sums)."""
+
+    def __init__(self, raw: str):
+        super().__init__(convert_charrefs=True)
+        self.blocks = []
+        self.skip = self.link = 0
+        self.tag = "body"
+        self.pieces = []                        # (collapsed data, in <a>)
+        self.feed(raw)
+        self.close()
+        self.flush(self.tag)
+
+    def flush(self, next_tag):
+        text = collapse_ws(" ".join(p for p, _ in self.pieces))
+        if text:
+            total = sum(len(p) for p, _ in self.pieces)
+            links = sum(len(p) for p, in_link in self.pieces if in_link)
+            self.blocks.append((text, len(text.split()), links / total,
+                                self.tag))
+        self.pieces = []
+        self.tag = next_tag
+
+    def handle_starttag(self, tag, attrs):
+        if tag in SKIP_TAGS:
+            self.skip += 1
+        elif not self.skip:
+            if tag == "a":
+                self.link += 1
+            if tag in BLOCK_TAGS:
+                self.flush(self.tag if tag in ("br", "hr") else tag)
+
+    def handle_endtag(self, tag):
+        if tag in SKIP_TAGS:
+            if self.skip:
+                self.skip -= 1
+        elif not self.skip:
+            if tag == "a" and self.link:
+                self.link -= 1
+            if tag in BLOCK_TAGS:
+                self.flush(self.tag)
+
+    def handle_startendtag(self, tag, attrs):
+        if tag not in SKIP_TAGS:                # a self-closed skip tag
+            self.handle_starttag(tag, attrs)    # opens nothing
+            self.handle_endtag(tag)
+
+    def handle_data(self, data):
+        piece = collapse_ws(data)
+        if piece and not self.skip:
+            self.pieces.append((piece, self.link > 0))
+
+
 def test_fast_tokenizer_matches_stdlib():
-    """The production tokenizer (html_tokenize.feed_events) must produce
-    the exact block stream the stdlib HTMLParser twin produces over the
-    whole tiny corpus + targeted edge cases (entities, CDATA script/style,
-    self-closing skip tags, comments, quoted '>' in attributes)."""
-    from ocr_gpu_services_spark.core.html_extract import (
-        _BlockHandler, _StdlibBlockParser, _blocks_fused)
-    from ocr_gpu_services_spark.core.html_tokenize import feed_events
-    from ocr_gpu_services_spark.fixtures.gen import gen_rows
-
-    def fast(raw):
-        h = _BlockHandler(); feed_events(raw, h); h._flush(h._cur.tag)
-        # the fused production path (tokenizer + handler inlined) must
-        # produce the exact same block stream as the handler composition
-        assert _blocks_fused(raw) == h.blocks
-        return h.blocks
-
-    def std(raw):
-        p = _StdlibBlockParser(); p.feed(raw); p.close()
-        p._flush(p._cur.tag)
-        return p.blocks
+    """The production block extractor (html_extract._blocks_fused) must
+    produce the exact block stream of the stdlib HTMLParser twin over every
+    html row of the tiny corpus + targeted edge cases (entities, CDATA
+    script/style, self-closing skip tags, comments, quoted '>' in
+    attributes)."""
+    from ocr_gpu_services_spark.core.html_extract import _blocks_fused
 
     edges = [
         "<html><body><iframe/><p>after iframe</p></body></html>",
@@ -288,12 +332,12 @@ def test_fast_tokenizer_matches_stdlib():
         "<style>q{content:'</style><p>kept</p>'}",
     ]
     for e in edges:
-        assert fast(e) == std(e), e
+        assert _blocks_fused(e) == _StdlibBlocks(e).blocks, e
     n = 0
     for r in gen_rows("tiny"):
-        if r["html"][:1] == b"<":
+        if sniff_content_type(r["html"], r["text"]) == "html":
             raw = r["html"].decode("utf-8", "replace")
-            assert fast(raw) == std(raw), r["url"]
+            assert _blocks_fused(raw) == _StdlibBlocks(raw).blocks, r["url"]
             n += 1
     assert n > 100
 

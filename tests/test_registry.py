@@ -20,6 +20,26 @@ def test_lazy_oracles_resolve_to_sql_strings():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 
 
+def test_generator_oracles_build_lazily():
+    """Importing the registry runs no fixture-generator oracle builder: the
+    image/OCR/pdf-scan/layout truths stay callables until resolve_oracles
+    (checked in a fresh interpreter; this module already resolved them)."""
+    import os
+    import subprocess
+    import sys
+
+    lazy = ["layout_classify", "qr_extract", "barcode_extract",
+            "signature_spans", "ocr_line_spans", "ocr_word_spans",
+            "pdf_scan_ocr"]
+    code = ("from ocr_gpu_services_spark.plans.queries import ORACLE; "
+            "print(' '.join(k for k in %r if not callable(ORACLE[k])))"
+            % lazy)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.split() == [], "built at import: " + out.stdout
+
+
 def test_spark_entry_contract_shape():
     import __spark_entry__ as e
     qs = e.queries()

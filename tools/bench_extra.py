@@ -1,13 +1,11 @@
-"""Per-query isolation bench + plan capture (guide §1.4 / §7.2).
+"""Per-query isolation bench (guide §1.4 / §7.2).
 
 bench.py is FROZEN for measurement; this auxiliary tool times individual
 registry queries with the same methodology (noop sink, fresh plan per
-pass, best-of-N) at any scale factor, and dumps .explain("formatted")
-for plan-shape evidence.
+pass, best-of-N) at any scale factor.  Plan dumps: tools/dump_plans.py.
 
 Usage:
   python tools/bench_extra.py --sf /root/testdata/sf1.0 --n 3 name [name ..]
-  python tools/bench_extra.py --plan plans/r06 --tag before name [name ...]
 """
 
 from __future__ import annotations
@@ -31,9 +29,6 @@ def main():
     ap.add_argument("--n", type=int, default=2)
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--plan", default=None,
-                    help="directory to write <name>_<tag>.txt explain dumps")
-    ap.add_argument("--tag", default="before")
     args = ap.parse_args()
     names = args.names or list(QUERIES)
     spark = get_spark(app="bench-extra", cores=args.cores,
@@ -41,17 +36,6 @@ def main():
     out = {}
     for name in names:
         fn = QUERIES[name]
-        if args.plan:
-            os.makedirs(args.plan, exist_ok=True)
-            df = fn(spark, args.sf)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted"))
-            with open(os.path.join(args.plan,
-                                   f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(plan)
-            print(f"wrote {args.plan}/{name}_{args.tag}.txt")
-            continue
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         best, samples = None, []
         for _ in range(args.n):
@@ -63,8 +47,7 @@ def main():
             best = dt if best is None or dt < best else best
         out[name] = {"best": round(best, 3), "samples": samples}
         print(f"{name}: best={best:.3f}s samples={samples}", flush=True)
-    if out:
-        print(json.dumps({"sf": args.sf, "cores": args.cores, "times": out}))
+    print(json.dumps({"sf": args.sf, "cores": args.cores, "times": out}))
     spark.stop()
 
 

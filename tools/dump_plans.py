@@ -1,7 +1,10 @@
-"""Dump the formatted physical plans of the headline registry queries to
-PLANS-APPENDIX.md — machine-generated evidence for the plan claims in
-PLANS.md (scan pruning, pushdown, exchange placement, Python-crossing
-count).  Regenerate after operator changes: python tools/dump_plans.py
+"""Dump physical-plan skeletons of registry queries — machine-generated
+evidence for the plan claims in PLANS.md (scan pruning, pushdown,
+exchange placement, Python-crossing count).
+
+Usage:
+  python tools/dump_plans.py              # regenerate PLANS-APPENDIX.md
+  python tools/dump_plans.py name [...]   # print those queries' plans
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ def skeleton(plan: str, max_lines: int = 40) -> str:
     return "\n".join(out)
 
 
-def main():
+def main(names: list[str]):
     spark = get_spark(app="dump-plans", cores=8, shuffle_partitions=16)
     lines = [
         "# PLANS-APPENDIX.md — generated physical-plan skeletons",
@@ -52,7 +55,7 @@ def main():
         "Operator rows only; projections/scans truncated to 110 chars.",
         "",
     ]
-    for name in HEADLINE:
+    for name in names or HEADLINE:
         df = QUERIES[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
@@ -61,11 +64,15 @@ def main():
         lines.append("```")
         lines.append(skeleton(plan))
         lines.append("```\n")
-    with open("PLANS-APPENDIX.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote PLANS-APPENDIX.md ({len(HEADLINE)} queries)")
+    text = "\n".join(lines) + "\n"
+    if names:
+        sys.stdout.write(text)
+    else:
+        with open("PLANS-APPENDIX.md", "w") as f:
+            f.write(text)
+        print(f"wrote PLANS-APPENDIX.md ({len(HEADLINE)} queries)")
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
