@@ -20,7 +20,7 @@ import struct
 
 import numpy as np
 
-MAGIC_BMP = b"BM"
+from .sniff import MAGIC_BMP, MAX_PIXELS
 
 _FILE_HDR = struct.Struct("<2sIHHI")    # magic, filesize, res, res, off
 _INFO_HDR = struct.Struct("<IiiHHIIiiII")  # size w h planes bpp comp ...
@@ -76,7 +76,7 @@ def bmp_decode(payload: bytes) -> np.ndarray:
         raise ValueError(f"BMP: unsupported compression {comp}")
     top_down = h < 0
     h = abs(h)
-    if w <= 0 or h == 0 or w * h > 1 << 28:   # crafted-header guard
+    if w <= 0 or h == 0 or w * h > MAX_PIXELS:
         raise ValueError("BMP: bad dimensions")
     if bpp == 8:
         n_colors = n_colors or 256

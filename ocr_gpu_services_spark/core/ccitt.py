@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .sniff import MAX_PIXELS
+
 # ---------------------------------------------------------------------------
 # T.4 modified-Huffman run-length tables (published constants)
 # ---------------------------------------------------------------------------
@@ -216,7 +218,7 @@ def g4_decode(data: bytes, w: int, h: int) -> np.ndarray:
     # ~1 bit each, so a ~13 KB stream with declared 100k x 100k
     # dimensions would otherwise allocate a 10 GB page and OOM the
     # executor instead of degrading to the error column
-    if w <= 0 or h <= 0 or w * h > (1 << 28):
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise ValueError(f"G4: implausible dimensions {w}x{h}")
     nbits = len(data) * 8
 

@@ -15,6 +15,8 @@ classification_service.py:53-58).
 
 from __future__ import annotations
 
+from importlib import import_module
+
 from . import glyph_ocr
 from .classify import classify_text
 from .html_extract import extract_html
@@ -22,7 +24,7 @@ from .image_page import process_image_page
 from .normalize import canonical_text, collapse_ws
 from .pdf_extract import extract_pdf
 from .png import png_decode
-from .sniff import (CT_HTML, CT_IMAGE, CT_PDF, CT_TEXT,
+from .sniff import (CT_HTML, CT_IMAGE, CT_PDF, CT_TEXT, signature_family,
                     sniff_content_type)
 from .spans import Span
 
@@ -39,46 +41,49 @@ def get_atlas():
     return _ATLAS
 
 
+def _decode_jpeg(payload: bytes):
+    from .jpeg import apply_exif_orientation, exif_orientation, jpeg_decode
+    # honor the EXIF orientation flag (phones/cameras store the
+    # sensor frame) — exact pixel permutation, cv2.imread parity;
+    # the orientation vote could never recover the mirrored values
+    return apply_exif_orientation(jpeg_decode(payload),
+                                  exif_orientation(payload))
+
+
+def _codec(module: str, name: str):
+    """``module.name``, imported on first use."""
+    return lambda payload: getattr(
+        import_module(f".{module}", __package__), name)(payload)
+
+
+def _reject_bmff(payload: bytes):
+    # sniffed as image so the row degrades cleanly (AV1/HEVC
+    # intra decode is out of codec scope)
+    raise ValueError("unsupported ISO-BMFF still image "
+                     f"({payload[8:12].decode('ascii', 'replace')})")
+
+
+def _reject_jxl(payload: bytes):
+    raise ValueError("unsupported JPEG XL image")
+
+
+# signature family -> decoder; anything else goes to png_decode, which
+# rejects what is not a PNG
+_DECODERS = {"jpeg": _decode_jpeg, "tiff": _codec("tiff", "tiff_decode"),
+             "bmp": _codec("bmp", "bmp_decode"),
+             "gif": _codec("gif", "gif_decode"),
+             "webp": _codec("webp", "webp_decode"),
+             "bmff": _reject_bmff, "jxl": _reject_jxl}
+
+
 def decode_image(payload: bytes):
-    """Format dispatch at the decode seam (PNG / JPEG / TIFF / BMP /
-    GIF, gray or color — the reference accepts any cv2-decodable upload and
-    grays it immediately, optional_services.py:61); color payloads
-    convert to luma here (core/color.py, cv2-exact weights) so
-    everything past the pixel array is the unchanged grayscale kernel.
-    Shared by the extraction kernel and the multimodal table
-    operators."""
-    if payload[:3] == b"\xff\xd8\xff":
-        from .jpeg import (apply_exif_orientation, exif_orientation,
-                           jpeg_decode)
-        img = jpeg_decode(payload)
-        # honor the EXIF orientation flag (phones/cameras store the
-        # sensor frame) — exact pixel permutation, cv2.imread parity;
-        # the orientation vote could never recover the mirrored values
-        o = exif_orientation(payload)
-        if o != 1:
-            img = apply_exif_orientation(img, o)
-    elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import tiff_decode
-        img = tiff_decode(payload)
-    elif payload[:2] == b"BM":
-        from .bmp import bmp_decode
-        img = bmp_decode(payload)
-    elif payload[:4] == b"GIF8":
-        from .gif import gif_decode
-        img = gif_decode(payload)
-    elif payload[:4] == b"RIFF":
-        from .webp import webp_decode
-        img = webp_decode(payload)
-    elif len(payload) >= 12 and payload[4:8] == b"ftyp":
-        # sniffed as image so the row degrades cleanly (AV1/HEVC
-        # intra decode is out of codec scope)
-        raise ValueError(
-            f"unsupported ISO-BMFF still image "
-            f"({payload[8:12].decode('ascii', 'replace')})")
-    elif payload[:2] == b"\xff\x0a" or payload[4:8] == b"JXL ":
-        raise ValueError("unsupported JPEG XL image")
-    else:
-        img = png_decode(payload)
+    """Decode seam: dispatch on the payload's signature family (gray or
+    color — the reference accepts any cv2-decodable upload and grays it
+    immediately, optional_services.py:61); color payloads convert to
+    luma here (core/color.py, cv2-exact weights) so everything past the
+    pixel array is the unchanged grayscale kernel.  Shared by the
+    extraction kernel and the multimodal table operators."""
+    img = _DECODERS.get(signature_family(payload), png_decode)(payload)
     if img.ndim == 3:
         from .color import rgb_to_gray
         img = rgb_to_gray(img)
@@ -102,9 +107,9 @@ def extract_text_branch(text: str | None) -> tuple[str, list[Span]]:
     return out, spans
 
 
-def extract_document(payload: bytes | None, text: str | None):
-    """Returns (content_type, extracted_text, spans, doc_type, doc_type_conf,
-    error)."""
+def extract_route(payload: bytes | None, text: str | None):
+    """Returns (content_type, extracted_text, spans, error): everything
+    but doc-type classification, which the Spark plan runs JVM-side."""
     ct = sniff_content_type(payload, text)
     error = None
     try:
@@ -126,5 +131,12 @@ def extract_document(payload: bytes | None, text: str | None):
     except Exception as exc:  # degrade, never throw per-row
         out_text, spans = "", []
         error = f"{type(exc).__name__}: {exc}"
+    return ct, out_text, spans, error
+
+
+def extract_document(payload: bytes | None, text: str | None):
+    """Returns (content_type, extracted_text, spans, doc_type, doc_type_conf,
+    error): ``extract_route`` plus the Python doc-type classifier."""
+    ct, out_text, spans, error = extract_route(payload, text)
     doc_type, conf = classify_text(out_text) if out_text else ("unknown", 0.0)
     return ct, out_text, spans, doc_type, conf, error

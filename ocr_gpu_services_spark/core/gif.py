@@ -28,8 +28,7 @@ import struct
 
 import numpy as np
 
-MAGIC_GIF87 = b"GIF87a"
-MAGIC_GIF89 = b"GIF89a"
+from .sniff import MAGIC_GIF87, MAGIC_GIF89, MAX_PIXELS
 
 _MAX_CODE = 1 << 12                      # GIF caps LZW codes at 12 bits
 
@@ -262,7 +261,7 @@ def gif_decode(payload: bytes) -> np.ndarray:
         _left, _top, w, h, ipack = struct.unpack_from("<HHHHB",
                                                       payload, pos)
         pos += 9
-        if w <= 0 or h <= 0 or w * h > 1 << 28:   # crafted-header guard
+        if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
             raise ValueError("GIF: bad dimensions")
         pal = gct
         if ipack & 0x80:

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .sniff import MAGIC_TIFF_BE, MAGIC_TIFF_LE, MAX_PIXELS
+
 # ---------------------------------------------------------------------------
 # DCT
 # ---------------------------------------------------------------------------
@@ -242,7 +244,7 @@ def _dri_segment(restart_interval: int) -> bytes:
 def _exif_app1(orientation: int) -> bytes:
     """Minimal APP1 Exif segment carrying just the orientation tag."""
     import struct
-    tiff = (b"II*\x00" + struct.pack("<I", 8)            # IFD0 at 8
+    tiff = (MAGIC_TIFF_LE + struct.pack("<I", 8)         # IFD0 at 8
             + struct.pack("<H", 1)                       # one tag
             + struct.pack("<HHIHH", 0x0112, 3, 1, orientation, 0)
             + struct.pack("<I", 0))                      # no next IFD
@@ -266,9 +268,9 @@ def exif_orientation(data: bytes) -> int:
         if marker == 0xE1 and data[i + 4:i + 10] == b"Exif\x00\x00":
             t = data[i + 10:i + 2 + seg_len]
             try:
-                if t[:4] == b"II*\x00":
+                if t[:4] == MAGIC_TIFF_LE:
                     e = "<"
-                elif t[:4] == b"MM\x00*":
+                elif t[:4] == MAGIC_TIFF_BE:
                     e = ">"
                 else:
                     return 1
@@ -682,8 +684,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         i += 2 + seg_len
     if h is None or scan is None or not comps:
         raise ValueError("truncated JPEG")
-    # crafted-header guard, same 1<<28 cap as the other raster decoders
-    if h <= 0 or w <= 0 or h * w > (1 << 28):
+    # crafted-header guard, same cap as the other raster decoders
+    if h <= 0 or w <= 0 or h * w > MAX_PIXELS:
         raise ValueError(f"implausible JPEG dimensions {w}x{h}")
     if any(cid not in scan_tabs for cid, _h, _v, _t in comps):
         # a 3-component frame whose SOS covers fewer components is a

@@ -34,6 +34,7 @@ import numpy as np
 from .jpeg import (_DC_CODES, _DCT, _ZIGZAG, _BitWriter, _build_codes,
                    _build_peek_lut, _magnitude, _pad_plane, _rgb_to_ycc,
                    _sync_restart_pos, _unstuffed_u32)
+from .sniff import MAX_PIXELS
 
 # The sequential Annex-K AC tables carry no EOBn symbols (r<<4 for
 # 0<r<15 — progressive-only codes), so the encoder emits its own
@@ -195,11 +196,11 @@ def decode_progressive(data: bytes) -> np.ndarray:
         i += 2 + seg_len
     if h is None or not comps or not scans:
         raise ValueError("truncated progressive JPEG")
-    # crafted-header guard (same 1<<28 cap as the other raster
-    # decoders): a few-hundred-byte stream declaring 65535x65535 would
-    # otherwise allocate ~17 GB of coefficient planes per component
-    # before any entropy data is validated
-    if h <= 0 or w <= 0 or h * w > (1 << 28):
+    # crafted-header guard (same cap as the other raster decoders): a
+    # few-hundred-byte stream declaring 65535x65535 would otherwise
+    # allocate ~17 GB of coefficient planes per component before any
+    # entropy data is validated
+    if h <= 0 or w <= 0 or h * w > MAX_PIXELS:
         raise ValueError(f"implausible progressive JPEG {w}x{h}")
     for _cid, _hs, _vs, tq in comps:
         if tq not in qt:

@@ -19,7 +19,7 @@ import zlib
 
 import numpy as np
 
-_SIG = b"\x89PNG\r\n\x1a\n"
+from .sniff import MAGIC_PNG, MAX_PIXELS
 
 # bytes per pixel by color type (8-bit depth)
 _BPP = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -59,7 +59,7 @@ def _encode_raw(arr2d: np.ndarray, ctype: int, w: int, h: int,
         raw = _interlace_raw(arr2d.reshape(h, w, bpp), h, w, bpp)
     else:
         raw = b"".join(b"\x00" + arr2d[r].tobytes() for r in range(h))
-    return (_SIG + _chunk(b"IHDR", ihdr) + extra
+    return (MAGIC_PNG + _chunk(b"IHDR", ihdr) + extra
             + _chunk(b"IDAT", zlib.compress(raw, 6))
             + _chunk(b"IEND", b""))
 
@@ -76,7 +76,7 @@ def png_encode_bilevel(gray: np.ndarray) -> bytes:
     packed = np.packbits(gray > 127, axis=1)     # 1 = white per PNG gray
     ihdr = struct.pack(">IIBBBBB", w, h, 1, 0, 0, 0, 0)
     raw = b"".join(b"\x00" + packed[r].tobytes() for r in range(h))
-    return (_SIG + _chunk(b"IHDR", ihdr)
+    return (MAGIC_PNG + _chunk(b"IHDR", ihdr)
             + _chunk(b"IDAT", zlib.compress(raw, 6))
             + _chunk(b"IEND", b""))
 
@@ -207,7 +207,7 @@ def png_decode(data: bytes) -> np.ndarray:
     """Decode an 8-bit PNG.  Returns (H, W) uint8 for grayscale inputs
     (color types 0 and 4, alpha dropped) or (H, W, 3) uint8 RGB for
     color inputs (types 2, 3, 6 — palette expanded, alpha dropped)."""
-    if data[:8] != _SIG:
+    if data[:8] != MAGIC_PNG:
         raise ValueError("not a PNG")
     pos = 8
     width = height = ctype = None
@@ -236,6 +236,8 @@ def png_decode(data: bytes) -> np.ndarray:
         pos += 12 + length
     if width is None:
         raise ValueError("missing IHDR")
+    if width * height > MAX_PIXELS:   # crafted-header guard
+        raise ValueError("PNG: bad dimensions")
     raw = zlib.decompress(bytes(idat))
     if depth == 1:
         # bilevel: filters act on the packed row bytes (bpp quantum 1);

@@ -1,19 +1,21 @@
-"""Content-type sniffing by magic bytes (pure-Python twin of the Spark expr).
+"""Format signatures: the one table every magic-byte decision reads.
 
 The reference dispatches on the uploaded *filename extension* with a
 jpg/jpeg/png/pdf whitelist (/root/reference/src/api/v1/routers/ocr.py:51-57);
 our batch engine has no filenames, so we sniff the payload bytes, which is
-strictly more robust.  The Spark side implements the identical decision as a
-built-in column expression (ocr_gpu_services_spark/operators/sniff.py); this
-module is the oracle/kernel twin and the single source of truth for the
-constants.
+strictly more robust.  ``SIGNATURES`` states each format's magic bytes
+once; ``sniff_content_type`` (the kernel and oracle route), its Spark
+twin ``operators/sniff.content_type_col`` (generated from the table),
+``core/extract.decode_image`` and ``probe_image_format`` dispatch on its
+families.  Codecs import their magic constants and ``MAX_PIXELS`` from
+here; this module imports no codec.
 """
 
 from __future__ import annotations
 
-MAGIC_PDF = b"%PDF-"
+import struct
+
 MAGIC_PNG = b"\x89PNG\r\n\x1a\n"
-MAGIC_JPG = b"\xff\xd8\xff"
 MAGIC_TIFF_LE = b"II*\x00"
 MAGIC_TIFF_BE = b"MM\x00*"
 MAGIC_BMP = b"BM"
@@ -28,6 +30,46 @@ CT_IMAGE = "image"
 CT_TEXT = "text"
 CT_UNKNOWN = "unknown"
 
+MAX_PIXELS = 1 << 28      # every raster decoder's crafted-header guard
+
+# (family, clauses, content type).  A payload is in the family when, for
+# every clause (offset, alternatives), the bytes at ``offset`` start with
+# one of the alternatives.  Row order is the decode priority for payloads
+# matching two rows; pdf shares no payload with an image row, so the
+# content type never depends on it.
+SIGNATURES = (
+    ("pdf", ((0, (b"%PDF-",)),), CT_PDF),
+    ("png", ((0, (MAGIC_PNG,)),), CT_IMAGE),
+    ("jpeg", ((0, (b"\xff\xd8\xff",)),), CT_IMAGE),
+    ("tiff", ((0, (MAGIC_TIFF_LE, MAGIC_TIFF_BE)),), CT_IMAGE),
+    # "BM" alone is two ASCII letters any text can start with; require
+    # the BITMAPINFOHEADER size field (offset 14, little-endian) too
+    ("bmp", ((0, (MAGIC_BMP,)), (14, (b"\x28\x00\x00\x00",))), CT_IMAGE),
+    ("gif", ((0, (MAGIC_GIF87, MAGIC_GIF89)),), CT_IMAGE),
+    ("webp", ((0, (MAGIC_RIFF,)), (8, (MAGIC_WEBP,))), CT_IMAGE),
+    # ISO-BMFF stills (AVIF/HEIC) and JPEG XL (bare or boxed): image, so
+    # decode_image degrades the row to a clear unsupported-codec error
+    # instead of running binary bytes through the HTML extractor
+    ("bmff", ((4, (b"ftyp",)),
+              (8, (b"avif", b"avis", b"heic", b"heix", b"heif", b"mif1",
+                   b"msf1"))), CT_IMAGE),
+    ("jxl", ((0, (b"\xff\x0a", b"\x00\x00\x00\x0cJXL \r\n\x87\n")),),
+     CT_IMAGE),
+)
+
+_CONTENT_TYPE = {family: ct for family, _clauses, ct in SIGNATURES}
+
+
+def signature_family(payload: bytes) -> str | None:
+    """The first ``SIGNATURES`` family whose clauses all hold, else None."""
+    for family, clauses, _ct in SIGNATURES:
+        for off, alts in clauses:
+            if not payload.startswith(alts, off):
+                break
+        else:
+            return family
+    return None
+
 
 def sniff_content_type(payload: bytes | None, text: str | None) -> str:
     """Classify a raw payload.  Mirrors the whitelist semantics of the
@@ -35,46 +77,17 @@ def sniff_content_type(payload: bytes | None, text: str | None) -> str:
     html; empty payload falls back to the pre-extracted ``text`` column)."""
     if payload is None or len(payload) == 0:
         return CT_TEXT if text is not None else CT_UNKNOWN
-    if payload[:5] == MAGIC_PDF:
-        return CT_PDF
-    if payload[:8] == MAGIC_PNG or payload[:3] == MAGIC_JPG:
-        return CT_IMAGE
-    if payload[:4] == MAGIC_TIFF_LE or payload[:4] == MAGIC_TIFF_BE:
-        return CT_IMAGE
-    if payload[:6] == MAGIC_GIF87 or payload[:6] == MAGIC_GIF89:
-        return CT_IMAGE
-    if payload[:4] == MAGIC_RIFF and payload[8:12] == MAGIC_WEBP:
-        return CT_IMAGE
-    # ISO-BMFF stills (AVIF/HEIC) and JPEG XL: classify as image so
-    # the row lands in the ``error`` column (decode seam raises a
-    # clear unsupported-codec error) instead of running binary bytes
-    # through the HTML extractor
-    if len(payload) >= 12 and payload[4:8] == b"ftyp" \
-            and payload[8:12] in (b"avif", b"avis", b"heic", b"heix",
-                                  b"heif", b"mif1", b"msf1"):
-        return CT_IMAGE
-    if payload[:2] == b"\xff\x0a" \
-            or payload[:12] == b"\x00\x00\x00\x0cJXL \r\n\x87\n":
-        return CT_IMAGE
-    # "BM" alone is two ASCII letters any text can start with; require
-    # the BITMAPINFOHEADER size field (offset 14, little-endian) too
-    if payload[:2] == MAGIC_BMP and len(payload) >= 18 \
-            and payload[14:18] == b"\x28\x00\x00\x00":
-        return CT_IMAGE
-    return CT_HTML
+    return _CONTENT_TYPE.get(signature_family(payload), CT_HTML)
 
 
 _PNG_FORMATS = {0: "png-gray", 2: "png-rgb", 3: "png-palette",
                 4: "png-graya", 6: "png-rgba"}
 _JPEG_SAMP = {0x11: "jpeg-444", 0x22: "jpeg-420", 0x21: "jpeg-422"}
-
-
 _TIFF_COMP = {1: "", 4: "-g4", 5: "-lzw", 32773: "-packbits"}
 
 
 def _probe_tiff(payload: bytes) -> str | None:
     """tiff-{gray|rgb}[-lzw|-packbits] from the first IFD's tags."""
-    import struct
     e = "<" if payload[:4] == MAGIC_TIFF_LE else ">"
     try:
         ifd = struct.unpack_from(e + "I", payload, 4)[0]
@@ -104,7 +117,6 @@ def _probe_tiff(payload: bytes) -> str | None:
 def _probe_gif(payload: bytes) -> str | None:
     """gif-{gray|rgb}[-i] from the header, active color table and the
     first image descriptor's interlace bit."""
-    import struct
     try:
         packed = payload[10]
         pos = 13
@@ -139,7 +151,6 @@ def _probe_webp(payload: bytes) -> str | None:
     the first image chunk's fourcc (pixel layout is inside the
     entropy-coded stream, so gray vs color is not header-probeable the
     way GIF palettes are)."""
-    import struct
     pos = 12
     anim = False
     while pos + 8 <= len(payload):
@@ -162,13 +173,14 @@ def probe_image_format(payload: bytes) -> str | None:
     S3 breadth gate): PNG color type from IHDR, JPEG component count +
     luma sampling factors from SOF0, BMP bit depth, TIFF samples +
     compression from the first IFD.  None if unprobeable."""
-    if payload[:4] in (MAGIC_TIFF_LE, MAGIC_TIFF_BE):
+    family = signature_family(payload)
+    if family == "tiff":
         return _probe_tiff(payload)
-    if payload[:6] in (MAGIC_GIF87, MAGIC_GIF89):
+    if family == "gif":
         return _probe_gif(payload)
-    if payload[:4] == MAGIC_RIFF and payload[8:12] == MAGIC_WEBP:
+    if family == "webp":
         return _probe_webp(payload)
-    if payload[:2] == MAGIC_BMP and len(payload) >= 30:
+    if family == "bmp" and len(payload) >= 30:
         bpp = int.from_bytes(payload[28:30], "little")
         if bpp == 24:
             return "bmp-rgb24"
@@ -180,13 +192,13 @@ def probe_image_format(payload: bytes) -> str | None:
                 return "bmp-gray8"
             return "bmp-pal8"
         return None
-    if payload[:8] == MAGIC_PNG:
+    if family == "png":
         if len(payload) < 26:
             return None
         if payload[24] == 1:                     # IHDR bit depth 1
             return "png-bilevel" if payload[25] == 0 else None
         return _PNG_FORMATS.get(payload[25])     # IHDR byte 9 = color type
-    if payload[:3] == MAGIC_JPG:
+    if family == "jpeg":
         i = 2
         while i + 4 <= len(payload):
             if payload[i] != 0xFF:

@@ -35,8 +35,7 @@ import struct
 
 import numpy as np
 
-MAGIC_TIFF_LE = b"II*\x00"
-MAGIC_TIFF_BE = b"MM\x00*"
+from .sniff import MAGIC_TIFF_BE, MAGIC_TIFF_LE, MAX_PIXELS
 
 _CLEAR, _EOI, _FIRST = 256, 257, 258
 
@@ -424,7 +423,7 @@ def tiff_decode(payload: bytes) -> np.ndarray:
     # (a tiny G4 stream can fill all-white rows at ~1 bit each, so the
     # raw-length checks alone don't bound memory) — 256 MPix is far
     # beyond any real scan; the row degrades via the error column
-    if w <= 0 or h <= 0 or w * h > 1 << 28:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise ValueError("TIFF: bad dimensions")
     spp = one(_T_SPP, 1)
     bits = tags.get(_T_BITS, [8])

@@ -30,6 +30,7 @@ import struct
 import numpy as np
 
 from .color import rgb_to_gray
+from .sniff import MAGIC_RIFF, MAGIC_WEBP
 from .vp8 import B_DC, _CAT_BASE, _idct4x4_add, _pred_b
 from .vp8_tables import (COEFF_PROBA0, COEFF_UPDATE_PROBA, K_AC_TABLE,
                          K_BANDS, K_BMODES_PROBA, K_CAT, K_DC_TABLE,
@@ -316,5 +317,5 @@ def vp8_encode_gray(img: np.ndarray) -> bytes:
     chunk = b"VP8 " + struct.pack("<I", len(frame)) + frame
     if len(frame) & 1:
         chunk += b"\x00"
-    return (b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP"
+    return (MAGIC_RIFF + struct.pack("<I", 4 + len(chunk)) + MAGIC_WEBP
             + chunk)

@@ -44,10 +44,9 @@ import struct
 
 import numpy as np
 
-MAGIC_RIFF = b"RIFF"
-MAGIC_WEBP = b"WEBP"
+from .sniff import MAGIC_RIFF, MAGIC_WEBP, MAX_PIXELS
+
 _VP8L_SIG = 0x2F
-_MAX_PIXELS = 1 << 28                    # crafted-header guard
 
 # RFC 9649 §4.2.2: LZ77 distance codes 1..120 address a 2D neighborhood
 # (dx, dy) around the current pixel; codes >120 are linear distances.
@@ -665,7 +664,7 @@ def vp8l_decode(data: bytes) -> np.ndarray:
     br.bit()                                        # alpha hint
     if br.bits(3) != 0:
         raise ValueError("WebP: unknown VP8L version")
-    if w * h > _MAX_PIXELS:
+    if w * h > MAX_PIXELS:                          # crafted-header guard
         raise ValueError("WebP: bad dimensions")
 
     # transforms, in bitstream order; inverses apply in reverse

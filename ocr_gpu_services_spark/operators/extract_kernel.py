@@ -20,8 +20,8 @@ inner loop (/root/reference/src/infrastructure/services/ocr_service.py:13-43):
   mirroring the reference's catch-and-degrade services
   (optional_services.py:78-80)
 
-The kernel runs the exact same ``core.extract.extract_document`` the golden
-oracle runs — byte-identity across parallelism levels is structural.
+The kernel runs ``core.extract.extract_route``, which the golden oracle
+runs too — byte-identity across parallelism levels is structural.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..core.extract import extract_document, get_atlas
+from ..core.extract import extract_route, get_atlas
 
 MAX_BATCH_BYTES = 32 * 1024 * 1024
 
@@ -110,11 +110,9 @@ def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             s_text, s_conf = [], []
             s_x0, s_y0, s_x1, s_y1, s_kind = [], [], [], [], []
             for payload, pre_text in zip(payloads, pre_texts):
-                # doc-type classification is NOT done here: it is a pure
-                # relational expression (operator A1) applied JVM-side in
-                # the pipeline — the kernel only does what needs Python
-                ct, text, spans, _dt, _conf, error = extract_document(
-                    payload, pre_text)
+                # no doc-type classification here: the pipeline runs it
+                # JVM-side (operator A1, functions/classify.py)
+                ct, text, spans, error = extract_route(payload, pre_text)
                 cts.append(ct)
                 texts.append(text)
                 errs.append(error)

@@ -1,69 +1,41 @@
 """Content-type sniff as a built-in column expression (operator S2).
 
-Spark twin of ocr_gpu_services_spark/core/sniff.py — replaces the
-reference's filename-extension whitelist
-(/root/reference/src/api/v1/routers/ocr.py:51-57) with magic-byte dispatch
-that stays entirely JVM-side (whole-stage codegen), so format routing is
-free relative to the Python kernels.
+Spark twin of ``core/sniff.sniff_content_type``, generated from the same
+``SIGNATURES`` table: each byte clause becomes a
+``hex(substring(payload, offset + 1, len))`` comparison, each family one
+``when`` branch.  Routing thus stays entirely JVM-side (whole-stage
+codegen) with no magic bytes restated here.  The batch extraction job
+sniffs in the Python kernel instead; this expression serves plans that
+route before any Python runs (streaming ingest).
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..core.sniff import CT_HTML, CT_IMAGE, CT_PDF, CT_TEXT, CT_UNKNOWN
+from ..core.sniff import CT_HTML, CT_TEXT, CT_UNKNOWN, SIGNATURES
 
-_HEX_PDF = "255044462D"          # %PDF-
-_HEX_PNG = "89504E470D0A1A0A"    # \x89PNG\r\n\x1a\n
-_HEX_JPG = "FFD8FF"
-_HEX_TIFF_LE = "49492A00"        # II*\0
-_HEX_TIFF_BE = "4D4D002A"        # MM\0*
-_HEX_BMP = "424D"                # BM
-_HEX_DIB40 = "28000000"          # BITMAPINFOHEADER size at offset 14
-_HEX_GIF87 = "474946383761"      # GIF87a
-_HEX_GIF89 = "474946383961"      # GIF89a
-_HEX_RIFF = "52494646"           # RIFF
-_HEX_WEBP = "57454250"           # WEBP (container fourcc at offset 8)
-_HEX_FTYP = "66747970"           # "ftyp" box at offset 4
-_HEX_BMFF_BRANDS = ["61766966", "61766973", "68656963", "68656978",
-                    "68656966", "6D696631", "6D736631"]
-# avif avis heic heix heif mif1 msf1
-_HEX_JXL_RAW = "FF0A"            # bare JPEG XL codestream
-_HEX_JXL_BOX = "0000000C4A584C200D0A870A"
+
+def _clause_col(h: Column, off: int, alts: tuple[bytes, ...]) -> Column:
+    """The bytes at ``off`` start with one of ``alts`` (a payload too
+    short for the clause yields a shorter substring, so no match)."""
+    return reduce(operator.or_,
+                  (F.hex(F.substring(h, off + 1, len(m))) == m.hex().upper()
+                   for m in alts))
 
 
 def content_type_col(html: str = "html", text: str = "text") -> Column:
     h = F.col(html)
     empty = h.isNull() | (F.octet_length(h) == 0)
-    return (
-        F.when(empty & F.col(text).isNotNull(), F.lit(CT_TEXT))
-         .when(empty, F.lit(CT_UNKNOWN))
-         .when(F.hex(F.substring(h, 1, 5)) == _HEX_PDF, F.lit(CT_PDF))
-         .when(F.hex(F.substring(h, 1, 8)) == _HEX_PNG, F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 3)) == _HEX_JPG, F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 4)) == _HEX_TIFF_LE,
-               F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 4)) == _HEX_TIFF_BE,
-               F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 6)).isin(_HEX_GIF87, _HEX_GIF89),
-               F.lit(CT_IMAGE))
-         .when((F.hex(F.substring(h, 1, 4)) == _HEX_RIFF)
-               & (F.hex(F.substring(h, 9, 4)) == _HEX_WEBP),
-               F.lit(CT_IMAGE))
-         # ISO-BMFF stills (AVIF/HEIC) + JPEG XL: error-column rows
-         .when((F.hex(F.substring(h, 5, 4)) == _HEX_FTYP)
-               & F.hex(F.substring(h, 9, 4)).isin(*_HEX_BMFF_BRANDS)
-               & (F.octet_length(h) >= 12),
-               F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 2)) == _HEX_JXL_RAW,
-               F.lit(CT_IMAGE))
-         .when(F.hex(F.substring(h, 1, 12)) == _HEX_JXL_BOX,
-               F.lit(CT_IMAGE))
-         # "BM" alone is plain ASCII; require the DIB header size too
-         # (core/sniff.py keeps the identical rule)
-         .when((F.hex(F.substring(h, 1, 2)) == _HEX_BMP)
-               & (F.hex(F.substring(h, 15, 4)) == _HEX_DIB40),
-               F.lit(CT_IMAGE))
-         .otherwise(F.lit(CT_HTML))
-    )
+    col = (F.when(empty & F.col(text).isNotNull(), F.lit(CT_TEXT))
+            .when(empty, F.lit(CT_UNKNOWN)))
+    for _family, clauses, ct in SIGNATURES:
+        col = col.when(reduce(operator.and_,
+                              (_clause_col(h, off, alts)
+                               for off, alts in clauses)),
+                       F.lit(ct))
+    return col.otherwise(F.lit(CT_HTML))

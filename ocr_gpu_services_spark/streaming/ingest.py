@@ -55,9 +55,9 @@ def stream_crawl_stats(pages: DataFrame, watermark: str = "30 minutes",
     Late-data semantics: rows older than ``watermark`` behind the max
     observed warc_ts are dropped; a window is emitted exactly once, when
     the watermark passes its end (append mode) — the monitoring feed for
-    a continuous ingestion deployment.  Sniffing is the same expression
-    the batch pipeline uses (operators/sniff.py), so the stats agree with
-    what extraction will see."""
+    a continuous ingestion deployment.  Sniffing runs JVM-side
+    (operators/sniff.py), generated from the table the kernel's Python
+    sniff reads (core/sniff.py), so the stats match what extraction sees."""
     from ..operators.sniff import content_type_col
 
     return (pages

@@ -54,6 +54,23 @@ def test_sniff_modern_stills_reject_cleanly():
         == "html"
 
 
+def test_double_signature_payloads_keep_decode_priority():
+    """A crafted payload matching two format signatures goes to the
+    decoder first in the decode order (jpeg, tiff, bmp, gif, webp,
+    ISO-BMFF, JPEG XL, else png), whatever else it also matches."""
+    from ocr_gpu_services_spark.core.extract import decode_image
+    bmff = b"ftypavif"
+    for payload, tag in (
+            (b"BM\x00\x00" + bmff + b"\x00\x00\x28\x00\x00\x00", "BMP"),
+            (b"\xff\xd8\xff\xe0" + bmff, "JPEG"),
+            (b"II*\x00" + bmff, "TIFF"),
+            (b"\xff\x0a\x00\x00" + bmff, "ISO-BMFF")):
+        payload += b"\x00" * 40
+        assert sniff_content_type(payload, None) == "image"
+        with pytest.raises(ValueError, match=tag):
+            decode_image(payload)
+
+
 # --- normalize (P12) --------------------------------------------------------
 
 def test_normalize_nfc_and_ws():
@@ -158,6 +175,25 @@ def test_png_roundtrip():
     rng = np.random.RandomState(0)
     img = rng.randint(0, 256, size=(37, 53), dtype=np.uint8)
     assert np.array_equal(png_decode(png_encode(img)), img)
+
+
+def test_png_crafted_dimensions_capped(monkeypatch):
+    """An IHDR declaring more pixels than the shared cap is rejected
+    before the IDAT is inflated (a few hundred header bytes must not
+    drive a multi-GB allocation)."""
+    import struct
+    from ocr_gpu_services_spark.core import png
+
+    def no_inflate(_data):
+        raise AssertionError("IDAT inflated despite the pixel cap")
+
+    monkeypatch.setattr(png.zlib, "decompress", no_inflate)
+    ihdr = struct.pack(">IIBBBBB", 16385, 16384, 8, 0, 0, 0, 0)
+    payload = (b"\x89PNG\r\n\x1a\n" + png._chunk(b"IHDR", ihdr)
+               + png._chunk(b"IDAT", b"\x78\x9c\x03\x00\x00\x00\x00\x01")
+               + png._chunk(b"IEND", b""))
+    with pytest.raises(ValueError):
+        png_decode(payload)
 
 
 def test_glyph_ocr_roundtrip():

@@ -497,36 +497,59 @@ def test_sniff_twins_agree_on_every_magic(spark):
     """S2: the JVM column expression and the pure-Python sniffer are
     twins — one battery of crafted payloads covering every magic
     (incl. the AVIF/HEIC/JXL reject-to-error classes and the
-    lookalike traps) must classify identically through both."""
-    from ocr_gpu_services_spark.core.sniff import sniff_content_type
+    lookalike traps) must classify identically through both.  The
+    battery and its expected types are written by hand, not derived
+    from ``SIGNATURES``, so they check the table itself: it covers every
+    family, and every signature cut short by one byte sniffs html."""
+    from ocr_gpu_services_spark.core.sniff import (SIGNATURES,
+                                                   signature_family,
+                                                   sniff_content_type)
     from ocr_gpu_services_spark.operators.sniff import content_type_col
 
-    payloads = [
-        b"%PDF-1.7 stub",
-        b"\x89PNG\r\n\x1a\n" + b"\x00" * 8,
-        b"\xff\xd8\xff\xe0JFIF",
-        b"II*\x00" + b"\x00" * 8,
-        b"MM\x00*" + b"\x00" * 8,
-        b"GIF87a" + b"\x00" * 8,
-        b"GIF89a" + b"\x00" * 8,
-        b"BM" + b"\x00" * 12 + b"\x28\x00\x00\x00" + b"\x00" * 8,
-        b"BMoving text, not a bitmap",           # BM without DIB header
-        b"RIFF\x10\x00\x00\x00WEBPVP8L\x00\x00\x00\x00",
-        b"RIFF\x10\x00\x00\x00WAVEdata",         # RIFF, not WebP
-        b"\x00\x00\x00\x1cftypavif" + b"\x00" * 16,
-        b"\x00\x00\x00\x18ftypheix" + b"\x00" * 16,
-        b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 16,   # video, not still
-        b"\xff\x0a" + b"\x11" * 16,
-        b"\x00\x00\x00\x0cJXL \r\n\x87\n" + b"\x00" * 8,
-        b"<html><body>hi</body></html>",
-        b"",
-        None,
+    battery = [
+        (b"%PDF-1.7 stub", "pdf"),
+        (b"\x89PNG\r\n\x1a\n" + b"\x00" * 8, "image"),
+        (b"\xff\xd8\xff\xe0JFIF", "image"),
+        (b"II*\x00" + b"\x00" * 8, "image"),
+        (b"MM\x00*" + b"\x00" * 8, "image"),
+        (b"GIF87a" + b"\x00" * 8, "image"),
+        (b"GIF89a" + b"\x00" * 8, "image"),
+        (b"BM" + b"\x00" * 12 + b"\x28\x00\x00\x00" + b"\x00" * 8, "image"),
+        (b"BMoving text, not a bitmap", "html"),  # BM without DIB header
+        (b"RIFF\x10\x00\x00\x00WEBPVP8L\x00\x00\x00\x00", "image"),
+        (b"RIFF\x10\x00\x00\x00WAVEdata", "html"),  # RIFF, not WebP
+        (b"\x00\x00\x00\x1cftypavif" + b"\x00" * 16, "image"),
+        (b"\x00\x00\x00\x18ftypheix" + b"\x00" * 16, "image"),
+        (b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 16, "html"),  # video
+        (b"\xff\x0a" + b"\x11" * 16, "image"),
+        (b"\x00\x00\x00\x0cJXL \r\n\x87\n" + b"\x00" * 8, "image"),
+        (b"<html><body>hi</body></html>", "html"),
+        (b"", "text"),
+        (None, "text"),
     ]
+    assert {signature_family(p) for p, _ct in battery if p} \
+        >= {family for family, _clauses, _ct in SIGNATURES}
+    truncated = [
+        b"%PDF",
+        b"\x89PNG\r\n\x1a",
+        b"\xff\xd8",
+        b"II*",
+        b"MM\x00",
+        b"GIF87",
+        b"GIF89",
+        b"BM" + b"\x00" * 12 + b"\x28\x00\x00",
+        b"RIFF\x10\x00\x00\x00WEB",
+        b"\x00\x00\x00\x1cftypavi",
+        b"\xff",
+        b"\x00\x00\x00\x0cJXL \r\n\x87",
+    ]
+    battery += [(p, "html") for p in truncated]
     rows = [(k, p, "txt" if p in (b"", None) else None)
-            for k, p in enumerate(payloads)]
+            for k, (p, _ct) in enumerate(battery)]
     df = spark.createDataFrame(rows, "k int, html binary, text string") \
         .withColumn("ct", content_type_col())
     got = {r["k"]: r["ct"] for r in df.collect()}
-    for k, p in enumerate(payloads):
+    for k, (p, expect) in enumerate(battery):
         want = sniff_content_type(p, "txt" if p in (b"", None) else None)
-        assert got[k] == want, (k, p[:16] if p else p, got[k], want)
+        assert got[k] == want == expect, \
+            (k, p[:16] if p else p, got[k], want, expect)
