@@ -28,70 +28,16 @@ import struct
 
 import numpy as np
 
+from .decompress import lzw_decode
 from .sniff import MAGIC_GIF87, MAGIC_GIF89, MAX_PIXELS
 
 _MAX_CODE = 1 << 12                      # GIF caps LZW codes at 12 bits
 
 
 # ---------------------------------------------------------------------------
-# LZW (GIF variant: LSB-first bit packing, variable 3..12-bit codes)
+# LZW encoder (GIF variant: LSB-first bit packing, variable 3..12-bit
+# codes); the decoder is core/decompress.lzw_decode
 # ---------------------------------------------------------------------------
-
-def _lzw_decode(data: bytes, mcs: int, expected: int) -> bytes:
-    """Decode a GIF LZW stream (already de-sub-blocked) of ``expected``
-    pixels with minimum code size ``mcs``."""
-    if not 2 <= mcs <= 8:
-        raise ValueError(f"GIF: bad LZW min code size {mcs}")
-    clear = 1 << mcs
-    eoi = clear + 1
-    base = [bytes((c,)) for c in range(clear)] + [b"", b""]
-    table = list(base)
-    width = mcs + 1
-    out = bytearray()
-    buf = nbits = pos = 0
-    prev = -1
-    n = len(data)
-    while len(out) < expected:
-        while nbits < width:
-            if pos >= n:
-                raise ValueError("GIF: LZW stream truncated")
-            buf |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = buf & ((1 << width) - 1)
-        buf >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = mcs + 1
-            prev = -1
-            continue
-        if code == eoi:
-            break
-        if prev < 0:                       # first code after (re)start
-            if code >= clear:
-                raise ValueError("GIF: bad first LZW code")
-            out += table[code]
-            prev = code
-            continue
-        nxt = len(table)
-        if code < nxt:
-            entry = table[code]
-        elif code == nxt:                  # the KwKwK case
-            entry = table[prev] + table[prev][:1]
-        else:
-            raise ValueError("GIF: LZW code out of range")
-        out += entry
-        if nxt < _MAX_CODE:
-            table.append(table[prev] + entry[:1])
-            # width grows when the next code to assign would not fit;
-            # at a full table a deferred-clear encoder keeps the 12-bit
-            # width until it sends a clear code
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = code
-    return bytes(out[:expected])
-
 
 def _lzw_encode(indices: bytes, mcs: int) -> bytes:
     """Encode pixel indices as a GIF LZW stream (not yet sub-blocked)."""
@@ -290,10 +236,8 @@ def gif_decode(payload: bytes) -> np.ndarray:
             parts.append(payload[pos:pos + sz])
             pos += sz
         data = b"".join(parts)
-        idx = np.frombuffer(_lzw_decode(data, mcs, w * h),
-                            dtype=np.uint8)
-        if len(idx) != w * h:
-            raise ValueError("GIF: short pixel data")
+        idx = np.frombuffer(lzw_decode(data, w * h, min_code_size=mcs,
+                                       lsb_first=True), dtype=np.uint8)
         if idx.max(initial=0) >= len(pal):
             raise ValueError("GIF: palette index out of range")
         idx = idx.reshape(h, w)

@@ -7,7 +7,8 @@ for born-digital PDFs, so this engine parses the content streams directly and
 reserves OCR for raster payloads — same output contract (text + spans), far
 cheaper.  The subset implemented is the standard text-showing machinery:
 
-* object parsing (``N 0 obj … endobj``), Flate and raw streams
+* object parsing (``N 0 obj … endobj``), Flate, LZW and raw streams
+  (core/decompress.py; a stream past its budget fails the document)
 * OBJECT STREAMS (/Type /ObjStm, PDF 1.5 xref-stream files): compressed
   containers of bare objects are expanded into the object table, so
   files whose page tree lives inside an ObjStm (the modern default)
@@ -42,6 +43,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .decompress import (MAX_STREAM_BYTES, DecodeLimitError, inflate,
+                         lzw_decode)
 from .normalize import canonical_text, collapse_ws
 from .spans import Span
 
@@ -131,16 +134,18 @@ def _object_stream(body: bytes) -> bytes | None:
         raw = m.group(1)
     if b"/FlateDecode" in body[:sm.start()]:
         try:
-            raw = zlib.decompress(raw)
+            raw = inflate(raw, MAX_STREAM_BYTES + 1)
         except zlib.error:
             return None
+        if len(raw) > MAX_STREAM_BYTES:
+            raise DecodeLimitError(
+                f"Flate stream over {MAX_STREAM_BYTES} bytes")
     elif b"/LZWDecode" in body[:sm.start()]:
         # legacy writers (pre-Flate Acrobat era) LZW-compress content
-        # streams; PDF's default /EarlyChange 1 matches the TIFF-variant
-        # decoder bit-for-bit (core/tiff.py), open-length mode
-        from .tiff import lzw_decode
+        # streams; the default /EarlyChange 1 is the shared decoder's
+        # MSB-first variant, run open-length to the EOD code
         try:
-            raw = lzw_decode(raw, None)
+            raw = lzw_decode(raw)
         except ValueError:
             return None
     return raw

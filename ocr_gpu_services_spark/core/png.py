@@ -19,6 +19,7 @@ import zlib
 
 import numpy as np
 
+from .decompress import inflate
 from .sniff import MAGIC_PNG, MAX_PIXELS
 
 # bytes per pixel by color type (8-bit depth)
@@ -238,11 +239,13 @@ def png_decode(data: bytes) -> np.ndarray:
         raise ValueError("missing IHDR")
     if width * height > MAX_PIXELS:   # crafted-header guard
         raise ValueError("PNG: bad dimensions")
-    raw = zlib.decompress(bytes(idat))
+    rowbytes = (width + 7) // 8 if depth == 1 else width * _BPP[ctype]
+    # past the longest raw stream the IHDR allows (Adam7 filter bytes
+    # included): a longer stream decodes the same from its first bytes
+    raw = inflate(bytes(idat), height * (rowbytes + 2) + 8)
     if depth == 1:
         # bilevel: filters act on the packed row bytes (bpp quantum 1);
         # unpack MSB-first, 1 = white per the PNG grayscale convention
-        rowbytes = (width + 7) // 8
         flat = _unfilter(raw, height, rowbytes, 1)
         bits = np.unpackbits(flat, axis=1)[:, :width]
         return (bits * np.uint8(255)).astype(np.uint8)

@@ -22,11 +22,12 @@ compressions) raises ValueError; the extraction pipeline degrades such
 rows to the ``error`` column (core/extract.py convention).
 
 Encoder exists for the fixture generator (deterministic bytes); the
-decoder is the product path.  The LZW pair follows the libtiff-matched
-width discipline: the encoder grows the code width when the next free
-code exceeds (1<<width)-1, the decoder when it exceeds (1<<width)-2 —
-the one-entry table lag between the two sides is exactly what the
-spec's "early change" compensates.
+decoder is the product path.  LZW strips decode through the shared
+core/decompress.lzw_decode at their exact strip length.  The encoder
+follows the libtiff-matched width discipline: it grows the code width
+when the next free code exceeds (1<<width)-1, the decoder when it
+exceeds (1<<width)-2 — the one-entry table lag between the two sides
+is exactly what the spec's "early change" compensates.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import struct
 
 import numpy as np
 
+from .decompress import lzw_decode
 from .sniff import MAGIC_TIFF_BE, MAGIC_TIFF_LE, MAX_PIXELS
 
 _CLEAR, _EOI, _FIRST = 256, 257, 258
@@ -97,7 +99,8 @@ def packbits_decode(data: bytes, expected: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# TIFF-variant LZW (TIFF 6.0 section 13: MSB-first, early change)
+# LZW encoder (TIFF 6.0 section 13: MSB-first, early change); the decoder
+# is core/decompress.lzw_decode
 # ---------------------------------------------------------------------------
 
 class _BitPackerMSB:
@@ -146,65 +149,6 @@ def lzw_encode(data: bytes) -> bytes:
         bp.put(d[omega], width)
     bp.put(_EOI, width)
     return bp.flush()
-
-
-def lzw_decode(data: bytes, expected: int | None) -> bytes:
-    """TIFF-variant LZW (MSB-first, early change).  ``expected`` is the
-    exact output length for TIFF strips (enforced both ways); ``None``
-    decodes an open-length stream terminated by the EOD code — the PDF
-    /LZWDecode shape, whose default /EarlyChange 1 is bit-compatible
-    with TIFF's table-growth schedule (PDF 32000-1 §7.4.4.2).  A hard
-    64 MiB cap bounds adversarial expansion in the open-length mode."""
-    cap = (1 << 26) if expected is None else expected
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width, old = 9, -1
-    acc = nbits = pos = 0
-    n = len(data)
-
-    def get(w: int) -> int:
-        nonlocal acc, nbits, pos
-        while nbits < w:
-            if pos >= n:
-                raise ValueError("LZW: truncated stream")
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        nbits -= w
-        code = (acc >> nbits) & ((1 << w) - 1)
-        return code
-
-    while True:
-        code = get(width)
-        if code == _EOI:
-            break
-        if code == _CLEAR:
-            del table[_FIRST:]
-            width, old = 9, -1
-            continue
-        if old < 0:                            # first code after a clear
-            if code > 255:
-                raise ValueError("LZW: bad first code")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = table[old] + table[old][:1]
-        else:
-            raise ValueError("LZW: code out of range")
-        out.extend(entry)
-        if len(out) > cap:
-            raise ValueError("LZW: overlong output")
-        if old >= 0 and len(table) < 4096:
-            table.append(table[old] + entry[:1])
-            if len(table) > (1 << width) - 2 and width < 12:
-                width += 1
-        old = code
-        if expected is not None and len(out) == expected:
-            break
-    if expected is not None and len(out) != expected:
-        raise ValueError("LZW: wrong decoded length")
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

@@ -184,16 +184,114 @@ def test_png_crafted_dimensions_capped(monkeypatch):
     import struct
     from ocr_gpu_services_spark.core import png
 
-    def no_inflate(_data):
+    def no_inflate(_data, _limit):
         raise AssertionError("IDAT inflated despite the pixel cap")
 
-    monkeypatch.setattr(png.zlib, "decompress", no_inflate)
+    monkeypatch.setattr(png, "inflate", no_inflate)
     ihdr = struct.pack(">IIBBBBB", 16385, 16384, 8, 0, 0, 0, 0)
     payload = (b"\x89PNG\r\n\x1a\n" + png._chunk(b"IHDR", ihdr)
                + png._chunk(b"IDAT", b"\x78\x9c\x03\x00\x00\x00\x00\x01")
                + png._chunk(b"IEND", b""))
     with pytest.raises(ValueError):
         png_decode(payload)
+
+
+def _zeros_deflated(mib: int) -> bytes:
+    """A zlib stream of ``mib`` MiB of zero bytes, built without ever
+    holding the inflated bytes (about 1 KB per MiB)."""
+    import zlib
+    co = zlib.compressobj(9)
+    block = bytes(1 << 20)
+    return b"".join(co.compress(block) for _ in range(mib)) + co.flush()
+
+
+def _traced_peak(fn):
+    """(fn(), peak bytes traced by tracemalloc while it ran)."""
+    import tracemalloc
+    tracemalloc.start()
+    try:
+        out = fn()
+        return out, tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_png_inflate_bounded_by_ihdr():
+    """An IDAT that inflates far past what its IHDR allows (here 256 MiB
+    for a 16x16 gray image) decodes from its first bytes exactly as
+    before, without inflating the rest."""
+    import struct
+    from ocr_gpu_services_spark.core import png
+    ihdr = struct.pack(">IIBBBBB", 16, 16, 8, 0, 0, 0, 0)
+    payload = (b"\x89PNG\r\n\x1a\n" + png._chunk(b"IHDR", ihdr)
+               + png._chunk(b"IDAT", _zeros_deflated(256))
+               + png._chunk(b"IEND", b""))
+    img, peak = _traced_peak(lambda: png_decode(payload))
+    zeros = np.zeros((16, 16), dtype=np.uint8)
+    assert np.array_equal(img, png_decode(png_encode(zeros)))
+    assert peak < 32 << 20, peak
+
+
+def _one_stream_pdf(filt: bytes, stream: bytes) -> bytes:
+    """A one-page PDF whose content stream is ``stream`` under ``filt``."""
+    objs = [b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
+            b" /Contents 4 0 R >>",
+            b"<< /Length %d /Filter %s >>\nstream\n%s\nendstream"
+            % (len(stream), filt, stream)]
+    body = b"".join(b"%d 0 obj\n%s\nendobj\n" % (k + 1, o)
+                    for k, o in enumerate(objs))
+    return b"%PDF-1.4\n" + body + b"trailer\n<< /Root 1 0 R >>\n%%EOF\n"
+
+
+def test_pdf_flate_bomb_degrades_to_limit_error():
+    """A Flate content stream that inflates past the stream budget (here
+    512 MiB) becomes a DecodeLimitError row in bounded memory, not an
+    empty page and not a worker-sized allocation."""
+    from ocr_gpu_services_spark.core.extract import extract_route
+    payload = _one_stream_pdf(b"/FlateDecode", _zeros_deflated(512))
+    (ct, text, spans, error), peak = _traced_peak(
+        lambda: extract_route(payload, None))
+    assert ct == "pdf" and text == "" and spans == []
+    assert error is not None and error.startswith("DecodeLimitError:"), error
+    assert peak < 200 << 20, peak
+
+
+def _lzw_literals(data: bytes) -> bytes:
+    """``data`` as an MSB-first LZW stream of 9-bit literal codes, with
+    a clear code before every 200 literals so the code never widens."""
+    codes = []
+    for k in range(0, len(data), 200):
+        codes += [256, *data[k:k + 200]]
+    bits = "".join(format(c, "09b") for c in codes + [257])
+    bits += "0" * (-len(bits) % 8)
+    return int(bits, 2).to_bytes(len(bits) // 8, "big")
+
+
+def test_pdf_lzw_stream_decodes_in_linear_time():
+    """A ~225 KB /LZWDecode content stream extracts the same text as its
+    Flate twin within a few seconds of CPU (the decoder's bit window
+    stays bounded, so its cost is linear in the stream length)."""
+    import random
+    import time
+    import zlib
+    rng = random.Random(5)
+    words = ("invoice", "total", "paid", "amount", "due", "net", "tax",
+             "order", "ship", "item", "qty", "price")
+    lines = [" ".join(rng.choice(words) + str(rng.randrange(1000))
+                      for _ in range(8)) for _ in range(2900)]
+    ops = content_stream_ops(lines)
+    stream = _lzw_literals(ops)
+    assert 200_000 < len(stream) < 250_000
+    lzw = _one_stream_pdf(b"/LZWDecode", stream)
+    t0 = time.process_time()
+    text_lzw, _ = extract_pdf(lzw)
+    cpu = time.process_time() - t0
+    text_flate, _ = extract_pdf(
+        _one_stream_pdf(b"/FlateDecode", zlib.compress(ops)))
+    assert text_lzw == text_flate and text_lzw.startswith(lines[0])
+    assert cpu < 3.0, cpu
 
 
 def test_glyph_ocr_roundtrip():

@@ -333,8 +333,8 @@ def test_png_predicted_flate_xobject_extracts_identically():
 def test_lzw_content_stream_extracts_identically_to_flate_twin():
     """/LZWDecode text content streams (legacy-writer shape) must decode
     to the same text and spans as the FlateDecode twin of the same page
-    — the decoder is the TIFF-variant LZW in open-length mode
-    (core/tiff.py, PDF 32000-1 §7.4.4.2 default /EarlyChange 1)."""
+    — the decoder is core/decompress.lzw_decode's MSB-first variant in
+    open-length mode (PDF 32000-1 §7.4.4.2 default /EarlyChange 1)."""
     ops = content_stream_ops(["INVOICE TOTAL 42", "PAID IN FULL"])
     lz = build_pdf([ops], compress="lzw")
     fl = build_pdf([ops], compress=True)
@@ -348,13 +348,16 @@ def test_lzw_content_stream_extracts_identically_to_flate_twin():
 def test_lzw_open_length_roundtrip_and_damage():
     import random as _random
 
-    from ocr_gpu_services_spark.core.tiff import lzw_decode, lzw_encode
+    from ocr_gpu_services_spark.core.decompress import lzw_decode
+    from ocr_gpu_services_spark.core.tiff import lzw_encode
     rng = _random.Random(42)
     for n in (0, 1, 7, 300, 5000):
         data = bytes(rng.randrange(256) for _ in range(n))
         enc = lzw_encode(data)
         assert lzw_decode(enc, None) == data        # open-length (PDF)
         assert lzw_decode(enc, n) == data           # exact-length (TIFF)
+        if n:                                       # overshoot is dropped
+            assert lzw_decode(enc, n - 1) == data[:-1]
     # truncated / corrupted streams raise (extract_pdf degrades upstream)
     enc = lzw_encode(b"A" * 1000)
     try:

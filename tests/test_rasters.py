@@ -1,8 +1,8 @@
 """BMP + TIFF codecs (core/bmp.py, core/tiff.py): container round
 trips across compression/predictor/byte-order/strip layouts, the
-PackBits and TIFF-LZW primitives (incl. the early-change code widths
-and table resets), rejection of unsupported shapes, and the sniff /
-probe / decode-seam integration."""
+PackBits primitives and the shared LZW decoder (core/decompress.py,
+incl. the early-change code widths and table resets), rejection of
+unsupported shapes, and the sniff / probe / decode-seam integration."""
 
 import struct
 import time
@@ -13,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_gpu_services_spark.core import bmp, tiff
+from ocr_gpu_services_spark.core.decompress import lzw_decode
 from ocr_gpu_services_spark.core.extract import decode_image
 from ocr_gpu_services_spark.core.sniff import (probe_image_format,
                                                sniff_content_type)
@@ -96,7 +97,7 @@ def test_lzw_roundtrip_structured_and_random():
         else:
             pat = bytes(_rs.randint(0, 4, 97).astype(np.uint8))
             data = (pat * (n // 97 + 1))[:n]
-        assert tiff.lzw_decode(tiff.lzw_encode(data), n) == data
+        assert lzw_decode(tiff.lzw_encode(data), n) == data
 
 
 def test_lzw_width_growth_and_reset():
@@ -104,10 +105,12 @@ def test_lzw_width_growth_and_reset():
     # switch and past the 4094 reset
     data = bytes(range(256)) * 64
     enc = tiff.lzw_encode(data)
-    assert tiff.lzw_decode(enc, len(data)) == data
+    assert lzw_decode(enc, len(data)) == data
     assert len(enc) < len(data)          # repeated blocks do compress
     with pytest.raises(ValueError):
-        tiff.lzw_decode(enc[:-8], len(data))             # truncated
+        lzw_decode(enc[:-8], len(data))                  # truncated
+    with pytest.raises(ValueError):
+        lzw_decode(enc, len(data) + 1)                   # short output
 
 
 # ---------------------------------------------------------------------------
@@ -425,15 +428,17 @@ def test_gif_neutral_color_page_probes_rgb_decodes_gray():
 
 
 def test_gif_lzw_width_growth_and_table_reset():
-    from ocr_gpu_services_spark.core.gif import _lzw_decode, _lzw_encode
+    from ocr_gpu_services_spark.core.gif import _lzw_encode
     # noise forces code-width growth 9->12 and a full-table reset
     data = bytes(_rs.randint(0, 256, 150000,
                              dtype=np.int64).astype(np.uint8))
-    assert _lzw_decode(_lzw_encode(data, 8), 8, len(data)) == data
+    assert lzw_decode(_lzw_encode(data, 8), len(data), min_code_size=8,
+                      lsb_first=True) == data
     # tiny alphabet exercises the mcs floor and repeated growth cycles
     data = bytes(_rs.randint(0, 4, 120000,
                              dtype=np.int64).astype(np.uint8))
-    assert _lzw_decode(_lzw_encode(data, 2), 2, len(data)) == data
+    assert lzw_decode(_lzw_encode(data, 2), len(data), min_code_size=2,
+                      lsb_first=True) == data
 
 
 def test_gif_extension_blocks_skipped():
