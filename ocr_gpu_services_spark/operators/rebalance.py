@@ -6,17 +6,25 @@ task before the expensive kernel:
 
 * ``salt`` = xxhash64(url): breaks the systematic collocation of pdf-heavy
   hosts (consecutive urls from one host land in one input split otherwise)
-* byte-size split: rows above ``big_threshold`` go to their own hash
-  partitioning so a handful of mega-pages never ride along in — and
-  straggle — a partition full of small pages; the union of the two
-  branches is narrow (no extra shuffle)
+* byte-size split: rows whose html + text octets exceed ``BIG_THRESHOLD``
+  go to their own hash partitioning so a handful of mega-pages never ride
+  along in — and straggle — a partition full of small pages; the union of
+  the two branches is narrow (no extra shuffle)
 * AQE's skew-join splitting does NOT fire on map stages, so this manual
   salt is required (SURVEY.md §4.2); inside the kernel, byte-capped Arrow
   chunking bounds memory per batch
 
-At 1000 executors the same code holds: n_small tracks
-spark.sql.shuffle.partitions, and each mega-page is one task by row
-atomicity — the best any engine can do without splitting documents.
+The small branch is two waves per core (2 x defaultParallelism), not
+spark.sql.shuffle.partitions: every partition becomes one Python task of
+the kernel stage, and each such task pays a fixed cost before its first
+row (PySpark's per-task ``importlib.invalidate_caches()`` rescans every
+zip on the worker's path — ~0.2 s of worker CPU each on CPython 3.11,
+re-measure with tools/python_task_cost.py).  A 4-core run of the 420-row
+crawl mix measured 5.7-7.1 s at 32 partitions vs 2.7-3.1 s at 8; below
+two waves the heavy-tailed documents straggle.  At 1000 executors the
+same rule holds (defaultParallelism is executors x cores), and each
+mega-page is one task by row atomicity — the best any engine can do
+without splitting documents.
 """
 
 from __future__ import annotations
@@ -27,24 +35,14 @@ from pyspark.sql import functions as F
 BIG_THRESHOLD = 1 * 1024 * 1024  # 1 MiB payload -> 'big' branch
 
 
-def rebalance_by_size(df: DataFrame, n_small: int | None = None,
-                      n_big: int | None = None,
-                      big_threshold: int = BIG_THRESHOLD,
-                      payload_col: str = "html") -> DataFrame:
-    spark = df.sparkSession
-    if n_small is None:
-        n_small = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if n_big is None:
-        n_big = max(4, n_small // 4)
-    # text-route rows carry html=NULL with the payload in `text`; count
-    # both columns so mega text rows reach the big branch too.  Skip the
-    # secondary term when payload_col IS "text" (or the frame has no text
-    # column): the old unconditional form double-counted text payloads
-    # and raised AnalysisException on text-less frames.
-    size = F.coalesce(F.octet_length(F.col(payload_col)), F.lit(0))
-    if payload_col != "text" and "text" in df.columns:
-        size = size + F.coalesce(F.octet_length(F.col("text")), F.lit(0))
+def rebalance_by_size(df: DataFrame) -> DataFrame:
+    """Small rows, then mega rows, of a pages frame (url, html, text);
+    text-route rows carry html=NULL with the payload in text."""
+    n_small = 2 * df.sparkSession.sparkContext.defaultParallelism
+    size = (F.coalesce(F.octet_length("html"), F.lit(0))
+            + F.coalesce(F.octet_length("text"), F.lit(0)))
     salt = F.xxhash64(F.col("url"))
-    small = df.filter(size <= big_threshold).repartition(n_small, salt)
-    big = df.filter(size > big_threshold).repartition(n_big, salt)
+    small = df.filter(size <= BIG_THRESHOLD).repartition(n_small, salt)
+    big = df.filter(size > BIG_THRESHOLD).repartition(max(4, n_small // 4),
+                                                      salt)
     return small.unionByName(big)

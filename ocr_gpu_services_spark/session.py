@@ -4,7 +4,8 @@
 Local mode stands in for the cluster here; every knob is chosen for the
 1000-executor / 100 TB case and merely scaled down by core count:
 * AQE on (runtime coalesce/re-plan)
-* shuffle partitions >= 4x cores (same ratio at cluster scale)
+* shuffle partitions >= 4x cores for the JVM operators (same ratio at
+  cluster scale); the Python kernel stage sizes itself (rebalance.py)
 * Arrow batches capped by records — the kernel additionally re-chunks by
   BYTES so a mega-page cannot blow up a single Arrow batch
 * python worker reuse keeps per-partition models warm across tasks (the

@@ -70,6 +70,54 @@ def test_parallelism_invariance(spark, extracted_rows):
         assert r1["spans"] == r2["spans"]
 
 
+def test_kernel_stage_width_follows_cores_not_shuffle_partitions(spark):
+    """The small branch feeding the Python kernel is two waves per core:
+    each partition is one Python task with a fixed start-up cost, so the
+    JVM operators' spark.sql.shuffle.partitions must not widen it."""
+    import re
+
+    from ocr_gpu_services_spark.operators.rebalance import rebalance_by_size
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        df = rebalance_by_size(synthetic_pages(spark, "tiny"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    widths = [int(n) for n in re.findall(
+        r"Exchange hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)", plan)]
+    n_small = 2 * spark.sparkContext.defaultParallelism
+    assert n_small == 16                  # the session fixture's 8 cores
+    # tiny has no mega row, so the optimizer drops the empty big branch
+    assert widths == [n_small], plan
+
+
+def test_mega_rows_take_the_big_branch(spark):
+    """A >1 MiB html row and an html=NULL row whose text is over
+    BIG_THRESHOLD in UTF-8 bytes (not in characters) both land in the big
+    branch's partitions, which the union lays out after the small ones."""
+    import datetime
+
+    from ocr_gpu_services_spark.operators.rebalance import (
+        BIG_THRESHOLD, rebalance_by_size)
+    from ocr_gpu_services_spark.sources.pages import PAGES_SCHEMA
+    ts = datetime.datetime(2024, 1, 1)
+    text = "é" * (BIG_THRESHOLD // 2 + 1)
+    assert len(text) < BIG_THRESHOLD < len(text.encode("utf-8"))
+    mega = spark.createDataFrame([
+        ("https://mega.example/html", ts,
+         b"<p>" + b"x" * BIG_THRESHOLD + b"</p>", None, None),
+        ("https://mega.example/text", ts, None, text, None),
+    ], schema=PAGES_SCHEMA)
+    df = rebalance_by_size(synthetic_pages(spark, "tiny").unionByName(mega))
+    pids = {r["url"]: r["pid"] for r in df.select(
+        "url", F.spark_partition_id().alias("pid")).collect()}
+    n_small = 2 * spark.sparkContext.defaultParallelism
+    big = {u for u, p in pids.items() if p >= n_small}
+    assert big == {"https://mega.example/html", "https://mega.example/text"}
+    assert len(pids) == 202
+
+
 def test_write_resume_exactness(spark, tmp_path):
     """Kill-and-resume: committing only some partitions, the resumed run adds
     exactly the missing ones; bytes equal a clean one-shot run."""
