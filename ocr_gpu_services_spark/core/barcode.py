@@ -1,5 +1,5 @@
 """1-D barcodes — EAN-13 (ISO/IEC 15420), Code 128 (ISO/IEC 15417) and
-Code 39 (ISO/IEC 16388): encoders + scanline decoders.
+Code 39 (ISO/IEC 16388): scanline decoders.
 
 Symbologies for U3: the reference's pyzbar.decode reads 1-D retail and
 logistics codes alongside QR (/root/reference/src/infrastructure/
@@ -39,9 +39,6 @@ from __future__ import annotations
 import numpy as np
 
 MODULE_W = 2      # rendered pixels per module (fixture scale)
-BAR_H = 40        # rendered bar height
-INK, PAPER = 0, 255
-EAN_TYPE = "EAN13"  # pyzbar's obj.type for EAN-13 symbols
 
 # L-codes for digits 0-9; G = bitwise reverse of R; R = complement of L
 _L = ["0001101", "0011001", "0010011", "0111101", "0100011",
@@ -65,29 +62,6 @@ def checksum(digits12: str) -> int:
     s = sum(int(d) * (1 if i % 2 == 0 else 3)
             for i, d in enumerate(digits12))
     return (10 - s % 10) % 10
-
-
-def modules(digits12: str) -> np.ndarray:
-    """12 data digits -> the 95-module pattern (True = bar)."""
-    if len(digits12) != 12 or not digits12.isdigit():
-        raise ValueError("EAN-13 encodes exactly 12 data digits")
-    full = digits12 + str(checksum(digits12))
-    lead = int(full[0])
-    bits = "101"
-    for ch, par in zip(full[1:7], _PARITY[lead]):
-        bits += (_L if par == "L" else _G)[int(ch)]
-    bits += "01010"
-    for ch in full[7:13]:
-        bits += _R[int(ch)]
-    bits += "101"
-    return np.array([c == "1" for c in bits], dtype=bool)
-
-
-def encode(digits12: str) -> np.ndarray:
-    """12 data digits -> uint8 image (ink bars on paper)."""
-    mods = modules(digits12)
-    row = np.where(np.repeat(mods, MODULE_W), INK, PAPER).astype(np.uint8)
-    return np.tile(row, (BAR_H, 1))
 
 
 def _parse_bits(bits: str) -> str | None:
@@ -126,8 +100,6 @@ def _parse_bits(bits: str) -> str | None:
 # Code 128 (ISO/IEC 15417)
 # --------------------------------------------------------------------
 
-C128_TYPE = "CODE128"  # pyzbar's obj.type for Code 128 symbols
-
 # value -> (b s b s b s) module widths, values 0-105 (103/104/105 are
 # the start codes); the 13-module stop is separate.  Published constant
 # table of the standard.
@@ -161,36 +133,6 @@ assert sum(map(int, _C128_STOP)) == 13
 
 _START_A, _START_B, _START_C = 103, 104, 105
 _SHIFT, _CODE_C = 98, 99
-
-
-def _c128_values(text: str) -> list[int]:
-    """Encode text -> codeword values (start..data, no check/stop).
-    Set C for even-length all-digit payloads (digit pairs), else set B
-    (printable ASCII 32-126)."""
-    if text.isdigit() and len(text) % 2 == 0 and len(text) >= 4:
-        return [_START_C] + [int(text[k:k + 2])
-                             for k in range(0, len(text), 2)]
-    if not text or any(not 32 <= ord(c) <= 126 for c in text):
-        raise ValueError("Code 128 set B encodes printable ASCII only")
-    return [_START_B] + [ord(c) - 32 for c in text]
-
-
-def code128_modules(text: str) -> np.ndarray:
-    """Payload -> module pattern (True = bar) incl. check + stop."""
-    vals = _c128_values(text)
-    check = (vals[0] + sum(k * v for k, v in enumerate(vals[1:], 1))) % 103
-    widths = "".join(_C128[v] for v in vals + [check]) + _C128_STOP
-    bits: list[bool] = []
-    for k, w in enumerate(widths):
-        bits.extend([k % 2 == 0] * int(w))     # even runs are bars
-    return np.array(bits, dtype=bool)
-
-
-def encode_code128(text: str) -> np.ndarray:
-    """Payload -> uint8 image (ink bars on paper), fixture scale."""
-    mods = code128_modules(text)
-    row = np.where(np.repeat(mods, MODULE_W), INK, PAPER).astype(np.uint8)
-    return np.tile(row, (BAR_H, 1))
 
 
 def _c128_text(vals: list[int]) -> str | None:
@@ -292,8 +234,6 @@ def try_decode_code128(crop: np.ndarray) -> str | None:
 # Code 39 (ISO/IEC 16388)
 # --------------------------------------------------------------------
 
-C39_TYPE = "CODE39"  # pyzbar's obj.type for Code 39 symbols
-
 # char -> 9-element wide flags ('1' = wide), elements alternating
 # bar,space,...,bar (5 bars, 4 spaces).  Published constant table of
 # the standard; every character has exactly 3 wide elements, and all
@@ -322,26 +262,6 @@ for _ch, _p in _C39.items():
 del _ch, _p, _wb
 
 _C39_WIDE = 2   # wide element = 2 modules (narrow = 1) at fixture scale
-
-
-def code39_modules(text: str) -> np.ndarray:
-    """Payload -> module pattern (True = bar) incl. '*' delimiters."""
-    if not text or any(c not in _C39 or c == "*" for c in text):
-        raise ValueError("Code 39 encodes 0-9 A-Z -. space $/+% only")
-    bits: list[bool] = []
-    for j, ch in enumerate("*" + text + "*"):
-        if j:
-            bits.append(False)                  # narrow inter-char gap
-        for k, f in enumerate(_C39[ch]):
-            bits.extend([k % 2 == 0] * (_C39_WIDE if f == "1" else 1))
-    return np.array(bits, dtype=bool)
-
-
-def encode_code39(text: str) -> np.ndarray:
-    """Payload -> uint8 image (ink bars on paper), fixture scale."""
-    mods = code39_modules(text)
-    row = np.where(np.repeat(mods, MODULE_W), INK, PAPER).astype(np.uint8)
-    return np.tile(row, (BAR_H, 1))
 
 
 def _c39_parse_runs(runs: np.ndarray) -> str | None:

@@ -1,4 +1,4 @@
-"""CCITT Group 4 (ITU-T T.6) two-dimensional MMR codec — pure
+"""CCITT Group 4 (ITU-T T.6) two-dimensional MMR decoder — pure
 Python/numpy, from the published recommendation.
 
 G4 is THE fax/scan compression: virtually every scan-to-TIFF and
@@ -17,7 +17,8 @@ reference OCRs.  Everything here derives from the public spec:
 The code tables are transcribed from T.4/T.6 and sanity-checked at
 import (prefix-free within each table, exact counts).  The decoder is
 additionally exercised against hand-derived bit vectors in
-tests/test_rasters.py so encoder and decoder cannot share a
+tests/test_rasters.py, so it and the fixture encoder
+(fixtures/codecs/ccitt.py, which imports these tables) cannot share a
 transcription error silently.
 
 Coding state follows the spec's changing-element formulation: a0 is
@@ -102,7 +103,6 @@ _MODE_V = {0: "1", 1: "011", -1: "010", 2: "000011", -2: "000010",
            3: "0000011", -3: "0000010"}
 _MODE_H = "001"
 _MODE_PASS = "0001"
-_EOFB = "000000000001" * 2
 
 # decode tries: code-string -> (value, is_makeup)
 def _runs_table(term, makeup):
@@ -135,22 +135,6 @@ _assert_prefix_free(list(_BLACK_DEC))
 _assert_prefix_free(list(_MODE_V.values()) + [_MODE_H, _MODE_PASS])
 
 
-def _encode_run(run: int, black: bool, out: list[str]) -> None:
-    term = _BLACK_TERM if black else _WHITE_TERM
-    makeup = _BLACK_MAKEUP if black else _WHITE_MAKEUP
-    while run >= 2624:                      # repeated largest makeup
-        out.append(_EXT_MAKEUP[2560])
-        run -= 2560
-    if run >= 64:
-        mk = (run // 64) * 64
-        if mk > 1728:
-            out.append(_EXT_MAKEUP[mk])
-        else:
-            out.append(makeup[mk])
-        run -= mk
-    out.append(term[run])
-
-
 def _transitions(black_row: np.ndarray) -> list[int]:
     """Positions where the colour changes (index of the first pixel of
     each new run), with an imaginary white pixel before the row: a
@@ -159,56 +143,6 @@ def _transitions(black_row: np.ndarray) -> list[int]:
     if black_row.size and black_row[0]:
         t.insert(0, 0)
     return t
-
-
-def g4_encode(black: np.ndarray) -> bytes:
-    """(h, w) bool/0-1 array (True = black) -> T.6 stream incl. EOFB."""
-    black = np.asarray(black, dtype=bool)
-    h, w = black.shape
-    out: list[str] = []
-    ref: list[int] = []                     # all-white reference line
-    for r in range(h):
-        cur = _transitions(black[r])
-        pos, color = -1, False
-        ci = 0                              # index into cur of next a1
-        # monotone b-pointer: pos never decreases within a row and ref
-        # is sorted, so the first reference transition > pos only moves
-        # forward — O(transitions) per row instead of the quadratic
-        # from-zero rescan (a 1728px alternating halftone row has ~1700
-        # transitions; quadratic makes a single fax page take minutes)
-        bstart = 0
-        while pos < w:
-            a1 = cur[ci] if ci < len(cur) else w
-            # b1: first ref change > pos with colour opposite `color`
-            # (changes to black sit at even indices); consecutive
-            # transitions alternate parity, so it is bstart or bstart+1
-            want = 0 if not color else 1
-            while bstart < len(ref) and ref[bstart] <= pos:
-                bstart += 1
-            bi = bstart if bstart % 2 == want else bstart + 1
-            b1 = ref[bi] if bi < len(ref) else w
-            b2 = ref[bi + 1] if bi + 1 < len(ref) else w
-            if b2 < a1:
-                out.append(_MODE_PASS)
-                pos = b2
-            elif abs(a1 - b1) <= 3:
-                out.append(_MODE_V[a1 - b1])
-                pos = a1
-                color = not color
-                ci += 1
-            else:
-                a2 = cur[ci + 1] if ci + 1 < len(cur) else w
-                out.append(_MODE_H)
-                start = 0 if pos < 0 else pos
-                _encode_run(a1 - start, color, out)
-                _encode_run(a2 - a1, not color, out)
-                pos = a2
-                ci += 2
-        ref = cur
-    out.append(_EOFB)
-    bits = "".join(out)
-    bits += "0" * (-len(bits) % 8)
-    return bytes(int(bits[i:i + 8], 2) for i in range(0, len(bits), 8))
 
 
 def g4_decode(data: bytes, w: int, h: int) -> np.ndarray:
@@ -262,10 +196,11 @@ def g4_decode(data: bytes, w: int, h: int) -> np.ndarray:
     for r in range(h):
         row = out[r]
         pos, color = -1, False
-        # monotone b-pointer (see g4_encode): linear per row, and on an
-        # invalid stream whose pos regresses the pointer simply yields a
-        # farther b1 — decode still terminates (read_code exhausts the
-        # stream) and valid streams are unaffected
+        # monotone b-pointer (as in fixtures/codecs/ccitt.g4_encode):
+        # linear per row, and on an invalid stream whose pos regresses
+        # the pointer simply yields a farther b1 — decode still
+        # terminates (read_code exhausts the stream) and valid streams
+        # are unaffected
         bstart = 0
         while pos < w:
             kind, d = read_code(_modes)

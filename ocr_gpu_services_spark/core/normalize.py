@@ -19,10 +19,7 @@ document-level rule (blocks are joined by the caller before NFC).
 
 from __future__ import annotations
 
-import re
 import unicodedata
-
-_WS_RE = re.compile(r"\s+")
 
 
 def collapse_ws(s: str) -> str:

@@ -1,5 +1,5 @@
-"""PDF standard security handler (RC4 + AES): decrypt-on-read +
-fixture-side encryption.
+"""PDF standard security handler (RC4 + AES): decrypt-on-read.  The
+writer side the fixture generator uses is fixtures/codecs/pdf_crypt.py.
 
 Real crawl corpora contain owner-locked PDFs — encrypted with a non-empty
 OWNER password but an EMPTY user password — which every viewer opens
@@ -54,6 +54,8 @@ import hashlib
 import re
 import struct
 
+from .pdf_extract import _LENGTH_RE, _OBJ_RE, _stream_span
+
 # ISO 32000-1 §7.6.3.3 padding constant (public spec table)
 PAD = bytes((
     0x28, 0xBF, 0x4E, 0x5E, 0x4E, 0x75, 0x8A, 0x41, 0x64, 0x00, 0x4E,
@@ -95,21 +97,6 @@ def file_key(o: bytes, p: int, id0: bytes, r: int, nbytes: int,
         for _ in range(50):
             key = hashlib.md5(key[:nbytes]).digest()
     return key[:nbytes]
-
-
-def owner_value(owner_pw: bytes, user_pw: bytes, r: int,
-                nbytes: int) -> bytes:
-    """Algorithm 3: the /O entry."""
-    key = hashlib.md5(_pad_password(owner_pw)).digest()
-    if r >= 3:
-        for _ in range(50):
-            key = hashlib.md5(key).digest()
-    key = key[:nbytes]
-    o = rc4(key, _pad_password(user_pw))
-    if r >= 3:
-        for step in range(1, 20):
-            o = rc4(bytes(b ^ step for b in key), o)
-    return o
 
 
 def user_value(key: bytes, id0: bytes, r: int) -> bytes:
@@ -167,34 +154,6 @@ def hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
             return k[:32]
 
 
-def r6_user_entries(file_key: bytes, vsalt: bytes, ksalt: bytes,
-                    user_pw: bytes = b"") -> tuple[bytes, bytes]:
-    """Writer side, Algorithm 8: /U (48 bytes) and /UE (32 bytes)."""
-    from .aes import encrypt_cbc
-    u = hash_2b(user_pw, vsalt) + vsalt + ksalt
-    ik = hash_2b(user_pw, ksalt)
-    ue = encrypt_cbc(ik, b"\x00" * 16, file_key, pad=False)
-    return u, ue
-
-
-def r6_owner_entries(file_key: bytes, u48: bytes, vsalt: bytes,
-                     ksalt: bytes, owner_pw: bytes) -> tuple[bytes, bytes]:
-    """Writer side, Algorithm 9: /O and /OE (owner hash binds /U)."""
-    from .aes import encrypt_cbc
-    o = hash_2b(owner_pw, vsalt, u48) + vsalt + ksalt
-    ik = hash_2b(owner_pw, ksalt, u48)
-    oe = encrypt_cbc(ik, b"\x00" * 16, file_key, pad=False)
-    return o, oe
-
-
-def r6_perms(file_key: bytes, p: int) -> bytes:
-    """Algorithm 10: the /Perms entry (AES-256-ECB of the P record)."""
-    from .aes import encrypt_block
-    rec = (struct.pack("<i", p) + b"\xff\xff\xff\xff" + b"Tadb"
-           + b"\x00\x00\x00\x00")
-    return encrypt_block(file_key, rec)
-
-
 def r6_file_key(u48: bytes, ue: bytes, user_pw: bytes = b"") -> bytes:
     """Reader side, Algorithm 2.A user-password branch: validate /U and
     unwrap the file key from /UE; raises on a wrong password."""
@@ -206,17 +165,6 @@ def r6_file_key(u48: bytes, ue: bytes, user_pw: bytes = b"") -> bytes:
 
 
 # ------------------------------------------------------ payload ciphers
-
-def encrypt_payload(key: bytes, num: int, gen: int, data: bytes,
-                    scheme: str, iv: bytes) -> bytes:
-    """Stored bytes for a stream payload under ``scheme`` ('rc4',
-    'aesv2', 'aes256').  AES schemes prepend the caller's IV."""
-    if scheme == "rc4":
-        return rc4(object_key(key, num, gen), data)
-    from .aes import encrypt_cbc
-    ok = object_key(key, num, gen, aes=True) if scheme == "aesv2" else key
-    return iv + encrypt_cbc(ok, iv, data)
-
 
 def decrypt_payload(key: bytes, num: int, gen: int, data: bytes,
                     scheme: str) -> bytes:
@@ -233,9 +181,6 @@ def decrypt_payload(key: bytes, num: int, gen: int, data: bytes,
 
 _ENC_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R")
 _ID_OPEN_RE = re.compile(rb"/ID\s*\[")
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
-_STREAM_START_RE = re.compile(rb"stream\r?\n")
-_LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)")
 _XREF_TYPE_RE = re.compile(rb"/Type\s*/XRef\b")
 
 _ESCAPES = {ord("n"): 10, ord("r"): 13, ord("t"): 9, ord("b"): 8,
@@ -403,7 +348,7 @@ def decrypt_pdf(data: bytes) -> bytes:
         for num, gen, bstart, body in objects:
             if num == enc_num:
                 continue
-            loc = _stream_span(body)
+            loc = _encrypted_span(body)
             if loc is None:
                 continue
             start, length = loc
@@ -424,7 +369,7 @@ def decrypt_pdf(data: bytes) -> bytes:
     for num, gen, bstart, body in objects:
         if num == enc_num:
             continue
-        loc = _stream_span(body)
+        loc = _encrypted_span(body)
         if loc is None:
             continue
         start, length = loc
@@ -442,19 +387,10 @@ def decrypt_pdf(data: bytes) -> bytes:
     return b"".join(pieces)
 
 
-def _stream_span(body: bytes) -> tuple[int, int] | None:
+def _encrypted_span(body: bytes) -> tuple[int, int] | None:
     """(payload start, stored length) of an object's stream, or None for
     stream-less objects and never-encrypted XRef streams."""
-    sm = _STREAM_START_RE.search(body)
-    if not sm:
+    span = _stream_span(body)
+    if span is None or _XREF_TYPE_RE.search(span[0]):
         return None
-    head = body[:sm.start()]
-    if _XREF_TYPE_RE.search(head):
-        return None
-    lm = _LENGTH_RE.search(head)
-    if lm:
-        return sm.end(), int(lm.group(1))
-    m2 = re.search(rb"stream\r?\n(.*?)\r?\nendstream", body, re.S)
-    if not m2:
-        return None
-    return m2.start(1), len(m2.group(1))
+    return span[1:]

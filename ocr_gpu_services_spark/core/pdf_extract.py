@@ -114,25 +114,36 @@ _STREAM_START_RE = re.compile(rb"stream\r?\n")
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)")
 
 
-def _object_stream(body: bytes) -> bytes | None:
-    """Stream payload of an object body.  The byte range comes from the
+def _stream_span(body: bytes) -> tuple[bytes, int, int] | None:
+    """(stream dict, payload start, stored length) of an object body's
+    stream, or None when it has none.  The byte range comes from the
     dict's /Length when it is a direct integer — delimiter scanning
     alone is WRONG for binary streams: Flate data whose last byte is
     0x0D is silently truncated by a ``\\r?\\nendstream`` match
     (hypothesis found the 1-in-256 case).  Indirect /Length falls back
-    to the delimiter scan (our writer never emits it)."""
+    to the delimiter scan (our writer never emits it).  Shared with
+    core/pdf_crypt.py, which locates the encrypted bytes the same way."""
     sm = _STREAM_START_RE.search(body)
     if not sm:
         return None
-    lm = _LENGTH_RE.search(body[:sm.start()])
+    head = body[:sm.start()]
+    lm = _LENGTH_RE.search(head)
     if lm:
-        raw = body[sm.end():sm.end() + int(lm.group(1))]
-    else:
-        m = _STREAM_RE.search(body)
-        if not m:
-            return None
-        raw = m.group(1)
-    if b"/FlateDecode" in body[:sm.start()]:
+        return head, sm.end(), int(lm.group(1))
+    m = _STREAM_RE.search(body)
+    if not m:
+        return None
+    return head, m.start(1), len(m.group(1))
+
+
+def _object_stream(body: bytes) -> bytes | None:
+    """Decoded stream payload of an object body (Flate, LZW or raw)."""
+    span = _stream_span(body)
+    if span is None:
+        return None
+    head, start, length = span
+    raw = body[start:start + length]
+    if b"/FlateDecode" in head:
         try:
             raw = inflate(raw, MAX_STREAM_BYTES + 1)
         except zlib.error:
@@ -140,7 +151,7 @@ def _object_stream(body: bytes) -> bytes | None:
         if len(raw) > MAX_STREAM_BYTES:
             raise DecodeLimitError(
                 f"Flate stream over {MAX_STREAM_BYTES} bytes")
-    elif b"/LZWDecode" in body[:sm.start()]:
+    elif b"/LZWDecode" in head:
         # legacy writers (pre-Flate Acrobat era) LZW-compress content
         # streams; the default /EarlyChange 1 is the shared decoder's
         # MSB-first variant, run open-length to the EOD code
@@ -220,8 +231,6 @@ def _decode_pdf_string(tok: bytes) -> str:
         i += 1
     return out.decode("latin-1")
 
-
-_NUM_RE = re.compile(rb"[+-]?\d*\.?\d+")
 
 # numbered groups dispatched on m.lastindex (int compare instead of
 # lastgroup's string lookup); character classes and alternation order are

@@ -4,16 +4,16 @@ Mirrors the reference's per-word OCR record ``{text, confidence, position}``
 (/root/reference/src/infrastructure/services/ocr_service.py:26-36 for Paddle
 lines, /root/reference/src/infrastructure/services/optional_services.py:33-42
 for docTR words), with the position quad flattened to (x0, y0, x1, y1) bounds
-and a ``kind`` discriminator covering word/line/block plus the enrichment
-records (qr at optional_services.py:67-73, signature at
-/root/reference/src/ml/signature_detector/main.py:92-98).
+and a ``kind`` discriminator.  The kinds emitted are ``word`` and ``line``
+(glyph OCR, PDF text lines), ``block`` (HTML, pass-through text) and the
+image-page enrichment records: ``qr`` (optional_services.py:67-73),
+``barcode`` (EAN-13), ``code128``, ``code39`` and ``signature``
+(/root/reference/src/ml/signature_detector/main.py:92-98).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-KINDS = ("word", "line", "block", "qr", "signature")
 
 
 @dataclass

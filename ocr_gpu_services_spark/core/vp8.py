@@ -24,16 +24,15 @@ from __future__ import annotations
 
 import numpy as np
 
-from .vp8_tables import (COEFF_PROBA0, COEFF_UPDATE_PROBA, K_AC_TABLE,
-                         K_BANDS, K_BMODES_PROBA, K_CAT, K_DC_TABLE,
-                         ZIGZAG)
+from .vp8_tables import (CAT_BASE, COEFF_PROBA0, COEFF_UPDATE_PROBA,
+                         K_AC_TABLE, K_BANDS, K_BMODES_PROBA, K_CAT,
+                         K_DC_TABLE, ZIGZAG)
 
 # 16x16 luma / 8x8 chroma prediction modes
 DC_PRED, TM_PRED, V_PRED, H_PRED, B_PRED = 0, 1, 2, 3, 4
 # 4x4 ("B") prediction modes, RFC order
 (B_DC, B_TM, B_VE, B_HE, B_RD, B_VR, B_LD, B_VL, B_HD, B_HU) = range(10)
 
-_CAT_BASE = (5, 7, 11, 19, 35, 67)
 # left-shifts needed to renormalize a post-split range back to >= 128
 _RENORM = [8] + [max(0, 7 - r.bit_length() + 1) for r in range(1, 128)]
 for _r in range(1, 128):
@@ -308,7 +307,7 @@ def _decode_coeffs(br: _Bool, probs, ctx: int, first: int,
                 v = 0
                 for cp in K_CAT[cat]:
                     v = (v << 1) | br.get(cp)
-                v += _CAT_BASE[cat]
+                v += CAT_BASE[cat]
             pos, value, rng, bits = br.pos, br.value, br.range, br.bits
         # sign flag (prob 128)
         split = 1 + (((rng - 1) * 128) >> 8)

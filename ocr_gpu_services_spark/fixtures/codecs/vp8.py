@@ -1,16 +1,18 @@
 """Minimal deterministic VP8 (lossy WebP) encoder for the fixture
-generator — RFC 6386 keyframe subset.
+generator — RFC 6386 keyframe subset.  The decoder is core/vp8.py.
 
-Purpose-built like core/jpeg.py's quality-100 encoder: the tightest
-quantizers the format offers (q_index 0 -> dc/ac step 4) so decoded
-pages stay within a couple of gray levels of the render and the
-ink/paper band contract holds; every macroblock is intra 4x4
-(B_DC sub-modes, DC chroma), no segmentation, no loop filter, one
-token partition, default probability tables.  The encoder runs a
-CLOSED LOOP over the decoder's own primitives (_pred_b prediction,
-_idct4x4_add reconstruction), so any conformant decoder — ours or
-libwebp, pinned in tests/test_vp8.py — reproduces the encoder's
-reconstruction exactly.
+Purpose-built like fixtures/codecs/jpeg.py's quality-100 encoder: the
+tightest quantizers the format offers (q_index 0 -> dc/ac step 4) so
+decoded pages stay within a couple of gray levels of the render and the
+ink/paper band contract holds; every macroblock is intra 4x4 (B_DC
+sub-modes, DC chroma), no segmentation, no loop filter, one token
+partition, default probability tables.  The encoder runs a CLOSED LOOP
+over its own B_DC predictor and RFC 6386 §14.3 inverse transform —
+integer-exact, so any conformant decoder (core/vp8.py, or libwebp,
+pinned in tests/test_vp8_write.py) reproduces the encoder's
+reconstruction exactly.  It shares only the spec tables with the
+decoder, never its hot-loop functions, so a decoder rewrite cannot
+move fixture bytes.
 
 Luma carries the page; chroma is written as all-zero residuals over
 the implicit 128 DC prediction, so U = V = 128 exactly and the
@@ -29,12 +31,12 @@ import struct
 
 import numpy as np
 
-from .color import rgb_to_gray
-from .sniff import MAGIC_RIFF, MAGIC_WEBP
-from .vp8 import B_DC, _CAT_BASE, _idct4x4_add, _pred_b
-from .vp8_tables import (COEFF_PROBA0, COEFF_UPDATE_PROBA, K_AC_TABLE,
-                         K_BANDS, K_BMODES_PROBA, K_CAT, K_DC_TABLE,
-                         ZIGZAG)
+from ...core.color import rgb_to_gray
+from ...core.sniff import MAGIC_RIFF, MAGIC_WEBP
+from ...core.vp8 import B_DC
+from ...core.vp8_tables import (CAT_BASE, COEFF_PROBA0, COEFF_UPDATE_PROBA,
+                                K_AC_TABLE, K_BANDS, K_BMODES_PROBA, K_CAT,
+                                K_DC_TABLE, ZIGZAG)
 
 _QDC = K_DC_TABLE[0]                                # 4
 _QAC = K_AC_TABLE[0]                                # 4
@@ -134,9 +136,38 @@ def _build_y_for_gray() -> np.ndarray:
 _Y_FOR_GRAY = _build_y_for_gray()
 
 
+def _mul1(a):
+    """a * sqrt(2) * cos(pi/8) in the §14.3 fixed point."""
+    return ((a * 20091) >> 16) + a
+
+
+def _mul2(a):
+    """a * sqrt(2) * sin(pi/8) in the §14.3 fixed point."""
+    return (a * 35468) >> 16
+
+
+def _idct_add(coefs: list[int], recon: np.ndarray, sy: int, sx: int
+              ) -> None:
+    """RFC 6386 §14.3 inverse DCT of one 4x4 block (natural order),
+    added to the prediction at (sy, sx) and clamped to 0..255: a
+    vertical pass over the columns, then a horizontal pass over the
+    rows, with the spec's integer rounding."""
+    c = np.array(coefs, np.int64).reshape(4, 4)
+    a, b = c[0] + c[2], c[0] - c[2]
+    c1 = _mul2(c[1]) - _mul1(c[3])
+    d = _mul1(c[1]) + _mul2(c[3])
+    t = np.stack([a + d, b + c1, b - c1, a - d])
+    a, b = t[:, 0] + 4 + t[:, 2], t[:, 0] + 4 - t[:, 2]
+    c1 = _mul2(t[:, 1]) - _mul1(t[:, 3])
+    d = _mul1(t[:, 1]) + _mul2(t[:, 3])
+    res = np.stack([a + d, b + c1, b - c1, a - d], axis=1) >> 3
+    recon[sy:sy + 4, sx:sx + 4] = np.clip(
+        recon[sy:sy + 4, sx:sx + 4] + res, 0, 255)
+
+
 def _write_coeffs(be: _BoolEnc, probs, ctx: int, qc: list) -> int:
-    """Token-encode one 4x4 block (natural-order quantizer indices),
-    mirror of core/vp8.py _decode_coeffs.  Returns the nz flag."""
+    """Token-encode one 4x4 block (natural-order quantizer indices), the
+    inverse of the decoder's token tree (§13).  Returns the nz flag."""
     last = -1
     for k in range(16):
         if qc[ZIGZAG[k]]:
@@ -180,7 +211,7 @@ def _write_coeffs(be: _BoolEnc, probs, ctx: int, qc: list) -> int:
                 be.put(p[3], 1)
                 cat = 5
                 for c in range(5):
-                    if av < _CAT_BASE[c + 1]:
+                    if av < CAT_BASE[c + 1]:
                         cat = c
                         break
                 if cat <= 1:
@@ -194,7 +225,7 @@ def _write_coeffs(be: _BoolEnc, probs, ctx: int, qc: list) -> int:
                     be.put(p[6], 1)
                     be.put(p[8], 1)
                     be.put(p[10], cat - 4)
-                extra = av - _CAT_BASE[cat]
+                extra = av - CAT_BASE[cat]
                 cps = K_CAT[cat]
                 for k in range(len(cps) - 1, -1, -1):
                     be.put(cps[len(cps) - 1 - k], (extra >> k) & 1)
@@ -266,25 +297,19 @@ def vp8_encode_gray(img: np.ndarray) -> bytes:
         for mb_x in range(mb_w):
             y0, x0 = 1 + mb_y * 16, 1 + mb_x * 16
             anz = above_nz[mb_x]
-            if mb_y == 0:
-                tr_mb = [127] * 4
-            elif mb_x == mb_w - 1:
-                tr_mb = [int(recon[y0 - 1, x0 + 15])] * 4
-            else:
-                tr_mb = [int(v) for v in recon[y0 - 1, x0 + 16:x0 + 20]]
             for j in range(4):
                 for i in range(4):
                     sy, sx = y0 + 4 * j, x0 + 4 * i
-                    if i < 3:
-                        tr = [int(v) for v in recon[sy - 1, sx + 4:sx + 8]]
-                    else:
-                        tr = tr_mb
-                    _pred_b(recon, sy, sx, B_DC, tr)
+                    # B_DC prediction (§12.3): the rounded mean of the
+                    # four pixels above and the four to the left
+                    recon[sy:sy + 4, sx:sx + 4] = (
+                        int(recon[sy - 1, sx:sx + 4].sum())
+                        + int(recon[sy:sy + 4, sx - 1].sum()) + 4) >> 3
                     res = (ypad[sy - 1:sy + 3, sx - 1:sx + 3]
                            - recon[sy:sy + 4, sx:sx + 4]).reshape(16)
                     coefs = fdct @ res
                     qcl = [0] * 16
-                    cap = _CAT_BASE[5] + 2047       # cat6 ceiling
+                    cap = CAT_BASE[5] + 2047       # cat6 ceiling
                     for k in range(16):
                         q = _QDC if k == 0 else _QAC
                         v = int(np.rint(coefs[k] / q))
@@ -296,7 +321,7 @@ def vp8_encode_gray(img: np.ndarray) -> bytes:
                     deq = [qcl[k] * (_QDC if k == 0 else _QAC)
                            for k in range(16)]
                     if any(deq):
-                        _idct4x4_add(deq, recon, sy, sx)
+                        _idct_add(deq, recon, sy, sx)
             # chroma: all-zero blocks over the implicit 128 DC pred
             for base in (4, 6):
                 for j in range(2):

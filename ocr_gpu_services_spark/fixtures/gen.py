@@ -345,11 +345,12 @@ def _image_page(rng: random.Random, i: int, allow_jpeg: bool = False
         bilevel_kind = _BILEVEL_KINDS[
             random.Random(f"fax15:{i}").randrange(4)]
     if as_jpeg:
-        from ..core.jpeg import jpeg_encode, jpeg_encode_color
+        from .codecs.jpeg import jpeg_encode, jpeg_encode_color
         # ~35% of JPEG rows are PROGRESSIVE (SOF2, libjpeg-style scan
-        # script, core/jpeg_progressive.py) — the default web export
-        # shape; decoded coefficients equal the sequential encoder's,
-        # so extraction stays byte-identical and goldens unchanged
+        # script, fixtures/codecs/jpeg_progressive.py) — the default web
+        # export shape; decoded coefficients equal the sequential
+        # encoder's, so extraction stays byte-identical and goldens
+        # unchanged
         prng = random.Random(f"prog1:{i}")
         progressive = prng.random() < 0.35
         # ~30% of SEQUENTIAL JPEG rows carry a DRI restart interval
@@ -367,14 +368,14 @@ def _image_page(rng: random.Random, i: int, allow_jpeg: bool = False
         # "exif5"; the permutation is exact and the quality-100 band
         # contract absorbs the transformed-frame DCT rounding, so
         # extraction and goldens are unchanged.
-        from ..core.jpeg import unapply_exif_orientation
+        from .codecs.jpeg import unapply_exif_orientation
         erng = random.Random(f"exif5:{i}")
         exif = erng.randrange(2, 9) if erng.random() < 0.25 else 0
         if colorize:
             from .colorize import colorize_exact
             rgb = colorize_exact(img, crng)
             if progressive:
-                from ..core.jpeg_progressive import jpeg_encode_progressive
+                from .codecs.jpeg_progressive import jpeg_encode_progressive
                 return jpeg_encode_progressive(rgb)
             sub = "420" if crng.random() < 0.5 else "444"
             if exif:
@@ -383,7 +384,7 @@ def _image_page(rng: random.Random, i: int, allow_jpeg: bool = False
                                      restart_interval=dri,
                                      exif_orientation=exif)
         if progressive:
-            from ..core.jpeg_progressive import jpeg_encode_progressive
+            from .codecs.jpeg_progressive import jpeg_encode_progressive
             return jpeg_encode_progressive(img)
         if exif:
             img = unapply_exif_orientation(img, exif)
@@ -411,18 +412,17 @@ def _image_page(rng: random.Random, i: int, allow_jpeg: bool = False
         return _encode_bilevel(img, bilevel_kind)
     graya = crng is not None and crng.random() < 0.25
     # ~15% of correctness-scale gray non-JPEG non-bilevel rows ship as
-    # LOSSY WebP (VP8 key frames — core/vp8_write.py, q_index-0 closed
-    # loop over the decoder's own primitives): decoded pixels sit
-    # within <=4 gray levels of the render, verified to keep
-    # extraction byte-identical on every tiny/small image row, so
-    # goldens never move.  Side stream "vp8w5": the salt keeps the
-    # pinned gif/tiff/png tiny coverage AND picks a small-render row
-    # (73k px) so the bench-visible multimodal decode of tiny stays
-    # cheap.  Overrides the lossless containers; all prior rng draws
-    # are consumed exactly as before.
+    # LOSSY WebP (VP8 key frames — fixtures/codecs/vp8.py, q_index-0
+    # closed loop): decoded pixels sit within <=4 gray levels of the
+    # render, verified to keep extraction byte-identical on every
+    # tiny/small image row, so goldens never move.  Side stream "vp8w5":
+    # the salt keeps the pinned gif/tiff/png tiny coverage AND picks a
+    # small-render row (73k px) so the bench-visible multimodal decode
+    # of tiny stays cheap.  Overrides the lossless containers; all prior
+    # rng draws are consumed exactly as before.
     if (allow_jpeg and not as_jpeg
             and random.Random(f"vp8w5:{i}").random() < 0.15):
-        from ..core.vp8_write import vp8_encode_gray
+        from .codecs.vp8 import vp8_encode_gray
         return vp8_encode_gray(img)
     if graya:
         if container is not None:
@@ -441,7 +441,7 @@ def _encode_bilevel(img, kind: str) -> bytes:
     if kind == "png-bilevel":
         from ..core.png import png_encode_bilevel
         return png_encode_bilevel(img)
-    from ..core.tiff import tiff_encode
+    from .codecs.tiff import tiff_encode
     comp = {"tiff-bilevel": "none", "tiff-bilevel-packbits": "packbits",
             "tiff-bilevel-g4": "g4"}[kind]
     return tiff_encode(img, comp, bilevel=True)
@@ -451,16 +451,16 @@ def _encode_container(img, kind: str, big_endian: bool | None) -> bytes:
     """BMP / TIFF fixture container for a gray (HxW) or RGB (HxWx3)
     render — all lossless, so extraction is byte-identical to PNG."""
     if kind in ("webp", "webp-anim"):
-        from ..core.webp import vp8l_encode
+        from .codecs.webp import vp8l_encode
         return vp8l_encode(img, animated=kind == "webp-anim")
     if kind in ("gif", "gif-i"):
-        from ..core.gif import gif_encode
+        from .codecs.gif import gif_encode
         return gif_encode(img, interlace=kind == "gif-i")
     if kind == "bmp":
-        from ..core.bmp import bmp_encode_gray8, bmp_encode_rgb24
+        from .codecs.bmp import bmp_encode_gray8, bmp_encode_rgb24
         return (bmp_encode_rgb24(img) if img.ndim == 3
                 else bmp_encode_gray8(img))
-    from ..core.tiff import tiff_encode
+    from .codecs.tiff import tiff_encode
     comp = {"tiff": "none", "tiff-packbits": "packbits",
             "tiff-lzw": "lzw", "tiff-lzw-pred": "lzw"}[kind]
     return tiff_encode(img, comp, predictor=kind.endswith("-pred"),
@@ -481,9 +481,9 @@ def image_row_pixels(rng: random.Random, i: int,
     crng = random.Random(f"color:{i}") if at_corr_scale else None
     colorize = crng is not None and crng.random() < 0.40
     if as_jpeg:
-        from ..core.jpeg import (apply_exif_orientation, jpeg_decode,
-                                 jpeg_encode, jpeg_encode_color,
-                                 unapply_exif_orientation)
+        from ..core.jpeg import apply_exif_orientation, jpeg_decode
+        from .codecs.jpeg import (jpeg_encode, jpeg_encode_color,
+                                  unapply_exif_orientation)
         prng = random.Random(f"prog1:{i}")
         progressive = prng.random() < 0.35
         # the "exif5" side stream (mirrors _image_page): sequential rows
@@ -497,7 +497,7 @@ def image_row_pixels(rng: random.Random, i: int,
             from .colorize import colorize_exact
             rgb = colorize_exact(img, crng)
             if progressive:
-                from ..core.jpeg_progressive import jpeg_encode_progressive
+                from .codecs.jpeg_progressive import jpeg_encode_progressive
                 return rgb_to_gray(jpeg_decode(jpeg_encode_progressive(rgb)))
             sub = "420" if crng.random() < 0.5 else "444"
             if exif:
@@ -507,7 +507,7 @@ def image_row_pixels(rng: random.Random, i: int,
                 out = apply_exif_orientation(out, exif)
             return rgb_to_gray(out)
         if progressive:
-            from ..core.jpeg_progressive import jpeg_encode_progressive
+            from .codecs.jpeg_progressive import jpeg_encode_progressive
             return jpeg_decode(jpeg_encode_progressive(img))
         if exif:
             out = jpeg_decode(jpeg_encode(
@@ -521,7 +521,7 @@ def image_row_pixels(rng: random.Random, i: int,
             and not (plan["bed"] is None and plan["persp"] is None)
             and random.Random(f"vp8w5:{i}").random() < 0.15):
         from ..core.extract import decode_image
-        from ..core.vp8_write import vp8_encode_gray
+        from .codecs.vp8 import vp8_encode_gray
         return decode_image(vp8_encode_gray(img))
     # color PNG variants are lossless AND luma-exact by construction, so
     # the post-codec pixels equal the gray render exactly

@@ -23,8 +23,10 @@ import random
 
 import numpy as np
 
-from ..core import barcode, glyph_ocr, qrcode
+from ..core import glyph_ocr
+from ..core.barcode import checksum
 from ..core.geometry import SKEW_GRID, rotate_canvas
+from .codecs import barcode, qrcode
 
 GAP = 12          # vertical separation between regions (> glyph pitch)
 PAPER, INK = 255, 0
@@ -214,7 +216,7 @@ def compose_upright(plan: dict) -> tuple[np.ndarray, dict]:
                            plan["ean_x"] + bc.shape[1] - 1)
         # decode truth = the full 13 digits incl. the check digit
         meta["ean_payload"] = (plan["ean_payload"]
-                               + str(barcode.checksum(plan["ean_payload"])))
+                               + str(checksum(plan["ean_payload"])))
         y_cur += bc.shape[0] + GAP
     meta["c128_box"] = None
     meta["c128_payload"] = None

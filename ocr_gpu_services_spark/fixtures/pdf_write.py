@@ -223,7 +223,7 @@ def build_pdf(pages: list, *, compress=False,
             objs[pnum] = page_obj(
                 cnum, f"/Font << /F1 {font_num} 0 R >>")
             if compress == "lzw":     # legacy-writer shape: /LZWDecode
-                from ..core.tiff import lzw_encode
+                from .codecs.tiff import lzw_encode
                 body = lzw_encode(bytes(page))
                 filt = "/Filter /LZWDecode "
             elif compress:
@@ -262,7 +262,7 @@ def build_pdf(pages: list, *, compress=False,
             ops = f"q {w} 0 0 {h} 0 0 cm /Im0 Do Q".encode("latin-1")
             objs[cnum] = stream_obj(ops)
             if pkind == "dct":
-                from ..core.jpeg import jpeg_encode, jpeg_encode_color
+                from .codecs.jpeg import jpeg_encode, jpeg_encode_color
                 payload = jpeg_encode_color(arr, subsampling="444") \
                     if arr.ndim == 3 else jpeg_encode(arr)
                 objs[extra] = stream_obj(
@@ -271,7 +271,7 @@ def build_pdf(pages: list, *, compress=False,
                     f"/Height {h} /ColorSpace {cs} "
                     f"/BitsPerComponent 8 /Filter /DCTDecode ")
             elif pkind == "ccitt":
-                from ..core.ccitt import g4_encode
+                from .codecs.ccitt import g4_encode
                 objs[extra] = stream_obj(
                     g4_encode(arr < 128),
                     f"/Type /XObject /Subtype /Image /Width {w} "
@@ -308,12 +308,13 @@ def build_pdf(pages: list, *, compress=False,
         import hashlib
 
         from ..core import pdf_crypt as pc
+        from .codecs import pdf_crypt as pcw
         id0 = hashlib.md5(b"".join(objs[n] for n in sorted(objs))).digest()
         p = -44                      # print+copy allowed, modify denied
         enc_num = font_num + 1
         if encrypt in (40, 128):
             v, r, nbytes = (1, 2, 5) if encrypt == 40 else (2, 3, 16)
-            o_val = pc.owner_value(b"fixture-owner", b"", r, nbytes)
+            o_val = pcw.owner_value(b"fixture-owner", b"", r, nbytes)
             key = pc.file_key(o_val, p, id0, r, nbytes)
             u_val = pc.user_value(key, id0, r)
             lenstr = f" /Length {encrypt}" if r >= 3 else ""
@@ -323,7 +324,7 @@ def build_pdf(pages: list, *, compress=False,
         elif encrypt == "aesv2":
             # PDF 1.6 crypt filters: AES-128-CBC behind /StdCF
             scheme = "aesv2"
-            o_val = pc.owner_value(b"fixture-owner", b"", 4, 16)
+            o_val = pcw.owner_value(b"fixture-owner", b"", 4, 16)
             key = pc.file_key(o_val, p, id0, 4, 16)
             u_val = pc.user_value(key, id0, 4)
             objs[enc_num] = (
@@ -339,10 +340,10 @@ def build_pdf(pages: list, *, compress=False,
             ksu = hashlib.md5(b"ks-user" + id0).digest()[:8]
             vso = hashlib.md5(b"vs-owner" + id0).digest()[:8]
             kso = hashlib.md5(b"ks-owner" + id0).digest()[:8]
-            u_val, ue = pc.r6_user_entries(key, vsu, ksu)
-            o_val, oe = pc.r6_owner_entries(key, u_val, vso, kso,
-                                            b"fixture-owner")
-            perms = pc.r6_perms(key, p)
+            u_val, ue = pcw.r6_user_entries(key, vsu, ksu)
+            o_val, oe = pcw.r6_owner_entries(key, u_val, vso, kso,
+                                             b"fixture-owner")
+            perms = pcw.r6_perms(key, p)
             objs[enc_num] = (
                 f"<< /Filter /Standard /V 5 /R 6 /Length 256 "
                 f"/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen "
@@ -400,7 +401,7 @@ def _encrypt_stream_in_body(body: bytes, key: bytes, num: int,
     (IV + padding) so the dict's /Length digits are rewritten."""
     import re as _re
 
-    from ..core import pdf_crypt as pc
+    from .codecs import pdf_crypt as pc
     sm = _re.search(rb"stream\r?\n", body)
     if not sm:
         return body
@@ -447,7 +448,7 @@ def _assemble_objstm(objs: dict[int, bytes], *, key: bytes | None = None,
     content += b"\n".join(bodies) + b"\n"
     comp = zlib.compress(content)
     if key is not None:
-        from ..core import pdf_crypt as pc
+        from .codecs import pdf_crypt as pc
         comp = pc.encrypt_payload(key, objstm_num, 0, comp, scheme,
                                   _det_iv(objstm_num, id0))
     objstm_body = ((f"<< /Type /ObjStm /N {len(plain)} /First {first} "

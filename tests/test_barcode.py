@@ -9,6 +9,7 @@ import random
 import numpy as np
 
 from ocr_gpu_services_spark.core import barcode
+from ocr_gpu_services_spark.fixtures.codecs import barcode as barcode_enc
 
 
 def test_checksum_known_value():
@@ -20,7 +21,7 @@ def test_roundtrip_and_reverse_scan():
     for _ in range(50):
         d = "".join(rng.choice("0123456789") for _ in range(12))
         full = d + str(barcode.checksum(d))
-        img = barcode.encode(d)
+        img = barcode_enc.encode(d)
         assert barcode.try_decode_region(img) == full
         rev = np.ascontiguousarray(img[::-1, ::-1])
         assert barcode.try_decode_region(rev) == full
@@ -35,7 +36,7 @@ def test_garbage_and_damage_rejected():
     # single flipped module -> checksum/parity failure, never wrong data
     d = "501234567890"
     full = d + str(barcode.checksum(d))
-    img = barcode.encode(d)
+    img = barcode_enc.encode(d)
     rng = random.Random(2)
     for _ in range(25):
         m = rng.randrange(95)
@@ -48,7 +49,7 @@ def test_garbage_and_damage_rejected():
 
 def test_wrong_checksum_rejected():
     d = "501234567890"
-    mods = barcode.modules(d)
+    mods = barcode_enc.modules(d)
     # re-render with the last digit's pattern swapped to a digit whose
     # R-code differs -> checksum mismatch must reject
     bad = mods.copy()
@@ -59,7 +60,7 @@ def test_wrong_checksum_rejected():
     bad[85:92] = pat
     row = np.where(np.repeat(bad, barcode.MODULE_W), 0, 255) \
         .astype(np.uint8)
-    img = np.tile(row, (barcode.BAR_H, 1))
+    img = np.tile(row, (barcode_enc.BAR_H, 1))
     assert barcode.try_decode_region(img) is None
 
 
@@ -103,7 +104,7 @@ def _c128_image_from_values(vals: list[int]) -> np.ndarray:
     mods = np.array(bits, dtype=bool)
     row = np.where(np.repeat(mods, barcode.MODULE_W), 0, 255) \
         .astype(np.uint8)
-    return np.tile(row, (barcode.BAR_H, 1))
+    return np.tile(row, (barcode_enc.BAR_H, 1))
 
 
 def test_c128_table_known_patterns():
@@ -129,7 +130,7 @@ def test_c128_roundtrip_sets_b_and_c():
         else:
             txt = "".join(rng.choice(alpha)
                           for _ in range(rng.randint(1, 20)))
-        img = barcode.encode_code128(txt)
+        img = barcode_enc.encode_code128(txt)
         assert barcode.try_decode_code128(img) == txt, txt
         rev = np.ascontiguousarray(img[::-1, ::-1])
         assert barcode.try_decode_code128(rev) == txt, txt
@@ -158,7 +159,7 @@ def test_c128_fnc_and_dangling_shift_rejected():
 
 def test_c128_checksum_and_damage_rejected():
     txt = "SPARK-42x"
-    img = barcode.encode_code128(txt)
+    img = barcode_enc.encode_code128(txt)
     rng = random.Random(4)
     n_mod = img.shape[1] // barcode.MODULE_W
     for _ in range(40):
@@ -176,8 +177,8 @@ def test_c128_checksum_and_damage_rejected():
 
 
 def test_c128_ean_cross_rejection():
-    ean = barcode.encode("123456789012")
-    c128 = barcode.encode_code128("HELLO-99")
+    ean = barcode_enc.encode("123456789012")
+    c128 = barcode_enc.encode_code128("HELLO-99")
     assert barcode.try_decode_code128(ean) is None
     assert barcode.try_decode_region(c128) is None
 
@@ -212,7 +213,7 @@ def test_c39_known_pattern():
     # '*' (start/stop) has wide flags 010010100: element widths
     # 1 2 1 1 2 1 2 1 1 (bar space ... bar) -> leading modules
     # 1 00 1 0 11 0 11 0 1 — the published delimiter pattern at ratio 2
-    bits = barcode.code39_modules("0")
+    bits = barcode_enc.code39_modules("0")
     # symbol = * 0 * with narrow gaps: check total module count
     assert bits.size == 3 * 12 + 2          # 3 chars x 12 modules + 2 gaps
     assert list(bits[:12].astype(int)) == \
@@ -225,7 +226,7 @@ def test_c39_roundtrip_and_reverse_scan():
     for _ in range(60):
         txt = "".join(rng.choice(alpha)
                       for _ in range(rng.randint(1, 20))).strip() or "X"
-        img = barcode.encode_code39(txt)
+        img = barcode_enc.encode_code39(txt)
         assert barcode.try_decode_code39(img) == txt, txt
         rev = np.ascontiguousarray(img[::-1, ::-1])
         assert barcode.try_decode_code39(rev) == txt, txt
@@ -239,12 +240,12 @@ def test_c39_structure_rejection():
         noise = rs.rand(40, 29 + rs.randint(300)) < rs.uniform(0.2, 0.8)
         img = np.where(noise, 0, 255).astype(np.uint8)
         assert barcode.try_decode_code39(img) is None
-    img = barcode.encode_code39("TRUNCATED")
+    img = barcode_enc.encode_code39("TRUNCATED")
     assert barcode.try_decode_code39(
         img[:, :-3 * barcode.MODULE_W]) is None
     # damage sweep: flip one module column at a time
     txt = "C39-OK"
-    img = barcode.encode_code39(txt)
+    img = barcode_enc.encode_code39(txt)
     n_mod = img.shape[1] // barcode.MODULE_W
     rng = random.Random(13)
     for _ in range(40):
@@ -260,16 +261,17 @@ def test_c39_cross_symbology_rejection():
     """The three symbologies cannot cross-read: run-count classes
     (EAN 59 / C128 6m+7 / C39 10n-1) + width-sum and structure checks
     are mutually exclusive."""
-    c39 = barcode.encode_code39("HELLO WORLD-42 $/+%")
+    c39 = barcode_enc.encode_code39("HELLO WORLD-42 $/+%")
     assert barcode.try_decode_region(c39) is None
     assert barcode.try_decode_code128(c39) is None
     for txt in ("HELLO", "0042", "MiXeD-12"):
         assert barcode.try_decode_code39(
-            barcode.encode_code128(txt)) is None
-    assert barcode.try_decode_code39(barcode.encode("590123412345")) is None
+            barcode_enc.encode_code128(txt)) is None
+    assert barcode.try_decode_code39(
+        barcode_enc.encode("590123412345")) is None
     # n=5 chars gives R=49 runs == 1 mod 6 (a C128-plausible run count):
     # the width-sum check must still reject
-    c39_5 = barcode.encode_code39("ABC")          # *ABC* = 5 chars
+    c39_5 = barcode_enc.encode_code39("ABC")          # *ABC* = 5 chars
     assert barcode.try_decode_code128(c39_5) is None
 
 

@@ -8,10 +8,11 @@ import numpy as np
 import pytest
 
 from ocr_gpu_services_spark.core.color import luma_int, rgb_to_gray
-from ocr_gpu_services_spark.core.jpeg import (jpeg_decode, jpeg_encode,
-                                              jpeg_encode_color)
+from ocr_gpu_services_spark.core.jpeg import jpeg_decode
 from ocr_gpu_services_spark.core.png import (png_decode, png_encode_palette,
                                              png_encode_rgb, png_encode_rgba)
+from ocr_gpu_services_spark.fixtures.codecs.jpeg import (jpeg_encode,
+                                                         jpeg_encode_color)
 from ocr_gpu_services_spark.fixtures.colorize import colorize_exact, tint_lut
 
 
@@ -109,7 +110,8 @@ def test_jpeg_restart_markers_decode():
     base = jpeg_encode(img)
     ref = jpeg_decode(base)
     # encode the two blocks independently (DC predictor resets at RST)
-    from ocr_gpu_services_spark.core.jpeg import _BitWriter, _encode_block
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import (_BitWriter,
+                                                             _encode_block)
     q = np.ones(64, dtype=np.int32)
     scans = []
     for bx in (0, 8):

@@ -615,7 +615,8 @@ def test_jpeg_single_component_sampling_is_layout_free():
     """T.81 A.2: a single-component scan is non-interleaved — a gray
     stream declaring sampling 0x22 must decode pixel-identical to its
     0x11 twin, not scramble blocks in MCU order."""
-    from ocr_gpu_services_spark.core.jpeg import jpeg_decode, jpeg_encode
+    from ocr_gpu_services_spark.core.jpeg import jpeg_decode
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import jpeg_encode
     g = (np.arange(32 * 32, dtype=np.uint32) * 97 % 251).astype(np.uint8)
     g = g.reshape(32, 32)
     enc = jpeg_encode(g)
@@ -631,7 +632,8 @@ def test_jpeg_undefined_table_refs_raise_valueerror():
     """KeyError/ZeroDivisionError from malformed baseline JPEGs escaped
     pdf_extract's per-image (ValueError, IndexError) skip and killed
     whole documents."""
-    from ocr_gpu_services_spark.core.jpeg import jpeg_decode, jpeg_encode
+    from ocr_gpu_services_spark.core.jpeg import jpeg_decode
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import jpeg_encode
     g = np.full((16, 16), 200, np.uint8)
     enc = jpeg_encode(g)
     sos = enc.index(b"\xff\xda")
@@ -665,3 +667,35 @@ def test_text_route_rows_byte_capped_too():
     chunks = list(_chunks_by_bytes(batch))
     assert len(chunks) == 3              # each mega text row isolated
     assert sum(c.num_rows for c in chunks) == 3
+
+
+def test_core_holds_no_fixture_encoder():
+    """core/ is the extraction kernel: no core module imports from
+    fixtures/, and no top-level function or class outside core/png.py
+    (the production png_encode family) has ``encode`` in its name.
+    Fixture encoders live in fixtures/codecs/, so a decoder rewrite
+    cannot move fixture bytes."""
+    import ast
+
+    core = os.path.join(os.path.dirname(__file__), "..",
+                        "ocr_gpu_services_spark", "core")
+    bad = []
+    for name in sorted(os.listdir(core)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(core, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            if any("fixtures" in m.split(".") for m in mods):
+                bad.append(f"{name} imports fixtures")
+        if name != "png.py":
+            bad += [f"{name}:{node.name}" for node in tree.body
+                    if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and "encode" in node.name.lower()]
+    assert not bad, bad

@@ -14,6 +14,7 @@ from ocr_gpu_services_spark.core.extract import extract_document, get_atlas
 from ocr_gpu_services_spark.core.geometry import (
     SKEW_GRID, derotate_canvas, estimate_skew, rotate_canvas)
 from ocr_gpu_services_spark.core.png import png_encode
+from ocr_gpu_services_spark.fixtures.codecs import qrcode as qrcode_enc
 from ocr_gpu_services_spark.fixtures import imagegen
 from ocr_gpu_services_spark.fixtures.gen import gen_rows, image_expectations
 
@@ -119,7 +120,7 @@ def test_components_vs_bruteforce_flood_fill():
                                      "v9/" + "H" * 167,      # version 9
                                      "v10" + "I" * 209])     # v10: 16-bit count
 def test_qr_roundtrip(payload):
-    assert qrcode.try_decode_region(qrcode.encode(payload)) == payload
+    assert qrcode.try_decode_region(qrcode_enc.encode(payload)) == payload
 
 
 def test_qr_block_table_matches_placement():
@@ -156,7 +157,7 @@ def test_qr_corrects_damaged_modules(payload):
     (None), never return wrong data."""
     import random
     rng = random.Random(7)
-    mat, v, _mask = qrcode.encode_matrix(payload, "M")
+    mat, v, _mask = qrcode_enc.encode_matrix(payload, "M")
     nsym = qrcode._BLOCKS[v]["M"][0][0]
     dat = qrcode._data_coords(v)
     n_cw = len(dat) // 8
@@ -188,7 +189,7 @@ def test_qr_no_false_positives_on_garbage():
         assert qrcode.try_decode_region(img) is None
     # a symbol-shaped region with REAL finders but garbage data must
     # fail RS and return None, never wrong data
-    mat, v, _m = qrcode.encode_matrix("QR:9999999", "M")
+    mat, v, _m = qrcode_enc.encode_matrix("QR:9999999", "M")
     bad = mat.copy()
     dat = qrcode._data_coords(v)
     rs = np.random.RandomState(5)
@@ -198,7 +199,7 @@ def test_qr_no_false_positives_on_garbage():
 
 
 def test_qr_format_info_damage_tolerated():
-    mat, _v, _mask = qrcode.encode_matrix("QR:1234567", "M")
+    mat, _v, _mask = qrcode_enc.encode_matrix("QR:1234567", "M")
     n = mat.shape[0]
     c1, _c2 = qrcode._format_positions(n)
     m = mat.copy()
@@ -213,7 +214,7 @@ def test_qr_version_info_damage():
     size-derived version's codeword, and rejects when both copies are
     wrecked (a size-misread must not silently decode)."""
     payload = "v7/" + "K" * 110
-    mat, v, _mask = qrcode.encode_matrix(payload, "M")
+    mat, v, _mask = qrcode_enc.encode_matrix(payload, "M")
     assert v == 7
     n = mat.shape[0]
     tr = [(i // 3, n - 11 + i % 3) for i in range(18)]

@@ -7,8 +7,9 @@ import random
 
 import numpy as np
 
-from ocr_gpu_services_spark.core.jpeg import (jpeg_decode, jpeg_encode,
-                                              jpeg_encode_color)
+from ocr_gpu_services_spark.core.jpeg import jpeg_decode
+from ocr_gpu_services_spark.fixtures.codecs.jpeg import (jpeg_encode,
+                                                         jpeg_encode_color)
 
 
 def test_roundtrip_error_bounded_and_bands_preserved():
@@ -103,8 +104,9 @@ def test_restart_marker_missing_raises():
 
 def test_exif_orientation_parse_and_transform_inverses():
     from ocr_gpu_services_spark.core.jpeg import (apply_exif_orientation,
-                                                  exif_orientation,
-                                                  unapply_exif_orientation)
+                                                  exif_orientation)
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import (
+        unapply_exif_orientation)
     rs = np.random.RandomState(3)
     g = rs.randint(0, 256, (30, 44)).astype(np.uint8)
     rgb = rs.randint(0, 256, (22, 18, 3)).astype(np.uint8)
@@ -133,7 +135,8 @@ def test_exif_row_extracts_byte_identically_to_upright_twin():
     PNG twin through the decode seam's exact permutation."""
     from ocr_gpu_services_spark.core.extract import (extract_document,
                                                      get_atlas)
-    from ocr_gpu_services_spark.core.jpeg import unapply_exif_orientation
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import (
+        unapply_exif_orientation)
     from ocr_gpu_services_spark.core.png import png_encode
     from ocr_gpu_services_spark.fixtures import imagegen
     get_atlas()

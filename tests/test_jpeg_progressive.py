@@ -9,10 +9,12 @@ import random
 import numpy as np
 import pytest
 
-from ocr_gpu_services_spark.core.jpeg import (jpeg_decode, jpeg_encode,
-                                              jpeg_encode_color)
-from ocr_gpu_services_spark.core.jpeg_progressive import (
-    decode_progressive, jpeg_encode_progressive)
+from ocr_gpu_services_spark.core.jpeg import jpeg_decode
+from ocr_gpu_services_spark.core.jpeg_progressive import decode_progressive
+from ocr_gpu_services_spark.fixtures.codecs.jpeg import (jpeg_encode,
+                                                         jpeg_encode_color)
+from ocr_gpu_services_spark.fixtures.codecs.jpeg_progressive import (
+    jpeg_encode_progressive)
 
 
 def test_progressive_decodes_pixel_identical_to_baseline_gray():
@@ -98,7 +100,7 @@ def test_progressive_nonunit_quant_matches_baseline():
 def test_bitwriter_matches_naive_emitter():
     """The vectorized token packer must be byte-identical to the
     per-bit emitter (stuffing, padding, empty stream included)."""
-    from ocr_gpu_services_spark.core.jpeg import _BitWriter
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg import _BitWriter
 
     class Naive:
         def __init__(self):

@@ -209,6 +209,23 @@ def test_v4_rc4_crypt_filter():
         extract_pdf(pc.decrypt_pdf(e))
 
 
+@pytest.mark.parametrize("encrypt", [128, "aesv2"])
+def test_indirect_length_on_encrypted_stream(encrypt):
+    """An indirect ``/Length N 0 R`` gives no byte range: decryption and
+    extraction both fall back to the ``stream…endstream`` scan, so the
+    file still extracts like its plaintext twin (RC4 in place, AESV2
+    through the rebuild path)."""
+    e = build_pdf([content_stream_ops(LINES)], encrypt=encrypt)
+    p = build_pdf([content_stream_ops(LINES)])
+    ind, n = re.subn(rb"/Length \d+ >>\nstream",
+                     b"/Length 99 0 R >>\nstream", e)
+    assert n == 1                    # the page's content stream
+    te, se = extract_pdf(ind)
+    tp, sp = extract_pdf(p)
+    assert te == tp and te
+    assert [s.text for s in se] == [s.text for s in sp]
+
+
 def test_aes_corrupt_stream_degrades():
     e = build_pdf([content_stream_ops(LINES)], encrypt="aesv2")
     # clobber the last ciphertext block of the first stream: PKCS#7

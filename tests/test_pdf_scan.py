@@ -349,7 +349,7 @@ def test_lzw_open_length_roundtrip_and_damage():
     import random as _random
 
     from ocr_gpu_services_spark.core.decompress import lzw_decode
-    from ocr_gpu_services_spark.core.tiff import lzw_encode
+    from ocr_gpu_services_spark.fixtures.codecs.tiff import lzw_encode
     rng = _random.Random(42)
     for n in (0, 1, 7, 300, 5000):
         data = bytes(rng.randrange(256) for _ in range(n))

@@ -10,6 +10,8 @@ from hypothesis import strategies as st
 from ocr_gpu_services_spark.core.extract import extract_document
 from ocr_gpu_services_spark.core.normalize import canonical_text, collapse_ws
 from ocr_gpu_services_spark.core.sniff import sniff_content_type
+from ocr_gpu_services_spark.fixtures.codecs import barcode as barcode_enc
+from ocr_gpu_services_spark.fixtures.codecs import qrcode as qrcode_enc
 
 MAGICS = [b"", b"%PDF-", b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff",
           b"<html>", b"<!DOCTYPE html>"]
@@ -57,7 +59,7 @@ def test_qr_roundtrip_property(payload):
     """Any printable payload up to MAX_PAYLOAD encodes to a QR Model 2
     symbol the pixel decoder reads back verbatim."""
     from ocr_gpu_services_spark.core import qrcode
-    assert qrcode.try_decode_region(qrcode.encode(payload)) == payload
+    assert qrcode.try_decode_region(qrcode_enc.encode(payload)) == payload
 
 
 @settings(max_examples=100, deadline=None)
@@ -69,7 +71,7 @@ def test_code39_roundtrip_property(payload):
     run-length decoder reads back verbatim, in both scan directions."""
     import numpy as np
     from ocr_gpu_services_spark.core import barcode
-    img = barcode.encode_code39(payload)
+    img = barcode_enc.encode_code39(payload)
     assert barcode.try_decode_code39(img) == payload
     assert barcode.try_decode_code39(
         np.ascontiguousarray(img[:, ::-1])) == payload

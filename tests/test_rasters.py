@@ -17,6 +17,10 @@ from ocr_gpu_services_spark.core.decompress import lzw_decode
 from ocr_gpu_services_spark.core.extract import decode_image
 from ocr_gpu_services_spark.core.sniff import (probe_image_format,
                                                sniff_content_type)
+from ocr_gpu_services_spark.fixtures.codecs import bmp as bmp_enc
+from ocr_gpu_services_spark.fixtures.codecs import ccitt as ccitt_enc
+from ocr_gpu_services_spark.fixtures.codecs import gif as gif_enc
+from ocr_gpu_services_spark.fixtures.codecs import tiff as tiff_enc
 
 _rs = np.random.RandomState(11)
 
@@ -27,7 +31,7 @@ _rs = np.random.RandomState(11)
 
 def test_bmp_gray_roundtrip():
     g = _rs.randint(0, 256, (37, 53)).astype(np.uint8)
-    payload = bmp.bmp_encode_gray8(g)
+    payload = bmp_enc.bmp_encode_gray8(g)
     assert np.array_equal(bmp.bmp_decode(payload), g)
     assert sniff_content_type(payload, None) == "image"
     assert probe_image_format(payload) == "bmp-gray8"
@@ -35,14 +39,14 @@ def test_bmp_gray_roundtrip():
 
 def test_bmp_rgb_roundtrip():
     c = _rs.randint(0, 256, (41, 29, 3)).astype(np.uint8)
-    payload = bmp.bmp_encode_rgb24(c)
+    payload = bmp_enc.bmp_encode_rgb24(c)
     assert np.array_equal(bmp.bmp_decode(payload), c)
     assert probe_image_format(payload) == "bmp-rgb24"
 
 
 def test_bmp_top_down_and_color_palette():
     g = _rs.randint(0, 256, (10, 16)).astype(np.uint8)
-    buf = bytearray(bmp.bmp_encode_gray8(g))
+    buf = bytearray(bmp_enc.bmp_encode_gray8(g))
     # flip height negative (top-down) and pre-flip the pixel rows
     h = struct.unpack_from("<i", buf, 22)[0]
     struct.pack_into("<i", buf, 22, -h)
@@ -52,7 +56,7 @@ def test_bmp_top_down_and_color_palette():
     buf[off:] = rows[::-1].tobytes()
     assert np.array_equal(bmp.bmp_decode(bytes(buf)), g)
     # non-gray palette decodes through the palette to RGB
-    buf = bytearray(bmp.bmp_encode_gray8(g))
+    buf = bytearray(bmp_enc.bmp_encode_gray8(g))
     pal_off = 54
     buf[pal_off:pal_off + 4] = bytes([10, 20, 30, 0])    # B G R for idx 0
     out = bmp.bmp_decode(bytes(buf))
@@ -64,12 +68,12 @@ def test_bmp_top_down_and_color_palette():
 def test_bmp_rejects():
     with pytest.raises(ValueError):
         bmp.bmp_decode(b"BM" + b"\x00" * 60)             # zero dims
-    buf = bytearray(bmp.bmp_encode_gray8(np.zeros((4, 4), np.uint8)))
+    buf = bytearray(bmp_enc.bmp_encode_gray8(np.zeros((4, 4), np.uint8)))
     struct.pack_into("<I", buf, 30, 1)                   # BI_RLE8
     with pytest.raises(ValueError):
         bmp.bmp_decode(bytes(buf))
     with pytest.raises(ValueError):
-        bmp.bmp_decode(bmp.bmp_encode_gray8(
+        bmp.bmp_decode(bmp_enc.bmp_encode_gray8(
             np.zeros((8, 8), np.uint8))[:-10])           # truncated
 
 
@@ -82,7 +86,7 @@ def test_packbits_known_vector():
     data = bytes([0xAA, 0xAA, 0xAA, 0x80, 0x00, 0x2A, 0xAA, 0xAA,
                   0xAA, 0xAA, 0x80, 0x00, 0x2A, 0x22, 0xAA, 0xAA,
                   0xAA, 0xAA, 0xAA, 0xAA, 0xAA, 0xAA, 0xAA, 0xAA])
-    enc = tiff.packbits_encode(data)
+    enc = tiff_enc.packbits_encode(data)
     assert tiff.packbits_decode(enc, len(data)) == data
     spec = bytes([0xFE, 0xAA, 0x02, 0x80, 0x00, 0x2A, 0xFD, 0xAA,
                   0x03, 0x80, 0x00, 0x2A, 0x22, 0xF7, 0xAA])
@@ -97,14 +101,14 @@ def test_lzw_roundtrip_structured_and_random():
         else:
             pat = bytes(_rs.randint(0, 4, 97).astype(np.uint8))
             data = (pat * (n // 97 + 1))[:n]
-        assert lzw_decode(tiff.lzw_encode(data), n) == data
+        assert lzw_decode(tiff_enc.lzw_encode(data), n) == data
 
 
 def test_lzw_width_growth_and_reset():
     # all-distinct pairs force steady table growth through every width
     # switch and past the 4094 reset
     data = bytes(range(256)) * 64
-    enc = tiff.lzw_encode(data)
+    enc = tiff_enc.lzw_encode(data)
     assert lzw_decode(enc, len(data)) == data
     assert len(enc) < len(data)          # repeated blocks do compress
     with pytest.raises(ValueError):
@@ -123,14 +127,14 @@ def test_lzw_width_growth_and_reset():
                                        ("lzw", False), ("lzw", True)])
 def test_tiff_roundtrip(be, comp, pred):
     g = _rs.randint(0, 256, (150, 201)).astype(np.uint8)
-    t = tiff.tiff_encode(g, comp, predictor=pred, big_endian=be)
+    t = tiff_enc.tiff_encode(g, comp, predictor=pred, big_endian=be)
     assert np.array_equal(tiff.tiff_decode(t), g)
     assert sniff_content_type(t, None) == "image"
     want = "tiff-gray" + {"none": "", "packbits": "-packbits",
                           "lzw": "-lzw"}[comp]
     assert probe_image_format(t) == want
     c = _rs.randint(0, 256, (131, 77, 3)).astype(np.uint8)
-    t = tiff.tiff_encode(c, comp, predictor=pred, big_endian=be)
+    t = tiff_enc.tiff_encode(c, comp, predictor=pred, big_endian=be)
     assert np.array_equal(tiff.tiff_decode(t), c)
     assert probe_image_format(t) == want.replace("gray", "rgb")
 
@@ -140,12 +144,12 @@ def test_tiff_strip_boundaries(h):
     g = _rs.randint(0, 256, (h, 80)).astype(np.uint8)
     for comp in ("none", "packbits", "lzw"):
         assert np.array_equal(
-            tiff.tiff_decode(tiff.tiff_encode(g, comp)), g), (h, comp)
+            tiff.tiff_decode(tiff_enc.tiff_encode(g, comp)), g), (h, comp)
 
 
 def test_tiff_white_is_zero():
     g = _rs.randint(0, 256, (20, 30)).astype(np.uint8)
-    buf = bytearray(tiff.tiff_encode(255 - g, "none"))
+    buf = bytearray(tiff_enc.tiff_encode(255 - g, "none"))
     ntags = struct.unpack_from("<H", buf, 8)[0]
     for k in range(ntags):
         off = 10 + 12 * k
@@ -156,7 +160,7 @@ def test_tiff_white_is_zero():
 
 def test_tiff_rejects():
     g = np.zeros((8, 8), np.uint8)
-    buf = bytearray(tiff.tiff_encode(g, "none"))
+    buf = bytearray(tiff_enc.tiff_encode(g, "none"))
     ntags = struct.unpack_from("<H", buf, 8)[0]
     for k in range(ntags):
         off = 10 + 12 * k
@@ -167,7 +171,7 @@ def test_tiff_rejects():
     with pytest.raises(ValueError):
         tiff.tiff_decode(b"II*\x00" + b"\xff" * 20)
     with pytest.raises(ValueError):
-        tiff.tiff_decode(tiff.tiff_encode(g, "lzw")[:-4])
+        tiff.tiff_decode(tiff_enc.tiff_encode(g, "lzw")[:-4])
 
 
 @settings(max_examples=40, deadline=None)
@@ -178,8 +182,8 @@ def test_tiff_roundtrip_property(seed, h, w, color, comp):
     rs = np.random.RandomState(seed)
     shape = (h, w, 3) if color else (h, w)
     img = rs.randint(0, 256, shape).astype(np.uint8)
-    t = tiff.tiff_encode(img, comp, predictor=(comp == "lzw"
-                                               and seed % 2 == 0))
+    t = tiff_enc.tiff_encode(img, comp, predictor=(comp == "lzw"
+                                                   and seed % 2 == 0))
     assert np.array_equal(tiff.tiff_decode(t), img)
 
 
@@ -203,7 +207,7 @@ def test_png_bilevel_roundtrip():
 @pytest.mark.parametrize("be", [False, True])
 def test_tiff_bilevel_roundtrip(comp, be):
     g = ((_rs.rand(130, 333) < 0.25) * 255).astype(np.uint8)
-    t = tiff.tiff_encode(g, comp, bilevel=True, big_endian=be)
+    t = tiff_enc.tiff_encode(g, comp, bilevel=True, big_endian=be)
     assert np.array_equal(tiff.tiff_decode(t), g)
     want = "tiff-bilevel" + {"none": "", "packbits": "-packbits",
                              "g4": "-g4"}[comp]
@@ -218,7 +222,7 @@ def test_g4_roundtrip_shapes():
         h, w = int(_rs.randint(1, 80)), int(_rs.randint(1, 200))
         cases.append(_rs.rand(h, w) < _rs.uniform(0.05, 0.95))
     for k, img in enumerate(cases):
-        enc = ccitt.g4_encode(img)
+        enc = ccitt_enc.g4_encode(img)
         assert np.array_equal(
             ccitt.g4_decode(enc, img.shape[1], img.shape[0]), img), k
 
@@ -232,13 +236,13 @@ def test_g4_hand_derived_vectors():
     from ocr_gpu_services_spark.core import ccitt
     img = np.zeros((1, 8), bool)
     img[0, 2:5] = True
-    assert ccitt.g4_encode(img) == bytes([0x2F, 0x40, 0x04, 0x00, 0x40])
+    assert ccitt_enc.g4_encode(img) == bytes([0x2F, 0x40, 0x04, 0x00, 0x40])
     img2 = np.zeros((2, 8), bool)
     img2[0, 2:5] = True
     img2[1, 3:6] = True
-    bits = "".join(f"{b:08b}" for b in ccitt.g4_encode(img2))
+    bits = "".join(f"{b:08b}" for b in ccitt_enc.g4_encode(img2))
     assert bits.startswith("0010111101" + "0110111")
-    assert np.array_equal(ccitt.g4_decode(ccitt.g4_encode(img2), 8, 2),
+    assert np.array_equal(ccitt.g4_decode(ccitt_enc.g4_encode(img2), 8, 2),
                           img2)
 
 
@@ -247,14 +251,14 @@ def test_g4_compresses_text_like_pages():
     img = np.zeros((400, 1000), bool)
     img[50:60, 100:900] = True
     img[100:350:12, 100:800] = True
-    enc = ccitt.g4_encode(img)
+    enc = ccitt_enc.g4_encode(img)
     assert len(enc) * 50 < img.size // 8          # >50x vs packed bits
 
 
 def test_g4_truncation_rejected():
     from ocr_gpu_services_spark.core import ccitt
     img = _rs.rand(30, 100) < 0.4
-    enc = ccitt.g4_encode(img)
+    enc = ccitt_enc.g4_encode(img)
     with pytest.raises(ValueError):
         ccitt.g4_decode(enc[:len(enc) // 2], 100, 30)
 
@@ -271,8 +275,8 @@ def test_bilevel_roundtrip_property(seed, h, w, kind):
                                                      png_encode_bilevel)
         assert np.array_equal(png_decode(png_encode_bilevel(g)), g)
     else:
-        t = tiff.tiff_encode(g, kind, bilevel=True,
-                             big_endian=bool(seed % 2))
+        t = tiff_enc.tiff_encode(g, kind, bilevel=True,
+                                 big_endian=bool(seed % 2))
         assert np.array_equal(tiff.tiff_decode(t), g)
 
 
@@ -282,13 +286,13 @@ def test_bilevel_roundtrip_property(seed, h, w, kind):
 
 def test_decode_image_dispatch():
     g = _rs.randint(0, 256, (25, 40)).astype(np.uint8)
-    assert np.array_equal(decode_image(bmp.bmp_encode_gray8(g)), g)
-    assert np.array_equal(decode_image(tiff.tiff_encode(g, "lzw")), g)
+    assert np.array_equal(decode_image(bmp_enc.bmp_encode_gray8(g)), g)
+    assert np.array_equal(decode_image(tiff_enc.tiff_encode(g, "lzw")), g)
     c = _rs.randint(0, 256, (25, 40, 3)).astype(np.uint8)
     from ocr_gpu_services_spark.core.color import rgb_to_gray
-    assert np.array_equal(decode_image(bmp.bmp_encode_rgb24(c)),
+    assert np.array_equal(decode_image(bmp_enc.bmp_encode_rgb24(c)),
                           rgb_to_gray(c))
-    assert np.array_equal(decode_image(tiff.tiff_encode(c, "packbits")),
+    assert np.array_equal(decode_image(tiff_enc.tiff_encode(c, "packbits")),
                           rgb_to_gray(c))
 
 
@@ -349,11 +353,11 @@ def test_adversarial_payloads_degrade_never_crash():
     get_atlas()
     rs = np.random.RandomState(17)
     g = ((rs.rand(60, 90) < 0.3) * 255).astype(np.uint8)
-    from ocr_gpu_services_spark.core.gif import gif_encode
+    from ocr_gpu_services_spark.fixtures.codecs.gif import gif_encode
     seeds = [
-        tiff.tiff_encode(g, "lzw", predictor=True),
-        tiff.tiff_encode(g, "g4", bilevel=True),
-        bmp.bmp_encode_gray8(g),
+        tiff_enc.tiff_encode(g, "lzw", predictor=True),
+        tiff_enc.tiff_encode(g, "g4", bilevel=True),
+        bmp_enc.bmp_encode_gray8(g),
         gif_encode(g, interlace=True),
     ]
     for seed in seeds:
@@ -368,7 +372,7 @@ def test_adversarial_payloads_degrade_never_crash():
                                     rs.randint(20, 2000)).astype(np.uint8))
             extract_document(magic + body, None)
     # the explicit giant-header case: must raise, not allocate
-    t = bytearray(tiff.tiff_encode(g, "g4", bilevel=True))
+    t = bytearray(tiff_enc.tiff_encode(g, "g4", bilevel=True))
     import struct
     ntags = struct.unpack_from("<H", t, 8)[0]
     for k in range(ntags):
@@ -388,7 +392,7 @@ def test_gif_gray_roundtrip_and_seam():
     from ocr_gpu_services_spark.core import gif
     g = _rs.randint(0, 256, (41, 67)).astype(np.uint8)
     for il in (False, True):
-        payload = gif.gif_encode(g, interlace=il)
+        payload = gif_enc.gif_encode(g, interlace=il)
         assert sniff_content_type(payload, None) == "image"
         assert probe_image_format(payload) == ("gif-gray-i" if il
                                                else "gif-gray")
@@ -406,7 +410,7 @@ def test_gif_color_roundtrip_palette_and_gray_back():
     g = _rs.randint(0, 256, (53, 61)).astype(np.uint8)
     rgb = colorize_exact(g, random.Random(5))
     for il in (False, True):
-        payload = gif.gif_encode(rgb, interlace=il)
+        payload = gif_enc.gif_encode(rgb, interlace=il)
         assert probe_image_format(payload) == ("gif-rgb-i" if il
                                                else "gif-rgb")
         out = gif.gif_decode(payload)
@@ -421,14 +425,14 @@ def test_gif_neutral_color_page_probes_rgb_decodes_gray():
     the encode path) while the decoder returns the exact 2-D gray."""
     from ocr_gpu_services_spark.core import gif
     g = ((_rs.rand(30, 40) < 0.5) * 255).astype(np.uint8)
-    payload = gif.gif_encode(np.dstack([g, g, g]))
+    payload = gif_enc.gif_encode(np.dstack([g, g, g]))
     assert probe_image_format(payload) == "gif-rgb"
     out = gif.gif_decode(payload)
     assert out.ndim == 2 and np.array_equal(out, g)
 
 
 def test_gif_lzw_width_growth_and_table_reset():
-    from ocr_gpu_services_spark.core.gif import _lzw_encode
+    from ocr_gpu_services_spark.fixtures.codecs.gif import _lzw_encode
     # noise forces code-width growth 9->12 and a full-table reset
     data = bytes(_rs.randint(0, 256, 150000,
                              dtype=np.int64).astype(np.uint8))
@@ -444,7 +448,7 @@ def test_gif_lzw_width_growth_and_table_reset():
 def test_gif_extension_blocks_skipped():
     from ocr_gpu_services_spark.core import gif
     g = _rs.randint(0, 256, (9, 13)).astype(np.uint8)
-    payload = bytearray(gif.gif_encode(g))
+    payload = bytearray(gif_enc.gif_encode(g))
     # splice a Graphic Control Extension before the image descriptor
     desc = payload.index(0x2C, 13 + 768)
     gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
@@ -456,7 +460,7 @@ def test_gif_extension_blocks_skipped():
 def test_gif_malformed_rejects():
     from ocr_gpu_services_spark.core import gif
     g = _rs.randint(0, 256, (8, 8)).astype(np.uint8)
-    good = gif.gif_encode(g)
+    good = gif_enc.gif_encode(g)
     with pytest.raises(ValueError):
         gif.gif_decode(good[:20])                 # truncated
     with pytest.raises(ValueError):
@@ -524,7 +528,7 @@ def test_tiff_skips_non_integer_tag_types():
     Software raised 'unsupported tag type' and the row degraded."""
     g = (np.arange(40 * 60, dtype=np.uint32) * 37 % 251).astype(np.uint8)
     g = g.reshape(40, 60)
-    plain = tiff.tiff_encode(g, "lzw", predictor=True)
+    plain = tiff_enc.tiff_encode(g, "lzw", predictor=True)
     tagged = _with_scanner_tags(plain)
     assert np.array_equal(tiff.tiff_decode(tagged), g)
 
@@ -533,7 +537,7 @@ def test_g4_crafted_dimensions_capped():
     """A tiny all-white G4 stream with huge declared dimensions must
     raise (ValueError -> error column), never allocate the 10 GB page."""
     from ocr_gpu_services_spark.core import ccitt
-    small = ccitt.g4_encode(np.zeros((4, 64), bool))
+    small = ccitt_enc.g4_encode(np.zeros((4, 64), bool))
     with pytest.raises(ValueError):
         ccitt.g4_decode(small, 100000, 100000)
 
@@ -548,5 +552,5 @@ def test_g4_halftone_rows_linear_roundtrip():
     g[:, ::2] = True
     g[1::2, 1::4] = False
     t0 = time.time()
-    assert np.array_equal(ccitt.g4_decode(ccitt.g4_encode(g), 1728, 48), g)
+    assert np.array_equal(ccitt.g4_decode(ccitt_enc.g4_encode(g), 1728, 48), g)
     assert time.time() - t0 < 5.0

@@ -1,4 +1,4 @@
-"""VP8 fixture encoder (core/vp8_write.py): determinism, the q-step
+"""VP8 fixture encoder (fixtures/codecs/vp8.py): determinism, the q-step
 error contract, libwebp acceptance (streams must be conformant, not
 merely self-consistent), and the closed-loop identity between our
 decoder and libwebp on encoder output."""
@@ -13,8 +13,8 @@ from ocr_gpu_services_spark.core.color import rgb_to_gray
 from ocr_gpu_services_spark.core.extract import decode_image
 from ocr_gpu_services_spark.core.sniff import (probe_image_format,
                                                sniff_content_type)
-from ocr_gpu_services_spark.core.vp8_write import vp8_encode_gray
 from ocr_gpu_services_spark.core.webp import webp_decode
+from ocr_gpu_services_spark.fixtures.codecs.vp8 import vp8_encode_gray
 
 _rs = np.random.RandomState(59)
 
@@ -95,3 +95,21 @@ def test_seam_and_rejects():
         vp8_encode_gray(np.zeros((4, 4, 3), np.uint8))   # not gray
     with pytest.raises(ValueError):
         vp8_encode_gray(np.zeros((0, 4), np.uint8))      # empty
+
+
+def test_encoder_idct_equals_decoder_loop():
+    """The encoder's own vectorized §14.3 inverse transform equals the
+    decoder's integer loop (the reference) on random blocks from tiny
+    to saturating magnitudes, so the closed loop reconstructs exactly
+    what a conformant decoder does."""
+    from ocr_gpu_services_spark.core.vp8 import _idct4x4_add
+    from ocr_gpu_services_spark.fixtures.codecs.vp8 import _idct_add
+    rs = np.random.RandomState(67)
+    for _ in range(2000):
+        scale = 1 << rs.randint(1, 16)
+        c = (rs.randint(-scale, scale, 16) * (rs.rand(16) < 0.5)).tolist()
+        want = rs.randint(0, 256, (6, 6)).astype(np.uint8)
+        got = want.copy()
+        _idct4x4_add(c, want, 1, 1)
+        _idct_add(c, got, 1, 1)
+        assert np.array_equal(want, got), c

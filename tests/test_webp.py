@@ -15,6 +15,7 @@ from ocr_gpu_services_spark.core import webp
 from ocr_gpu_services_spark.core.extract import decode_image
 from ocr_gpu_services_spark.core.sniff import (probe_image_format,
                                                sniff_content_type)
+from ocr_gpu_services_spark.fixtures.codecs import webp as webp_enc
 
 _rs = np.random.RandomState(23)
 
@@ -66,7 +67,7 @@ def _lw_decode(data):
 
 def test_roundtrip_gray_and_seam():
     g = _rs.randint(0, 256, (43, 61)).astype(np.uint8)
-    payload = webp.vp8l_encode(g)
+    payload = webp_enc.vp8l_encode(g)
     assert sniff_content_type(payload, None) == "image"
     assert probe_image_format(payload) == "webp-vp8l"
     out = webp.webp_decode(payload)
@@ -78,15 +79,15 @@ def test_roundtrip_gray_and_seam():
 
 def test_roundtrip_rgb():
     c = _rs.randint(0, 256, (29, 37, 3)).astype(np.uint8)
-    out = webp.webp_decode(webp.vp8l_encode(c))
+    out = webp.webp_decode(webp_enc.vp8l_encode(c))
     assert np.array_equal(out, c)
 
 
 def test_dimension_limits_and_pixel_cap():
     with pytest.raises(ValueError):
-        webp.vp8l_encode(np.zeros((1, 1 << 15), np.uint8))
+        webp_enc.vp8l_encode(np.zeros((1, 1 << 15), np.uint8))
     # crafted 16384x16384 header trips the pixel cap before allocation
-    bw = webp._BitWriter()
+    bw = webp_enc._BitWriter()
     bw.write(webp._VP8L_SIG, 8)
     bw.write((1 << 14) - 1, 14)
     bw.write((1 << 14) - 1, 14)
@@ -125,7 +126,7 @@ def test_libwebp_streams_decode_exact():
 def test_our_encoder_decodes_under_libwebp():
     for img in (_rs.randint(0, 256, (31, 45, 3)).astype(np.uint8),
                 _rs.randint(0, 256, (8, 200)).astype(np.uint8)):
-        enc = webp.vp8l_encode(img)
+        enc = webp_enc.vp8l_encode(img)
         got = _lw_decode(enc)
         want = img if img.ndim == 3 else np.stack([img] * 3, axis=2)
         assert np.array_equal(got, want)
@@ -145,7 +146,7 @@ def _probe_stream(w, h, target, dist_value):
         raise ValueError(v)
 
     pc, extra, eb = parts(dist_value)
-    bw = webp._BitWriter()
+    bw = webp_enc._BitWriter()
     bw.write(webp._VP8L_SIG, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -163,10 +164,10 @@ def _probe_stream(w, h, target, dist_value):
     bw.write_code(0, 1)
     bw.write_code(0b11, 2)
     bw.write(23 - 11, 7)
-    webp._write_literal_tree(bw, 256)      # red
-    webp._write_literal_tree(bw, 256)      # blue
-    webp._write_single_tree(bw, 255)       # alpha
-    webp._write_single_tree(bw, pc)        # distance
+    webp_enc._write_literal_tree(bw, 256)      # red
+    webp_enc._write_literal_tree(bw, 256)      # blue
+    webp_enc._write_single_tree(bw, 255)       # alpha
+    webp_enc._write_single_tree(bw, pc)        # distance
     for i in range(w * h):
         if i == target:
             bw.write_code(0, 1)            # length sym -> length 1
@@ -216,7 +217,7 @@ def test_distance_map_matches_libwebp():
 
 def test_animated_first_frame():
     g = _rs.randint(0, 256, (21, 33)).astype(np.uint8)
-    payload = webp.vp8l_encode(g, animated=True)
+    payload = webp_enc.vp8l_encode(g, animated=True)
     assert payload[12:16] == b"VP8X"
     assert sniff_content_type(payload, None) == "image"
     assert probe_image_format(payload) == "webp-vp8l-anim"
@@ -256,7 +257,7 @@ def test_adversarial_payloads_degrade_never_crash():
     get_atlas()
     rs = np.random.RandomState(31)
     g = ((rs.rand(40, 70) < 0.3) * 255).astype(np.uint8)
-    seed = webp.vp8l_encode(g)
+    seed = webp_enc.vp8l_encode(g)
     for _ in range(80):
         m = bytearray(seed)
         for _k in range(rs.randint(1, 12)):

@@ -1,10 +1,12 @@
 """Per-row digest of what the extraction kernel produces, for same-bytes
 checks: run it before and after a change and ``diff`` the outputs.
 
-Each output line is ``<url> <sha256>``, the hash taken over
-(content_type, extracted_text, error, probe_image_format, spans) from
-``core.extract.extract_route`` and ``core.sniff.probe_image_format``.
-Rows come out in input order.
+Each output line is ``<url> <payload sha256> <output sha256>``.  The
+first hash is over the input payload bytes (empty for a NULL payload),
+so one diff also shows that the fixture generator wrote the same
+inputs.  The second is over (content_type, extracted_text, error,
+probe_image_format, spans) from ``core.extract.extract_route`` and
+``core.sniff.probe_image_format``.  Rows come out in input order.
 
 Usage:
   python tools/route_digest.py tiny|small         # fixture corpus, seed 7
@@ -52,7 +54,8 @@ def main(argv: list[str]) -> int:
         print(__doc__.strip(), file=sys.stderr)
         return 2
     for url, payload, text in rows(argv[0]):
-        print(url, digest(payload, text), flush=True)
+        print(url, hashlib.sha256(payload or b"").hexdigest(),
+              digest(payload, text), flush=True)
     return 0
 
 
