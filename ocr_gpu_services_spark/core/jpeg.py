@@ -1,23 +1,27 @@
-"""Baseline JPEG (ITU T.81) decoder, from scratch.
+"""JPEG (ITU T.81) decoder, from scratch: baseline and progressive.
 
-The reference's OCR endpoints accept any PIL-decodable upload — JPEG
-first among them (/root/reference/src/api/v1/routers/ocr.py uploads,
-classification.py:31 ``Image.open``).  Real crawls are JPEG-heavy, so
-S3 (image decode) needs the format; this module implements the public
-baseline subset from the spec: SOI/APP0/DQT/SOF0/DHT/SOS/EOI segments,
-8x8 IDCT, zigzag, DC prediction, AC run-length with ZRL/EOB, byte
-stuffing, gray or YCbCr components.  Huffman tables are built from the
-stream's DHT segments, so any baseline stream decodes.
+S3 (image decode) needs JPEG, the format the reference's OCR endpoints
+see most, and scan-to-PDF tools embed it as /DCTDecode XObjects;
+``jpeg_decode`` serves ``decode_image`` and core/pdf_extract alike.
+Both modes run one pipeline:
 
-Performance honesty: Huffman entropy decode is a sequential bit loop —
-the one place pure Python is genuinely slow (~0.2 s/page).  JPEG rows
-therefore live in the correctness corpus (tiny goldens, registry
-oracle), not the throughput bench mix; a production deployment swaps
-``jpeg_decode`` for a libjpeg binding at this exact seam with no other
-pipeline change.
+1. parse: ``_segments`` walks the markers; ``_parse`` turns an 8-bit
+   gray or YCbCr SOF0/SOF2 frame into components, quant tables and
+   scans, each holding the Huffman tables in force at its SOS;
+2. entropy decode, the only step that differs by mode: ``_decode_scan``
+   for the one sequential scan, ``core/jpeg_progressive.decode_scans``
+   for the Annex G scans; both fill dense coefficient planes (natural
+   8x8 order, raster block order over the MCU-padded component grids);
+3. one reconstruction: dequantize, batched 8x8 IDCT, plane assembly,
+   chroma upsample (4:4:4, 4:2:2, 4:2:0), YCbCr->RGB.
+
+Malformed streams raise ValueError or IndexError, so the row lands in
+the kernel's ``error`` column and pdf_extract skips just that image.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 
@@ -38,6 +42,40 @@ _ZIGZAG = np.array([
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63])
+_UNZIGZAG = np.argsort(_ZIGZAG)         # natural index -> zigzag index
+
+
+# ---------------------------------------------------------------------------
+# marker walk
+# ---------------------------------------------------------------------------
+
+# a marker other than 0xFF00 stuffing or RST0..RST7
+_SCAN_END = re.compile(rb"\xff[^\x00\xd0-\xd7]")
+
+
+def _segments(data: bytes):
+    """Yield ``(marker, body, entropy)`` for each marker segment after
+    SOI, up to EOI or the end of ``data``.  ``entropy`` is the
+    entropy-coded data after an SOS header (empty for other markers):
+    a scan ends at the first marker that is neither 0xFF00 stuffing nor
+    RSTn.  This is the only JPEG marker walk in the codecs."""
+    i = 2
+    n = len(data)
+    while i < n:
+        if data[i] != 0xFF:
+            raise ValueError("bad marker")
+        marker = data[i + 1]
+        if marker == 0xD9:
+            return
+        body_end = i + 2 + int.from_bytes(data[i + 2:i + 4], "big")
+        body = data[i + 4:body_end]
+        i = body_end
+        entropy = b""
+        if marker == 0xDA:
+            m = _SCAN_END.search(data, i)
+            i = m.start() if m else n
+            entropy = data[body_end:i]
+        yield marker, body, entropy
 
 
 # ---------------------------------------------------------------------------
@@ -53,17 +91,12 @@ def exif_orientation(data: bytes) -> int:
     malformed (never raises — a bad EXIF block must not degrade an
     otherwise decodable image)."""
     import struct
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            return 1
-        marker = data[i + 1]
-        if marker in (0xDA, 0xD9):
-            return 1
-        seg_len = int.from_bytes(data[i + 2:i + 4], "big")
-        if marker == 0xE1 and data[i + 4:i + 10] == b"Exif\x00\x00":
-            t = data[i + 10:i + 2 + seg_len]
-            try:
+    try:
+        for marker, body, _entropy in _segments(data):
+            if marker == 0xDA:
+                return 1
+            if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
+                t = body[6:]
                 if t[:4] == MAGIC_TIFF_LE:
                     e = "<"
                 elif t[:4] == MAGIC_TIFF_BE:
@@ -79,10 +112,9 @@ def exif_orientation(data: bytes) -> int:
                         v = struct.unpack_from(
                             e + "H", t, ifd + 2 + 12 * k + 8)[0]
                         return v if 1 <= v <= 8 else 1
-            except (struct.error, IndexError):
                 return 1
-            return 1
-        i += 2 + seg_len
+    except (struct.error, ValueError, IndexError):
+        pass
     return 1
 
 
@@ -109,16 +141,12 @@ def apply_exif_orientation(img: np.ndarray, o: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# decode
+# entropy decode
 # ---------------------------------------------------------------------------
 #
-# The entropy decoder is table-driven: a 65536-entry LUT maps the next
-# 16 bits of the stream directly to (code length << 8 | symbol), so each
-# Huffman symbol costs one list index instead of up to 16 read_bit calls
-# (same vectorization playbook as the OCR decode loop).  Coefficients
-# are accumulated as flat (block, zigzag-k, value) triples and scattered
-# into an (nblocks, 64) array once; the IDCT runs as a single batched
-# float64 matmul, bit-identical to the per-block product.
+# Table-driven: a 65536-entry LUT maps the next 16 bits of the stream
+# directly to (code length << 8 | symbol), so each Huffman symbol costs
+# one list index instead of up to 16 read_bit calls.
 
 from functools import lru_cache
 
@@ -228,42 +256,24 @@ def _decode_scan(scan: bytes, schedule: list[tuple], n_mcus: int,
     return out
 
 
-def _idct_blocks(bidx, kidx, vals, q: np.ndarray, nblocks: int
-                 ) -> np.ndarray:
-    """Scatter coefficient triples, dequantize, batched IDCT -> float64
-    (nblocks, 8, 8) pixel blocks (still level-shifted by -128)."""
-    coefs = np.zeros((nblocks, 64), dtype=np.float64)
-    kk = np.asarray(kidx, dtype=np.int64)
-    coefs[np.asarray(bidx, dtype=np.int64), _ZIGZAG[kk]] = \
-        np.asarray(vals, dtype=np.float64) * q[kk]
-    return _DCT.T @ coefs.reshape(-1, 8, 8) @ _DCT
-
-
-def jpeg_decode(data: bytes) -> np.ndarray:
-    """Decode a JPEG: grayscale streams return an (H, W) uint8 array;
-    3-component YCbCr streams (4:4:4, 4:2:2, 4:2:0) return an
-    (H, W, 3) uint8 RGB array.  Progressive streams (SOF2) dispatch to
-    core/jpeg_progressive; malformed ones raise so the extraction
-    kernel lands the row in its ``error`` column instead of
-    crashing."""
+def _parse(data: bytes):
+    """Frame and scans of a baseline (SOF0) or progressive (SOF2)
+    stream: ``(progressive, h, w, comps, qt, scans)``.  ``comps`` lists
+    (cid, hs, vs, tq) in SOF order; each scan is (scan components, Ss,
+    Se, Ah, Al, restart interval, entropy bytes) and its components are
+    (cid, dc_lut, ac_lut) with the Huffman tables in force at its SOS
+    (DHT may redefine a slot between progressive scans)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
-    i = 2
-    qt = {}
+    progressive = False
     h = w = None
-    comps: list[tuple] = []      # (cid, hs, vs, tq) in SOF order
-    dc_tabs, ac_tabs = {}, {}
-    scan = None
-    scan_tabs: dict[int, tuple] = {}
+    comps: list[tuple] = []
+    qt: dict[int, np.ndarray] = {}
+    dc_tabs: dict[int, list[int]] = {}
+    ac_tabs: dict[int, list[int]] = {}
     restart_interval = 0
-    while i < len(data):
-        if data[i] != 0xFF:
-            raise ValueError("bad marker")
-        marker = data[i + 1]
-        if marker == 0xD9:
-            break
-        seg_len = int.from_bytes(data[i + 2:i + 4], "big")
-        seg = data[i + 4:i + 2 + seg_len]
+    scans: list[tuple] = []
+    for marker, seg, entropy in _segments(data):
         if marker == 0xDB:                       # DQT
             j = 0
             while j < len(seg):
@@ -273,21 +283,24 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 qt[tq] = np.frombuffer(seg[j + 1:j + 65],
                                        dtype=np.uint8).astype(np.int32)
                 j += 65
-        elif marker == 0xC0:                     # SOF0 baseline
+        elif marker in (0xC0, 0xC2):             # SOF0 / SOF2
+            progressive = marker == 0xC2
             h = int.from_bytes(seg[1:3], "big")
             w = int.from_bytes(seg[3:5], "big")
             nc = seg[5]
             if seg[0] != 8 or nc not in (1, 3):
-                raise ValueError("only 8-bit gray/YCbCr baseline")
+                raise ValueError("only 8-bit gray/YCbCr " + (
+                    "progressive" if progressive else "baseline"))
+            comps = []
             for c in range(nc):
                 cid, samp, tq = seg[6 + 3 * c:9 + 3 * c]
-                hs_, vs_ = samp >> 4, samp & 0xF
+                hs, vs = samp >> 4, samp & 0xF
                 # zero nibbles divide-by-zero at the MCU grid; JPEG
                 # allows 1..4 only.  ValueError so pdf_extract's
                 # per-image skip catches it
-                if not (1 <= hs_ <= 4 and 1 <= vs_ <= 4):
+                if not (1 <= hs <= 4 and 1 <= vs <= 4):
                     raise ValueError("invalid sampling factor")
-                comps.append((cid, hs_, vs_, tq))
+                comps.append((cid, hs, vs, tq))
             if nc == 1:
                 # T.81 A.2: a single-component scan is NON-interleaved
                 # (MCU = one data unit, blocks in raster order over the
@@ -296,11 +309,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 # MCU grid would silently SCRAMBLE blocks in 2x2-MCU
                 # order for streams declaring e.g. 0x22
                 comps = [(comps[0][0], 1, 1, comps[0][3])]
-        elif marker == 0xC2:                     # SOF2 progressive
-            from .jpeg_progressive import decode_progressive
-            return decode_progressive(data)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+        elif 0xC1 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
             raise ValueError("non-baseline JPEG unsupported")
         elif marker == 0xC4:                     # DHT
             j = 0
@@ -309,30 +318,46 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                 counts = tuple(seg[j + 1:j + 17])
                 nvals = sum(counts)
                 values = tuple(seg[j + 17:j + 17 + nvals])
-                tab = _build_peek_lut(counts, values)
-                (dc_tabs if tc == 0 else ac_tabs)[th] = tab
+                (dc_tabs if tc == 0 else ac_tabs)[th] = \
+                    _build_peek_lut(counts, values)
                 j += 17 + nvals
         elif marker == 0xDD:                     # DRI
             restart_interval = int.from_bytes(seg[:2], "big")
         elif marker == 0xDA:                     # SOS
             ns = seg[0]
-            for c in range(ns):
-                cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
-                if tabs >> 4 not in dc_tabs or tabs & 0xF not in ac_tabs:
-                    raise ValueError("scan references undefined "
-                                     "Huffman table")
-                scan_tabs[cid] = (dc_tabs[tabs >> 4], ac_tabs[tabs & 0xF])
-            scan_start = i + 2 + seg_len
-            end = data.find(b"\xff\xd9", scan_start)
-            scan = data[scan_start:end if end >= 0 else len(data)]
-            break
-        i += 2 + seg_len
-    if h is None or scan is None or not comps:
+            scomps = [(seg[1 + 2 * c], dc_tabs.get(seg[2 + 2 * c] >> 4),
+                       ac_tabs.get(seg[2 + 2 * c] & 0xF))
+                      for c in range(ns)]
+            if progressive:
+                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
+                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
+                if (ss == 0) != (se == 0) or se > 63 or \
+                        (ah != 0 and ah != al + 1):
+                    raise ValueError("invalid progressive scan header")
+            else:
+                # a sequential scan codes the full band, whatever
+                # its header says
+                ss, se, ah, al = 0, 63, 0, 0
+            # a scan needs its DC table when it Huffman-codes DC
+            # magnitudes (DC refinements read raw bits) and its AC table
+            # when it codes an AC band (first and refinement alike)
+            if any((ss == 0 and ah == 0 and dc is None)
+                   or (se and ac is None) for _cid, dc, ac in scomps):
+                raise ValueError("scan references undefined Huffman table")
+            scans.append((scomps, ss, se, ah, al, restart_interval,
+                          entropy))
+            if not progressive:
+                break                            # one sequential scan
+    if h is None or not comps or not scans:
         raise ValueError("truncated JPEG")
-    # crafted-header guard, same cap as the other raster decoders
+    # crafted-header guard (same cap as the other raster decoders): a
+    # few-hundred-byte stream declaring 65535x65535 would otherwise
+    # allocate ~17 GB of coefficient planes per component before any
+    # entropy data is validated
     if h <= 0 or w <= 0 or h * w > MAX_PIXELS:
         raise ValueError(f"implausible JPEG dimensions {w}x{h}")
-    if any(cid not in scan_tabs for cid, _h, _v, _t in comps):
+    if not progressive and \
+            {cid for cid, *_ in comps} - {cid for cid, *_ in scans[0][0]}:
         # a 3-component frame whose SOS covers fewer components is a
         # multi-scan sequential file this single-scan decoder does not
         # handle — reject cleanly instead of KeyError
@@ -343,23 +368,58 @@ def jpeg_decode(data: bytes) -> np.ndarray:
     vmax = max(c[2] for c in comps)
     if any(hmax % c[1] or vmax % c[2] for c in comps):
         raise ValueError("unsupported sampling factors")
+    return progressive, h, w, comps, qt, scans
+
+
+def _baseline_coefs(scan: tuple, comps: list[tuple], mcus_x: int,
+                    mcus_y: int) -> list[np.ndarray]:
+    """Entropy-decode the sequential scan into per-component dense
+    coefficient planes: (blocks, 64) int32, natural 8x8 order, in raster
+    block order over the MCU-padded component grid."""
+    scomps, _ss, _se, _ah, _al, restart_interval, entropy = scan
+    tabs = {cid: (dc_lut, ac_lut) for cid, dc_lut, ac_lut in scomps}
+    schedule = [(ci, *tabs[cid])
+                for ci, (cid, hs, vs, _tq) in enumerate(comps)
+                for _ in range(hs * vs)]
+    per_comp = _decode_scan(entropy, schedule, mcus_x * mcus_y,
+                            len(comps), restart_interval)
+    out = []
+    for (bidx, kidx, vals), (_cid, hs, vs, _tq) in zip(per_comp, comps):
+        # _decode_scan numbers blocks in MCU order (MCU, then row and
+        # column within it); raster[i] is the i-th block's raster index
+        raster = np.arange(mcus_y * vs * mcus_x * hs).reshape(
+            mcus_y, vs, mcus_x, hs).transpose(0, 2, 1, 3).ravel()
+        coef = np.zeros((raster.size, 64), dtype=np.int32)
+        # via int64: a crafted DC sum can leave int32, and numpy rejects
+        # out-of-range Python ints with an OverflowError (arrays wrap)
+        coef[raster[np.asarray(bidx, dtype=np.int64)],
+             _ZIGZAG[np.asarray(kidx, dtype=np.int64)]] = \
+            np.asarray(vals, dtype=np.int64)
+        out.append(coef)
+    return out
+
+
+def jpeg_decode(data: bytes) -> np.ndarray:
+    """Decode a baseline or progressive JPEG: grayscale streams return
+    an (H, W) uint8 array; 3-component YCbCr streams (4:4:4, 4:2:2,
+    4:2:0) return an (H, W, 3) uint8 RGB array."""
+    progressive, h, w, comps, qt, scans = _parse(data)
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    schedule = []
-    for ci, (cid, hs, vs, _tq) in enumerate(comps):
-        dc_lut, ac_lut = scan_tabs[cid]
-        for _ in range(hs * vs):
-            schedule.append((ci, dc_lut, ac_lut))
-    per_comp = _decode_scan(scan, schedule, mcus_x * mcus_y,
-                            len(comps), restart_interval)
+    if progressive:
+        from .jpeg_progressive import decode_scans
+        coefs = decode_scans(scans, comps, h, w, mcus_x, mcus_y)
+    else:
+        coefs = _baseline_coefs(scans[0], comps, mcus_x, mcus_y)
     planes = []
-    for ci, (cid, hs, vs, tq) in enumerate(comps):
-        bidx, kidx, vals = per_comp[ci]
-        nblocks = mcus_x * mcus_y * hs * vs
-        blocks = _idct_blocks(bidx, kidx, vals, qt[tq], nblocks)
-        plane = blocks.reshape(mcus_y, mcus_x, vs, hs, 8, 8) \
-            .transpose(0, 2, 4, 1, 3, 5) \
-            .reshape(mcus_y * vs * 8, mcus_x * hs * 8)
+    for coef, (_cid, hs, vs, tq) in zip(coefs, comps):
+        bw, bh = mcus_x * hs, mcus_y * vs
+        deq = coef * qt[tq][_UNZIGZAG].astype(np.float64)
+        blocks = _DCT.T @ deq.reshape(-1, 8, 8) @ _DCT
+        plane = blocks.reshape(bh, bw, 8, 8) \
+            .transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
         if hs != hmax or vs != vmax:             # chroma upsample
             plane = plane.repeat(vmax // vs, axis=0) \
                          .repeat(hmax // hs, axis=1)

@@ -1,9 +1,8 @@
-"""Progressive JPEG (ITU T.81 Annex G) decoder.
+"""Progressive JPEG (ITU T.81 Annex G) scan decoders.
 
-Progressive streams are common on the real web (libjpeg's default
-scan script for web export), and the reference accepts them through
-cv2/PIL (/root/reference/src/api/v1/utils.py:15-18), so S3 breadth
-needs the format.  Everything here derives from the published spec:
+core/jpeg parses the stream (marker walk, frame, scans with the
+Huffman tables in force at each SOS) and reconstructs pixels; this
+module holds only the entropy decoding of progressive scans:
 
 * spectral selection: AC coefficients arrive in per-band scans
   (Ss..Se), always single-component; DC scans (Ss=Se=0) may be
@@ -15,21 +14,14 @@ needs the format.  Everything here derives from the published spec:
   plain correction bits appended after each symbol
 * EOB runs: a run of blocks whose remaining band is all zero is coded
   once as an EOBn symbol with n extra bits
-* Huffman tables may be redefined (DHT) between scans; DRI restart
-  intervals reset DC predictors and EOB runs
-
-The decoder accumulates per-component dense coefficient planes across
-scans and finishes with the shared dequant + batched-IDCT path from
-core/jpeg.
+* DRI restart intervals reset DC predictors and EOB runs
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .jpeg import (_DCT, _ZIGZAG, _build_peek_lut, _sync_restart_pos,
-                   _unstuffed_u32)
-from .sniff import MAX_PIXELS
+from .jpeg import _UNZIGZAG, _sync_restart_pos, _unstuffed_u32
 
 
 # ---------------------------------------------------------------------------
@@ -75,128 +67,17 @@ def _extend(v: int, s: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# decoder
+# scan decoders
 # ---------------------------------------------------------------------------
 
-def _scan_end(data: bytes, start: int) -> int:
-    """Index just past the entropy-coded segment starting at ``start``
-    (stops at the first marker that is not a stuffed byte or RSTn)."""
-    i = start
-    while True:
-        j = data.find(b"\xff", i)
-        if j < 0 or j + 1 >= len(data):
-            return len(data)
-        nxt = data[j + 1]
-        if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-            i = j + 2
-            continue
-        return j
-
-
-def decode_progressive(data: bytes) -> np.ndarray:
-    """Full progressive decode: gray -> (H, W) uint8, YCbCr ->
-    (H, W, 3) uint8 RGB (same contract as core/jpeg.jpeg_decode)."""
-    i = 2
-    qt: dict[int, np.ndarray] = {}
-    dc_tabs: dict[int, list[int]] = {}
-    ac_tabs: dict[int, list[int]] = {}
-    comps: list[tuple] = []          # (cid, hs, vs, tq)
-    h = w = None
-    ri = 0
-    scans = []                       # (scan_comps, Ss, Se, Ah, Al, ri, bytes)
-    while i < len(data):
-        if data[i] != 0xFF:
-            raise ValueError("bad marker")
-        marker = data[i + 1]
-        if marker == 0xD9:
-            break
-        seg_len = int.from_bytes(data[i + 2:i + 4], "big")
-        seg = data[i + 4:i + 2 + seg_len]
-        if marker == 0xDB:
-            j = 0
-            while j < len(seg):
-                pq, tq = seg[j] >> 4, seg[j] & 0xF
-                if pq:
-                    raise ValueError("16-bit quant unsupported")
-                qt[tq] = np.frombuffer(seg[j + 1:j + 65],
-                                       dtype=np.uint8).astype(np.int32)
-                j += 65
-        elif marker == 0xC2:
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            nc = seg[5]
-            if seg[0] != 8 or nc not in (1, 3):
-                raise ValueError("only 8-bit gray/YCbCr progressive")
-            for c in range(nc):
-                cid, samp, tq = seg[6 + 3 * c:9 + 3 * c]
-                hs, vs = samp >> 4, samp & 0xF
-                # a zero nibble would divide-by-zero at the MCU grid;
-                # JPEG allows 1..4 only.  ValueError (not the raw
-                # ZeroDivisionError) so pdf_extract's per-image skip
-                # catches it
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    raise ValueError("invalid sampling factor")
-                comps.append((cid, hs, vs, tq))
-        elif marker == 0xC4:
-            j = 0
-            while j < len(seg):
-                tc, th = seg[j] >> 4, seg[j] & 0xF
-                counts = tuple(seg[j + 1:j + 17])
-                nvals = sum(counts)
-                values = tuple(seg[j + 17:j + 17 + nvals])
-                (dc_tabs if tc == 0 else ac_tabs)[th] = \
-                    _build_peek_lut(counts, values)
-                j += 17 + nvals
-        elif marker == 0xDD:
-            ri = int.from_bytes(seg[:2], "big")
-        elif marker == 0xDA:
-            ns = seg[0]
-            scomps = []
-            for c in range(ns):
-                cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]
-                scomps.append((cid, dc_tabs.get(tabs >> 4),
-                               ac_tabs.get(tabs & 0xF)))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah_al = seg[3 + 2 * ns]
-            ah, al = ah_al >> 4, ah_al & 0xF
-            if (ss == 0) != (se == 0) or se > 63 or \
-                    (ah != 0 and ah != al + 1):
-                raise ValueError("invalid progressive scan header")
-            # a scan referencing an undefined Huffman slot stored None
-            # and blew up as TypeError deep in the entropy loop; reject
-            # as ValueError here.  First DC scans (ah=0) Huffman-code
-            # magnitudes; DC refinements read raw bits (no table); AC
-            # scans (first AND refinement) both read EOB runs via the
-            # AC table
-            for _cid, _dc, _ac in scomps:
-                if (ss == 0 and ah == 0 and _dc is None) or \
-                        (ss > 0 and _ac is None):
-                    raise ValueError("scan references undefined "
-                                     "Huffman table")
-            start = i + 2 + seg_len
-            end = _scan_end(data, start)
-            scans.append((scomps, ss, se, ah_al >> 4, ah_al & 0xF,
-                          ri, data[start:end]))
-            i = end
-            continue
-        i += 2 + seg_len
-    if h is None or not comps or not scans:
-        raise ValueError("truncated progressive JPEG")
-    # crafted-header guard (same cap as the other raster decoders): a
-    # few-hundred-byte stream declaring 65535x65535 would otherwise
-    # allocate ~17 GB of coefficient planes per component before any
-    # entropy data is validated
-    if h <= 0 or w <= 0 or h * w > MAX_PIXELS:
-        raise ValueError(f"implausible progressive JPEG {w}x{h}")
-    for _cid, _hs, _vs, tq in comps:
-        if tq not in qt:
-            raise ValueError("component references undefined quant table")
-
+def decode_scans(scans: list[tuple], comps: list[tuple], h: int, w: int,
+                 mcus_x: int, mcus_y: int) -> list[np.ndarray]:
+    """Entropy-decode every progressive scan (core/jpeg._parse's scan
+    tuples) into per-component dense coefficient planes in frame order:
+    (blocks, 64) int32, natural 8x8 order, in raster block order over
+    the MCU-padded component grid."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    # dense zigzag-order coefficient planes, MCU-padded raster grids
     geo = {}
     coef = {}
     for ci, (cid, hs, vs, _tq) in enumerate(comps):
@@ -216,30 +97,7 @@ def decode_progressive(data: bytes) -> np.ndarray:
                 raise ValueError("AC progressive scan must be 1-component")
             cid, _dc, ac_lut = scomps[0]
             _ac_scan(rd, ac_lut, geo[cid], coef[cid], ss, se, ah, al, sri)
-
-    from .jpeg import jpeg_decode  # noqa: F401  (doc pointer only)
-    planes = []
-    for cid, hs, vs, tq in comps:
-        _ci, _hs, _vs, bw_, bh_, _cbw, _cbh = geo[cid]
-        c = coef[cid].astype(np.float64)
-        nat = np.zeros_like(c)
-        nat[:, _ZIGZAG] = c * qt[tq]
-        blocks = _DCT.T @ nat.reshape(-1, 8, 8) @ _DCT
-        plane = blocks.reshape(bh_, bw_, 8, 8) \
-            .transpose(0, 2, 1, 3).reshape(bh_ * 8, bw_ * 8)
-        if hs != hmax or vs != vmax:
-            plane = plane.repeat(vmax // vs, axis=0) \
-                         .repeat(hmax // hs, axis=1)
-        planes.append(plane[:h, :w] + 128.0)
-    if len(planes) == 1:
-        return np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = planes
-    cb = cb - 128.0
-    cr = cr - 128.0
-    rgb = np.stack([y + 1.402 * cr,
-                    y - 0.344136286 * cb - 0.714136286 * cr,
-                    y + 1.772 * cb], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+    return [coef[cid][:, _UNZIGZAG] for cid, _hs, _vs, _tq in comps]
 
 
 def _dc_scan(rd, scomps, geo, coef, ah, al, ri, mcus_x, mcus_y,

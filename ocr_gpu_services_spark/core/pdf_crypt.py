@@ -54,7 +54,8 @@ import hashlib
 import re
 import struct
 
-from .pdf_extract import _LENGTH_RE, _OBJ_RE, _stream_span
+from .pdf_extract import (_LENGTH_RE, _OBJ_RE, _decode_pdf_string,
+                          _stream_span)
 
 # ISO 32000-1 §7.6.3.3 padding constant (public spec table)
 PAD = bytes((
@@ -183,9 +184,6 @@ _ENC_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R")
 _ID_OPEN_RE = re.compile(rb"/ID\s*\[")
 _XREF_TYPE_RE = re.compile(rb"/Type\s*/XRef\b")
 
-_ESCAPES = {ord("n"): 10, ord("r"): 13, ord("t"): 9, ord("b"): 8,
-            ord("f"): 12, ord("("): 40, ord(")"): 41, ord("\\"): 92}
-
 
 def _string_after(body: bytes, name: bytes) -> bytes | None:
     """Value of ``name`` when it is a PDF string: ``<hex>`` or a literal
@@ -206,30 +204,11 @@ def _string_after(body: bytes, name: bytes) -> bytes | None:
         return bytes.fromhex(hx.decode("ascii"))
     if body[pos:pos + 1] != b"(":
         return None
-    out = bytearray()
     depth, k = 1, pos + 1
-    while k < len(body) and depth:
+    while k < len(body):
         c = body[k]
-        if c == 0x5C and k + 1 < len(body):          # backslash escape
-            nxt = body[k + 1]
-            if nxt in _ESCAPES:
-                out.append(_ESCAPES[nxt])
-                k += 2
-            elif 0x30 <= nxt <= 0x37:                # \ooo octal
-                oct_ = body[k + 1:k + 4]
-                n = 0
-                used = 0
-                for ch in oct_:
-                    if 0x30 <= ch <= 0x37:
-                        n = n * 8 + (ch - 0x30)
-                        used += 1
-                    else:
-                        break
-                out.append(n & 0xFF)
-                k += 1 + used
-            else:                                     # \<other>: drop \
-                out.append(nxt)
-                k += 2
+        if c == 0x5C:                                # skip escaped byte
+            k += 2
             continue
         if c == 0x28:
             depth += 1
@@ -237,9 +216,8 @@ def _string_after(body: bytes, name: bytes) -> bytes | None:
             depth -= 1
             if not depth:
                 break
-        out.append(c)
         k += 1
-    return bytes(out)
+    return _decode_pdf_string(body[pos + 1:k]).encode("latin-1")
 
 
 def _int_after(body: bytes, name: bytes, default: int | None = None):

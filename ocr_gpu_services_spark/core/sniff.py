@@ -205,9 +205,11 @@ def probe_image_format(payload: bytes) -> str | None:
                 return None
             marker = payload[i + 1]
             if marker in (0xC0, 0xC1, 0xC2, 0xC3):
-                nc = payload[i + 9]
-                base = "jpeg-gray" if nc == 1 \
-                    else _JPEG_SAMP.get(payload[i + 11])
+                sof = payload[i + 9:i + 12]          # Nf, C1, H1V1
+                if not sof or (sof[0] != 1 and len(sof) < 3):
+                    return None                      # cut inside the SOF
+                base = "jpeg-gray" if sof[0] == 1 \
+                    else _JPEG_SAMP.get(sof[2])
                 if base is not None and marker == 0xC2:   # progressive
                     base = base.replace("jpeg-", "jpeg-prog-")
                 return base

@@ -282,24 +282,12 @@ def _rgb_to_ycc(rgb: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(ycc), 0, 255)
 
 
-def jpeg_encode_color(rgb: np.ndarray, quant: int = 1,
-                      subsampling: str = "444",
-                      restart_interval: int = 0,
-                      exif_orientation: int = 0) -> bytes:
-    """Baseline YCbCr JPEG from an (H, W, 3) uint8 RGB array.
-
-    ``subsampling`` is "444" (no chroma subsampling; MCU = 8x8),
-    "422" (2x1 horizontally box-averaged chroma; MCU = 8x16) or
-    "420" (2x2 box-averaged chroma; MCU = 16x16 with four Y blocks).
-    Quant table ``quant`` fills both the luma and chroma tables — 1 is
-    the fixture exactness contract (error stays within the ink/paper/
-    bed classification bands, see module docstring)."""
-    assert rgb.ndim == 3 and rgb.shape[2] == 3
+def _ycc_planes(ycc: np.ndarray, subsampling: str):
+    """Level-shifted, MCU-padded Y, Cb, Cr planes for ``subsampling``
+    plus the luma sampling byte, the MCU size and the block schedule of
+    one MCU as (plane, jr, jc)."""
     if subsampling not in ("444", "422", "420"):
         raise ValueError("subsampling must be '444', '422' or '420'")
-    h, w = rgb.shape[:2]
-    ycc = _rgb_to_ycc(rgb)
-    q = np.full(64, quant, dtype=np.int32)
     if subsampling == "444":
         ys, mcu_h, mcu_w = 0x11, 8, 8
         planes = [_pad_plane(ycc[..., c], 8) for c in range(3)]
@@ -331,6 +319,26 @@ def jpeg_encode_color(rgb: np.ndarray, quant: int = 1,
         planes = [ypad] + sub
         sched = [(0, 0, 0), (0, 0, 1), (0, 1, 0), (0, 1, 1),
                  (1, 0, 0), (2, 0, 0)]
+    return ys, mcu_h, mcu_w, planes, sched
+
+
+def jpeg_encode_color(rgb: np.ndarray, quant: int = 1,
+                      subsampling: str = "444",
+                      restart_interval: int = 0,
+                      exif_orientation: int = 0) -> bytes:
+    """Baseline YCbCr JPEG from an (H, W, 3) uint8 RGB array.
+
+    ``subsampling`` is "444" (no chroma subsampling; MCU = 8x8),
+    "422" (2x1 horizontally box-averaged chroma; MCU = 8x16) or
+    "420" (2x2 box-averaged chroma; MCU = 16x16 with four Y blocks).
+    Quant table ``quant`` fills both the luma and chroma tables — 1 is
+    the fixture exactness contract (error stays within the ink/paper/
+    bed classification bands, see module docstring)."""
+    assert rgb.ndim == 3 and rgb.shape[2] == 3
+    h, w = rgb.shape[:2]
+    ycc = _rgb_to_ycc(rgb)
+    q = np.full(64, quant, dtype=np.int32)
+    ys, mcu_h, mcu_w, planes, sched = _ycc_planes(ycc, subsampling)
     ph, pw = planes[0].shape
     rs = _RestartScan(restart_interval)
     dc = [0, 0, 0]

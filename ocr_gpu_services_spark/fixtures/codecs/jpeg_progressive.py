@@ -1,5 +1,6 @@
 """Progressive JPEG (ITU T.81 Annex G) encoder for the fixture
-generator.  The decoder is core/jpeg_progressive.py.
+generator.  The decoder is core/jpeg.jpeg_decode (scan decoders in
+core/jpeg_progressive.py).
 
 The encoder emits a libjpeg-style script (DC with one bit of successive
 approximation, two spectral AC bands, two AC refinement passes, one DC
@@ -14,7 +15,8 @@ import numpy as np
 
 from ...core.jpeg import _DCT, _ZIGZAG
 from .jpeg import (_DC_CODES, _DC_COUNTS, _DC_VALUES, _BitWriter,
-                   _build_codes, _magnitude, _pad_plane, _rgb_to_ycc)
+                   _build_codes, _magnitude, _pad_plane, _rgb_to_ycc,
+                   _ycc_planes)
 
 # The sequential Annex-K AC tables carry no EOBn symbols (r<<4 for
 # 0<r<15 — progressive-only codes), so the encoder emits its own
@@ -155,22 +157,29 @@ _SCRIPT_AC = [("ac_first", 1, 5, 0, 2), ("ac_first", 6, 63, 0, 2),
               ("ac_refine", 1, 63, 2, 1), ("ac_refine", 1, 63, 1, 0)]
 
 
-def jpeg_encode_progressive(img: np.ndarray, quant: int = 1) -> bytes:
+def jpeg_encode_progressive(img: np.ndarray, quant: int = 1,
+                            subsampling: str = "444") -> bytes:
     """Progressive baseline-data JPEG.  ``img`` is (H, W) grayscale or
-    (H, W, 3) RGB (encoded as 4:4:4 YCbCr).  The coefficient stream
-    equals the sequential encoder's exactly — only the scan structure
-    differs — so the quality-100 fixture exactness contract carries
-    over unchanged."""
+    (H, W, 3) RGB, encoded as YCbCr with ``subsampling`` "444", "422"
+    or "420" (chroma planes as in ``jpeg_encode_color``).  The
+    coefficient stream equals the sequential encoder's exactly — only
+    the scan structure differs — so the quality-100 fixture exactness
+    contract carries over unchanged."""
     color = img.ndim == 3
     h, w = img.shape[:2]
     q = np.full(64, quant, dtype=np.int32)
     if color:
-        ycc = _rgb_to_ycc(img)
-        planes = [_pad_plane(ycc[..., c], 8) for c in range(3)]
+        ys, _mcu_h, _mcu_w, planes, _sched = _ycc_planes(_rgb_to_ycc(img),
+                                                         subsampling)
+        samp = [(ys >> 4, ys & 0xF), (1, 1), (1, 1)]
     else:
         planes = [_pad_plane(img, 8)]
+        samp = [(1, 1)]
     zzs = [_quant_blocks(p, q) for p in planes]
     grids = [(p.shape[1] // 8, p.shape[0] // 8) for p in planes]
+    hmax, vmax = samp[0]
+    # chroma (or the one gray plane) has exactly one block per MCU
+    mcus_x, mcus_y = grids[-1]
 
     out = bytearray(b"\xff\xd8")
     out += b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
@@ -179,7 +188,7 @@ def jpeg_encode_progressive(img: np.ndarray, quant: int = 1) -> bytes:
         out += b"\xff\xdb" + (len(dqt) + 2).to_bytes(2, "big") + dqt
     if color:
         sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
-            + bytes([3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])
+            + bytes([3, 1, ys, 0, 2, 0x11, 1, 3, 0x11, 1])
     else:
         sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") \
             + bytes([1, 1, 0x11, 0])
@@ -201,38 +210,46 @@ def jpeg_encode_progressive(img: np.ndarray, quant: int = 1) -> bytes:
         return b"\xff\xda" + (len(body) + 2).to_bytes(2, "big") + body
 
     ncomp = 3 if color else 1
-    # DC scans: all components in one (interleaved iff ncomp > 1)
+    # DC scans: all components in one, interleaved MCU by MCU, each
+    # component contributing its hs x vs blocks (gray: raster order)
+    dc_order = [(ci, (my * vs + jr) * grids[ci][0] + mx * hs + jc)
+                for my in range(mcus_y) for mx in range(mcus_x)
+                for ci, (hs, vs) in enumerate(samp)
+                for jr in range(vs) for jc in range(hs)]
     for kind, ss, se, ah, al in _SCRIPT_DC:
         out += sos_header(list(range(1, ncomp + 1)), ss, se, ah, al)
         bw = _BitWriter()
         pred = [0] * ncomp
-        nb = grids[0][0] * grids[0][1]       # 4:4:4 -> same grid per comp
-        for bi in range(nb):
-            for ci in range(ncomp):
-                dcv = int(zzs[ci][bi][0])
-                if kind == "dc_first":
-                    # DC point transform is an ARITHMETIC shift (G.1.2.1)
-                    t = dcv >> al
-                    diff = t - pred[ci]
-                    pred[ci] = t
-                    s, bits = _magnitude(diff)
-                    code, ln = _DC_CODES[s]
-                    bw.write(code, ln)
-                    if s:
-                        bw.write(bits, s)
-                else:
-                    bw.write((dcv >> al) & 1, 1)
+        for ci, bi in dc_order:
+            dcv = int(zzs[ci][bi][0])
+            if kind == "dc_first":
+                # DC point transform is an ARITHMETIC shift (G.1.2.1)
+                t = dcv >> al
+                diff = t - pred[ci]
+                pred[ci] = t
+                s, bits = _magnitude(diff)
+                code, ln = _DC_CODES[s]
+                bw.write(code, ln)
+                if s:
+                    bw.write(bits, s)
+            else:
+                bw.write((dcv >> al) & 1, 1)
         bw.flush()
         out += bw.buf
-    # AC scans per component
-    for ci in range(ncomp):
+    # AC scans per component, over its own block grid (T.81 A.2: a
+    # non-interleaved scan skips the MCU padding blocks)
+    for ci, (hs, vs) in enumerate(samp):
+        cw = -(-w * hs // hmax)              # component size in pixels
+        ch = -(-h * vs // vmax)
+        cbw, cbh = -(-cw // 8), -(-ch // 8)
         for kind, ss, se, ah, al in _SCRIPT_AC:
             out += sos_header([ci + 1], ss, se, ah, al)
             bw = _BitWriter()
             enc = _AcFirstEncoder(bw) if kind == "ac_first" \
                 else _AcRefineEncoder(bw)
-            for bi in range(zzs[ci].shape[0]):
-                enc.block(zzs[ci][bi], ss, se, al)
+            for by in range(cbh):
+                for bx in range(cbw):
+                    enc.block(zzs[ci][by * grids[ci][0] + bx], ss, se, al)
             enc.flush_eobrun()
             bw.flush()
             out += bw.buf

@@ -6,9 +6,9 @@ color payload then decodes -> grays back to EXACTLY the original page,
 so extraction output — and therefore every golden — is byte-identical
 to the never-colorized twin.  Lossless formats (color PNG variants) get
 this for free; color JPEG additionally relies on the quality-100 band
-contract (core/jpeg.py docstring): the luma channel round-trips within
-a few gray levels and ink(<128) / bed(176) / paper(>230) classification
-is preserved.
+contract (fixtures/codecs/jpeg.py docstring): the luma channel
+round-trips within a few gray levels and ink(<128) / bed(176) /
+paper(>230) classification is preserved.
 
 The solver works per gray level (a 256-entry LUT): pick R = g + dr,
 G = g + dg from the page tint, then solve the exact integer range of B

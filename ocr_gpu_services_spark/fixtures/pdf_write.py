@@ -71,8 +71,9 @@ def content_stream_ops_hex(lines: list[str]) -> bytes:
 
 class DctScanPage:
     """A scanned page embedded as a /DCTDecode (baseline JPEG) image
-    XObject — the shape real scan-to-PDF tools emit (core/jpeg.py
-    quality-100 contract keeps extraction byte-identical).  ``rotate``
+    XObject — the shape real scan-to-PDF tools emit (the
+    fixtures/codecs/jpeg.py quality-100 contract keeps extraction
+    byte-identical).  ``rotate``
     emits a /Rotate page attribute with the raster stored pre-rotated
     (CCW by the flag) so an extractor honoring the flag recovers the
     upright render as a pure pixel permutation."""

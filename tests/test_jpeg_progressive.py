@@ -10,7 +10,6 @@ import numpy as np
 import pytest
 
 from ocr_gpu_services_spark.core.jpeg import jpeg_decode
-from ocr_gpu_services_spark.core.jpeg_progressive import decode_progressive
 from ocr_gpu_services_spark.fixtures.codecs.jpeg import (jpeg_encode,
                                                          jpeg_encode_color)
 from ocr_gpu_services_spark.fixtures.codecs.jpeg_progressive import (
@@ -38,6 +37,22 @@ def test_progressive_color_matches_baseline_444():
     base = jpeg_decode(jpeg_encode_color(rgb, subsampling="444"))
     prog = jpeg_decode(jpeg_encode_progressive(rgb))
     assert np.array_equal(prog, base)
+
+
+@pytest.mark.parametrize("subsampling", ["420", "422"])
+def test_progressive_subsampled_color_matches_baseline(subsampling):
+    """The web-export default is progressive 4:2:0: the interleaved DC
+    scans carry several luma blocks per MCU, and each AC scan covers its
+    component's own block grid, which at odd sizes is smaller than the
+    MCU-padded grid (35 px wide 4:2:0 luma: 5 blocks, 6 in the MCUs)."""
+    rng = np.random.RandomState(2)
+    for h, w in ((41, 57), (33, 35)):
+        rgb = (rng.rand(h, w, 3) * 255).astype(np.uint8)
+        base = jpeg_decode(jpeg_encode_color(rgb, subsampling=subsampling))
+        prog = jpeg_decode(jpeg_encode_progressive(rgb,
+                                                   subsampling=subsampling))
+        assert prog.shape == (h, w, 3)
+        assert np.array_equal(prog, base)
 
 
 def test_eob_runs_across_flat_image():
@@ -151,20 +166,20 @@ def test_malformed_progressive_raises_valueerror_not_typeerror():
     bad_tab = bytearray(good)
     bad_tab[sos + 6] = 0x99          # Td/Ta nibbles -> undefined slot
     with pytest.raises(ValueError):
-        decode_progressive(bytes(bad_tab))
+        jpeg_decode(bytes(bad_tab))
 
     # SOF sampling factor nibble 0 -> would divide by zero at MCU grid
     sof = good.index(b"\xff\xc2")
     bad_samp = bytearray(good)
     bad_samp[sof + 11] = 0x00        # h=v=0 for component 0
     with pytest.raises(ValueError):
-        decode_progressive(bytes(bad_samp))
+        jpeg_decode(bytes(bad_samp))
 
     # component referencing a quant table no DQT defined
     bad_q = bytearray(good)
     bad_q[sof + 12] = 7              # Tq -> undefined
     with pytest.raises(ValueError):
-        decode_progressive(bytes(bad_q))
+        jpeg_decode(bytes(bad_q))
 
 
 def test_crafted_progressive_header_capped():
@@ -176,4 +191,4 @@ def test_crafted_progressive_header_capped():
     huge = bytearray(good)
     huge[sof + 5:sof + 9] = b"\xff\xff\xff\xff"     # h = w = 65535
     with pytest.raises(ValueError):
-        decode_progressive(bytes(huge))
+        jpeg_decode(bytes(huge))

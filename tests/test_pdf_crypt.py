@@ -299,16 +299,20 @@ def test_v4_cf_dict_ordered_before_length():
 def test_id_literal_string_form():
     """ISO 32000 §7.3.4: /ID entries are byte strings — hex <...> is
     customary but a literal (...) is equally legal and must derive the
-    same file key."""
+    same file key.  A backslash before an end-of-line (LF or CR LF) is a
+    §7.3.4.2 line continuation: a writer wrapping a long literal adds no
+    bytes to the string."""
     e = build_pdf([content_stream_ops(LINES)], encrypt=128)
     p = build_pdf([content_stream_ops(LINES)])
     idm = re.search(rb"/ID \[<([0-9a-f]+)> <([0-9a-f]+)>\]", e)
     assert idm
     id0 = bytes.fromhex(idm.group(1).decode())
-    lit = b"(" + b"".join(b"\\%03o" % b for b in id0) + b")"
-    relit = e[:idm.start()] + b"/ID [" + lit + b" " + lit + b"]" \
-        + e[idm.end():]
-    assert extract_pdf(relit) == extract_pdf(p)
+    octs = [b"\\%03o" % b for b in id0]
+    for wrap in (b"", b"\\\n", b"\\\r\n"):
+        lit = b"(" + b"".join(octs[:5]) + wrap + b"".join(octs[5:]) + b")"
+        relit = e[:idm.start()] + b"/ID [" + lit + b" " + lit + b"]" \
+            + e[idm.end():]
+        assert extract_pdf(relit) == extract_pdf(p), wrap
 
 
 def test_rc4_overstated_length_keeps_offsets():

@@ -554,3 +554,33 @@ def test_g4_halftone_rows_linear_roundtrip():
     t0 = time.time()
     assert np.array_equal(ccitt.g4_decode(ccitt_enc.g4_encode(g), 1728, 48), g)
     assert time.time() - t0 < 5.0
+
+
+def test_probe_never_raises_on_any_prefix():
+    """probe_image_format runs per row in the image_formats query and in
+    tools/route_digest.py: a truncated upload must probe as a format or
+    None, never raise (a JPEG cut inside its SOF raised IndexError).
+    One payload per SIGNATURES image family, every prefix."""
+    from ocr_gpu_services_spark.core.sniff import SIGNATURES, signature_family
+    from ocr_gpu_services_spark.fixtures.gen import gen_rows
+    payloads = {}
+    # longest first, so the smallest probeable payload per family wins
+    for p in sorted((bytes(r["html"] or b"") for r in gen_rows("tiny")),
+                    key=len, reverse=True):
+        fam = signature_family(p)
+        if fam not in (None, "pdf") and probe_image_format(p):
+            payloads[fam] = p
+    # tiny's one BMP is a full page (every prefix would copy ~29 GB)
+    payloads["bmp"] = bmp_enc.bmp_encode_gray8(
+        (np.arange(48) * 5).astype(np.uint8).reshape(6, 8))
+    payloads["bmff"] = (b"\x00\x00\x00\x1cftypavif\x00\x00\x00\x00"
+                        b"avifmif1miaf\x00\x00\x00\x08free")
+    payloads["jxl"] = b"\x00\x00\x00\x0cJXL \r\n\x87\n" \
+        b"\x00\x00\x00\x14ftypjxl \x00\x00\x00\x00jxl "
+    image_families = {f for f, _c, ct in SIGNATURES if ct == "image"}
+    assert set(payloads) == image_families
+    for fam, p in payloads.items():
+        assert signature_family(p) == fam
+        for n in range(len(p) + 1):
+            got = probe_image_format(p[:n])
+            assert got is None or isinstance(got, str), (fam, n, got)

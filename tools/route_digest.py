@@ -10,6 +10,8 @@ probe_image_format, spans) from ``core.extract.extract_route`` and
 
 Usage:
   python tools/route_digest.py tiny|small         # fixture corpus, seed 7
+  python tools/route_digest.py pool               # perfbench crawl_mix row
+                                                  # pool (built if missing)
   python tools/route_digest.py <parquet path>     # file or directory with
                                                   # url/html/text columns
 """
@@ -28,12 +30,16 @@ from ocr_gpu_services_spark.core.sniff import probe_image_format  # noqa: E402
 
 
 def rows(source: str):
-    """Yield (url, payload, text) from a fixture scale or a parquet path."""
+    """Yield (url, payload, text) from a fixture scale, the crawl pool or
+    a parquet path."""
     if source in ("tiny", "small"):
         from ocr_gpu_services_spark.fixtures.gen import gen_rows
         for r in gen_rows(source, 7):
             yield r["url"], r["html"], r["text"]
         return
+    if source == "pool":
+        from perfbench.inputs import crawl_pool
+        source = crawl_pool()
     import pyarrow.parquet as pq
     table = pq.read_table(source, columns=["url", "html", "text"])
     for batch in table.to_batches():
