@@ -172,7 +172,7 @@ def _unstuffed_u32(scan: bytes) -> list[int]:
     """Byte-unstuffed entropy segment as a sliding 32-bit window list:
     u32[i] = big-endian bytes i..i+3 = the 32 bits starting at bit 8*i
     (4 zero pad bytes keep the last window readable).  Shared by the
-    sequential decoder and the progressive _Reader so the stuffing,
+    sequential and the progressive scan decoders so the stuffing,
     padding, and window-shape invariants live in ONE place."""
     data = scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
     b = np.frombuffer(data, dtype=np.uint8).astype(np.uint32)
@@ -334,6 +334,10 @@ def _parse(data: bytes):
                 if (ss == 0) != (se == 0) or se > 63 or \
                         (ah != 0 and ah != al + 1):
                     raise ValueError("invalid progressive scan header")
+                if {cid for cid, _dc, _ac in scomps} \
+                        - {cid for cid, *_ in comps}:
+                    raise ValueError("scan names a component the frame "
+                                     "lacks")
             else:
                 # a sequential scan codes the full band, whatever
                 # its header says

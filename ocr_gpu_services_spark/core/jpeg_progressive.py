@@ -15,60 +15,27 @@ module holds only the entropy decoding of progressive scans:
 * EOB runs: a run of blocks whose remaining band is all zero is coded
   once as an EOBn symbol with n extra bits
 * DRI restart intervals reset DC predictors and EOB runs
+
+Each component's coefficients live in one flat int32 ``array`` (64
+per block, zigzag order) while the scans run: plain-int element access
+at 4 bytes a coefficient, where a list would also hold a 32-byte int
+object for most nonzero values.  Each scan keeps its bit position in a
+local: a Huffman symbol is one peek-LUT index into the sliding 32-bit
+windows of ``core/jpeg._unstuffed_u32``, and a raw bit or bit field is
+one window read.  The arrays become the dense natural-order planes
+once, after the last scan.  A scan that runs past the end of its data
+reads past the end of the window list and raises IndexError, as a
+truncated stream should.
 """
 
 from __future__ import annotations
+
+from array import array
 
 import numpy as np
 
 from .jpeg import _UNZIGZAG, _sync_restart_pos, _unstuffed_u32
 
-
-# ---------------------------------------------------------------------------
-# bit reader (progressive scans interleave Huffman symbols with raw
-# refinement bits, so a stateful reader is the natural shape; symbol
-# lookup still uses the 16-bit peek LUTs)
-# ---------------------------------------------------------------------------
-
-
-class _Reader:
-    def __init__(self, scan: bytes):
-        self.u32 = _unstuffed_u32(scan)
-        self.pos = 0
-
-    def bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        r = self.pos & 7
-        v = (self.u32[self.pos >> 3] >> (32 - r - n)) & ((1 << n) - 1)
-        self.pos += n
-        return v
-
-    def bit(self) -> int:
-        r = self.pos & 7
-        v = (self.u32[self.pos >> 3] >> (31 - r)) & 1
-        self.pos += 1
-        return v
-
-    def symbol(self, lut: list[int]) -> int:
-        w = self.u32[self.pos >> 3]
-        e = lut[(w >> (16 - (self.pos & 7))) & 0xFFFF]
-        if not e:
-            raise ValueError("invalid Huffman code")
-        self.pos += e >> 8
-        return e & 0xFF
-
-    def sync_restart(self):
-        self.pos = _sync_restart_pos(self.u32, self.pos)
-
-
-def _extend(v: int, s: int) -> int:
-    return v if v >> (s - 1) else v - (1 << s) + 1
-
-
-# ---------------------------------------------------------------------------
-# scan decoders
-# ---------------------------------------------------------------------------
 
 def decode_scans(scans: list[tuple], comps: list[tuple], h: int, w: int,
                  mcus_x: int, mcus_y: int) -> list[np.ndarray]:
@@ -80,148 +47,196 @@ def decode_scans(scans: list[tuple], comps: list[tuple], h: int, w: int,
     vmax = max(c[2] for c in comps)
     geo = {}
     coef = {}
-    for ci, (cid, hs, vs, _tq) in enumerate(comps):
+    for cid, hs, vs, _tq in comps:
         bw_, bh_ = mcus_x * hs, mcus_y * vs
         cw = -(-w * hs // hmax)
         ch = -(-h * vs // vmax)
-        geo[cid] = (ci, hs, vs, bw_, bh_, -(-cw // 8), -(-ch // 8))
-        coef[cid] = np.zeros((bh_ * bw_, 64), dtype=np.int32)
+        geo[cid] = (hs, vs, bw_, -(-cw // 8), -(-ch // 8))
+        coef[cid] = array("i", [0]) * (64 * bw_ * bh_)
 
-    for scomps, ss, se, ah, al, sri, sdata in scans:
-        rd = _Reader(sdata)
+    for scomps, ss, se, ah, al, ri, sdata in scans:
+        u32 = _unstuffed_u32(sdata)
         if ss == 0:
-            _dc_scan(rd, scomps, geo, coef, ah, al, sri,
-                     mcus_x, mcus_y, len(comps) > 1 and len(scomps) > 1)
+            _dc_scan(u32, scomps, geo, coef, ah, al, ri, mcus_x, mcus_y,
+                     len(comps) > 1 and len(scomps) > 1)
         else:
             if len(scomps) != 1:
                 raise ValueError("AC progressive scan must be 1-component")
             cid, _dc, ac_lut = scomps[0]
-            _ac_scan(rd, ac_lut, geo[cid], coef[cid], ss, se, ah, al, sri)
-    return [coef[cid][:, _UNZIGZAG] for cid, _hs, _vs, _tq in comps]
+            scan = _ac_first_scan if ah == 0 else _ac_refine_scan
+            scan(u32, ac_lut, geo[cid], coef[cid], ss, se, al, ri)
+    return [np.frombuffer(coef[cid], np.int32).reshape(-1, 64)[:, _UNZIGZAG]
+            for cid, _hs, _vs, _tq in comps]
 
 
-def _dc_scan(rd, scomps, geo, coef, ah, al, ri, mcus_x, mcus_y,
+def _dc_scan(u32, scomps, geo, coef, ah, al, ri, mcus_x, mcus_y,
              interleaved):
-    pred = {cid: 0 for cid, _d, _a in scomps}
-    n_mcu = mcus_x * mcus_y
-
-    def one(cid, dc_lut, bi):
-        block = coef[cid][bi]
-        if ah == 0:
-            s = rd.symbol(dc_lut)
-            diff = _extend(rd.bits(s), s) if s else 0
-            pred[cid] += diff
-            block[0] = pred[cid] << al
-        else:
-            if rd.bit():
-                block[0] |= 1 << al
-
+    """DC first (ah == 0) or refinement scan.  Its coding units are whole
+    MCUs when the scan is interleaved, else the blocks of one
+    component's own grid; ``layout`` lists each unit's blocks as (scan
+    component slot, coefficient offset in unit (0, 0), offset step per
+    unit row, per unit column).  Restart intervals count units."""
     if interleaved:
-        for mi in range(n_mcu):
-            if ri and mi and mi % ri == 0:
-                rd.sync_restart()
-                for cid in pred:
-                    pred[cid] = 0
-            my, mx = divmod(mi, mcus_x)
-            for cid, dc_lut, _ac in scomps:
-                _ci, hs, vs, bw_, _bh, _cbw, _cbh = geo[cid]
-                for jr in range(vs):
-                    for jc in range(hs):
-                        one(cid, dc_lut,
-                            (my * vs + jr) * bw_ + mx * hs + jc)
+        grid_h, grid_w = mcus_y, mcus_x
+        layout = []
+        for slot, (cid, _dc, _ac) in enumerate(scomps):
+            hs, vs, bw_, _cbw, _cbh = geo[cid]
+            layout += [(slot, 64 * (jr * bw_ + jc), 64 * vs * bw_, 64 * hs)
+                       for jr in range(vs) for jc in range(hs)]
     else:
-        cid, dc_lut, _ac = scomps[0]
-        _ci, _hs, _vs, bw_, _bh, cbw, cbh = geo[cid]
-        k = 0
-        for by in range(cbh):
-            for bx in range(cbw):
-                if ri and k and k % ri == 0:
-                    rd.sync_restart()
-                    pred[cid] = 0
-                one(cid, dc_lut, by * bw_ + bx)
-                k += 1
+        _hs, _vs, bw_, grid_w, grid_h = geo[scomps[0][0]]
+        layout = [(0, 0, 64 * bw_, 64)]
+    cids = [cid for cid, _dc, _ac in scomps]
+    luts = [dc_lut for _cid, dc_lut, _ac in scomps]
+    pred = dict.fromkeys(cids, 0)
+    bit_al = 1 << al
+    pos = 0
+    mi = 0
+    for uy in range(grid_h):
+        for ux in range(grid_w):
+            if ri and mi and mi % ri == 0:
+                pos = _sync_restart_pos(u32, pos)
+                pred = dict.fromkeys(cids, 0)
+            mi += 1
+            for slot, off, row, col in layout:
+                cf = coef[cids[slot]]
+                off += uy * row + ux * col
+                if ah:
+                    if (u32[pos >> 3] >> (31 - (pos & 7))) & 1:
+                        cf[off] |= bit_al
+                    pos += 1
+                    continue
+                w = u32[pos >> 3]
+                e = luts[slot][(w >> (16 - (pos & 7))) & 0xFFFF]
+                if not e:
+                    raise ValueError("invalid Huffman code")
+                pos += e >> 8
+                s = e & 0xFF
+                cid = cids[slot]
+                if s:
+                    v = (u32[pos >> 3] >> (32 - (pos & 7) - s)) \
+                        & ((1 << s) - 1)
+                    pos += s
+                    pred[cid] += v if v >> (s - 1) else v - (1 << s) + 1
+                # a crafted stream can push a DC sum past int32; the
+                # plane keeps it wrapped, as int32 arithmetic would
+                cf[off] = (((pred[cid] << al) + 0x80000000) & 0xFFFFFFFF) \
+                    - 0x80000000
 
 
-def _ac_scan(rd, ac_lut, g, cf, ss, se, ah, al, ri):
-    """Non-interleaved AC scan over one component's real block grid."""
-    _ci, _hs, _vs, bw_, _bh, cbw, cbh = g
+def _ac_first_scan(u32, ac_lut, g, cf, ss, se, al, ri):
+    """AC first scan over one component's real block grid: run/size
+    symbols, magnitudes << Al, EOB runs."""
+    _hs, _vs, bw_, cbw, cbh = g
+    pos = 0
     eobrun = 0
     k_blk = 0
     for by in range(cbh):
         for bx in range(cbw):
             if ri and k_blk and k_blk % ri == 0:
-                rd.sync_restart()
+                pos = _sync_restart_pos(u32, pos)
                 eobrun = 0
             k_blk += 1
-            block = cf[by * bw_ + bx]
-            if ah == 0:
-                eobrun = _ac_first_block(rd, ac_lut, block, ss, se, al,
-                                         eobrun)
-            else:
-                eobrun = _ac_refine_block(rd, ac_lut, block, ss, se, al,
-                                          eobrun)
-
-
-def _ac_first_block(rd, ac_lut, block, ss, se, al, eobrun) -> int:
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = rd.symbol(ac_lut)
-        r, s = rs >> 4, rs & 15
-        if s:
-            k += r
-            if k > se:
-                raise ValueError("AC index overflow")
-            block[k] = _extend(rd.bits(s), s) << al
-            k += 1
-        else:
-            if r != 15:
-                eobrun = 1 << r
-                if r:
-                    eobrun += rd.bits(r)
-                return eobrun - 1
-            k += 16
-    return 0
-
-
-def _ac_refine_block(rd, ac_lut, block, ss, se, al, eobrun) -> int:
-    """Spec G.1.2.3 AC refinement: newly-significant coefficients are
-    coded as +-1<<Al; every nonzero coefficient crossed receives one
-    correction bit."""
-    p1 = 1 << al
-    m1 = -(1 << al)
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = rd.symbol(ac_lut)
-            r, s = rs >> 4, rs & 15
-            val = 0
-            if s:
-                val = p1 if rd.bit() else m1
-            else:
-                if r != 15:
+            if eobrun:
+                eobrun -= 1
+                continue
+            base = 64 * (by * bw_ + bx)
+            k = ss
+            while k <= se:
+                w = u32[pos >> 3]
+                e = ac_lut[(w >> (16 - (pos & 7))) & 0xFFFF]
+                if not e:
+                    raise ValueError("invalid Huffman code")
+                pos += e >> 8
+                r = (e >> 4) & 15
+                s = e & 15
+                if s:
+                    k += r
+                    if k > se:
+                        raise ValueError("AC index overflow")
+                    v = (u32[pos >> 3] >> (32 - (pos & 7) - s)) \
+                        & ((1 << s) - 1)
+                    pos += s
+                    cf[base + k] = (v if v >> (s - 1)
+                                    else v - (1 << s) + 1) << al
+                    k += 1
+                elif r != 15:
                     eobrun = 1 << r
                     if r:
-                        eobrun += rd.bits(r)
+                        eobrun += (u32[pos >> 3] >> (32 - (pos & 7) - r)) \
+                            & ((1 << r) - 1)
+                        pos += r
+                    eobrun -= 1
                     break
-            while k <= se:
-                if block[k]:
-                    if rd.bit() and (block[k] & p1) == 0:
-                        block[k] += p1 if block[k] > 0 else m1
                 else:
-                    if r == 0:
+                    k += 16
+
+
+def _ac_refine_scan(u32, ac_lut, g, cf, ss, se, al, ri):
+    """AC refinement scan (G.1.2.3) over one component's real block
+    grid: newly-significant coefficients are coded as +-1<<Al; every
+    nonzero coefficient crossed receives one correction bit, which sets
+    bit Al of its magnitude."""
+    _hs, _vs, bw_, cbw, cbh = g
+    p1 = 1 << al
+    m1 = -(1 << al)
+    pos = 0
+    eobrun = 0
+    k_blk = 0
+    for by in range(cbh):
+        for bx in range(cbw):
+            if ri and k_blk and k_blk % ri == 0:
+                pos = _sync_restart_pos(u32, pos)
+                eobrun = 0
+            k_blk += 1
+            base = 64 * (by * bw_ + bx)
+            k = ss
+            if eobrun == 0:
+                while k <= se:
+                    w = u32[pos >> 3]
+                    e = ac_lut[(w >> (16 - (pos & 7))) & 0xFFFF]
+                    if not e:
+                        raise ValueError("invalid Huffman code")
+                    pos += e >> 8
+                    r = (e >> 4) & 15
+                    val = 0
+                    if e & 15:
+                        val = p1 if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                            else m1
+                        pos += 1
+                    elif r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += (u32[pos >> 3]
+                                       >> (32 - (pos & 7) - r)) \
+                                & ((1 << r) - 1)
+                            pos += r
                         break
-                    r -= 1
-                k += 1
-            if val and k <= se:
-                block[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if block[k]:
-                if rd.bit() and (block[k] & p1) == 0:
-                    block[k] += p1 if block[k] > 0 else m1
-            k += 1
-        eobrun -= 1
-    return eobrun
+                    # skip r zero-history coefficients; each nonzero one
+                    # crossed gets its correction bit
+                    while k <= se:
+                        c = cf[base + k]
+                        if c:
+                            if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                                    and not c & p1:
+                                cf[base + k] = c + p1 if c > 0 else c + m1
+                            pos += 1
+                        elif r:
+                            r -= 1
+                        else:
+                            break
+                        k += 1
+                    if val and k <= se:
+                        cf[base + k] = val
+                    k += 1
+            if eobrun:
+                # rest of the band: only correction bits
+                band = cf[base + k:base + se + 1]
+                if any(band):
+                    for j, c in enumerate(band, base + k):
+                        if c:
+                            if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                                    and not c & p1:
+                                cf[j] = c + p1 if c > 0 else c + m1
+                            pos += 1
+                eobrun -= 1

@@ -1,4 +1,4 @@
-"""VP8 intra-frame (lossy WebP) decoder — pure Python/numpy, RFC 6386.
+"""VP8 intra-frame (lossy WebP) decoder — pure Python, RFC 6386.
 
 WebP lossy payloads are always VP8 KEY frames (the container carries a
 single still), which prunes the spec to its intra half: boolean
@@ -7,6 +7,15 @@ token/coefficient decode with the default probability tables (§13),
 4x4 IDCT / WHT (§14), intra prediction (§12), and the in-loop
 deblocking filter (§15).  No inter prediction, motion vectors, or
 golden/altref state — a keyframe never references them.
+
+The per-bool, per-coefficient and per-pixel loops run on Python ints:
+the token decoder keeps the boolean decoder's state in locals, and the
+Y/U/V planes are row-strided ``bytearray``s that prediction and the
+inverse transforms read and write directly.  Each plane becomes numpy
+once, for the loop filter and the crop.  A partition that ends early
+reads as zero bytes past its end, so a truncated stream decodes to
+the planes its zero-filled tail codes for (``tests/
+test_decoder_truncation.py`` pins those outcomes).
 
 Constants live in core/vp8_tables.py (published RFC 6386 tables).
 Decode parity is pinned bit-exactly against the system libwebp in
@@ -33,67 +42,104 @@ DC_PRED, TM_PRED, V_PRED, H_PRED, B_PRED = 0, 1, 2, 3, 4
 # 4x4 ("B") prediction modes, RFC order
 (B_DC, B_TM, B_VE, B_HE, B_RD, B_VR, B_LD, B_VL, B_HD, B_HU) = range(10)
 
-# left-shifts needed to renormalize a post-split range back to >= 128
-_RENORM = [8] + [max(0, 7 - r.bit_length() + 1) for r in range(1, 128)]
-for _r in range(1, 128):
-    assert 128 <= (_r << _RENORM[_r]) < 256
+# _SPLIT[prob][rm] is the §7.3 split of a range rm + 1:
+# 1 + ((range - 1) * prob >> 8), looked up instead of computed per bool
+_SPLIT = [[1 + ((rm * prob) >> 8) for rm in range(255)]
+          for prob in range(256)]
+# a range below 128 (``rm`` = range - 1 below 127) renormalizes by the
+# left shift that brings it back into 128..255
+_SHIFT = [8 - (rm + 1).bit_length() for rm in range(127)]
+_NORM = [((rm + 1) << s) - 1 for rm, s in enumerate(_SHIFT)]
+
+# RFC 6386 trees in libvpx's array form: node i reads one bool with
+# probs[i >> 1] and moves to tree[i + bool]; an entry <= 0 is the leaf
+# -entry (node 0 is the root and never a child, so leaf 0 is unambiguous)
+_BOOL_TREE = (0, -1)
+_SEGMENT_TREE = (2, 4, -0, -1, -2, -3)
+_KF_YMODE_TREE = (-B_PRED, 2, 4, 6, -DC_PRED, -V_PRED, -H_PRED, -TM_PRED)
+_KF_YMODE_PROBS = (145, 156, 163, 128)
+_UV_MODE_TREE = (-DC_PRED, 2, -V_PRED, 4, -H_PRED, -TM_PRED)
+_KF_UV_MODE_PROBS = (142, 114, 183)
+_BMODE_TREE = (-B_DC, 2, -B_TM, 4, -B_VE, 6, 8, 12, -B_HE, 10,
+               -B_RD, -B_VR, -B_LD, 14, -B_VL, 16, -B_HD, -B_HU)
 
 
 class _Bool:
-    """Boolean arithmetic decoder, RFC 6386 §7.3 (8-bit renorm)."""
+    """Boolean arithmetic decoder, RFC 6386 §7.3, in libwebp's form.
 
-    __slots__ = ("data", "pos", "value", "range", "bits")
+    ``rm`` is the range minus one (127..254 between bools).  ``value``
+    holds ``bits`` + 8 undecoded bits, and its top 8 are compared with
+    the split.  Renormalizing only lowers ``bits``; when that goes
+    negative, two more bytes are shifted in, so the window is refilled
+    once per 16 bits consumed.  Past the end of the partition the
+    decoder reads zero bytes.
+
+    ``tree`` reads one tree symbol with the state in locals, so a mode
+    costs one method call, not one per bool; ``get`` is the one-node
+    tree, for the frame header.  ``_decode_residuals`` inlines the same
+    step for the coefficient tokens and leaves the state where ``tree``
+    expects it."""
+
+    __slots__ = ("data", "pos", "value", "rm", "bits")
 
     def __init__(self, data: bytes):
         self.data = data
-        v = 0
-        for k in range(2):
-            v = (v << 8) | (data[k] if k < len(data) else 0)
-        self.value = v
+        self.value = ((data[0] if len(data) > 0 else 0) << 8) \
+            | (data[1] if len(data) > 1 else 0)
         self.pos = 2
-        self.range = 255
-        self.bits = 0
+        self.bits = 8
+        self.rm = 254
+
+    def tree(self, tree: tuple, probs) -> int:
+        data = self.data
+        dlen = len(data)
+        pos = self.pos
+        value = self.value
+        rm = self.rm
+        bits = self.bits
+        i = 0
+        while True:
+            split = _SPLIT[probs[i >> 1]][rm]
+            big = split << bits
+            if value >= big:
+                value -= big
+                rm -= split
+                i = tree[i + 1]
+            else:
+                rm = split - 1
+                i = tree[i]
+            if rm < 127:
+                bits -= _SHIFT[rm]
+                rm = _NORM[rm]
+                if bits < 0:
+                    value = (value << 16) | (
+                        (data[pos] << 8) | data[pos + 1] if pos + 1 < dlen
+                        else (data[pos] << 8 if pos < dlen else 0))
+                    pos += 2
+                    bits += 16
+            if i <= 0:
+                break
+        self.pos = pos
+        self.value = value
+        self.rm = rm
+        self.bits = bits
+        return -i
 
     def get(self, prob: int) -> int:
-        rng = self.range
-        split = 1 + (((rng - 1) * prob) >> 8)
-        big = split << 8
-        value = self.value
-        if value >= big:
-            ret = 1
-            rng -= split
-            value -= big
-        else:
-            ret = 0
-            rng = split
-        if rng < 128:                        # renorm, table-driven
-            s = _RENORM[rng]
-            rng <<= s
-            value <<= s
-            bits = self.bits + s
-            if bits >= 8:
-                bits -= 8
-                data = self.data
-                p = self.pos
-                value |= (data[p] if p < len(data) else 0) << bits
-                self.pos = p + 1
-            self.bits = bits
-        self.range = rng
-        self.value = value
-        return ret
+        return self.tree(_BOOL_TREE, (prob,))
 
     def bit(self) -> int:                   # prob-128 raw bit
-        return self.get(128)
+        return self.tree(_BOOL_TREE, (128,))
 
     def literal(self, n: int) -> int:
         v = 0
         for _ in range(n):
-            v = (v << 1) | self.get(128)
+            v = (v << 1) | self.bit()
         return v
 
     def signed(self, n: int) -> int:
         v = self.literal(n)
-        return -v if self.get(128) else v
+        return -v if self.bit() else v
 
 
 def _clamp_q(q: int, mx: int = 127) -> int:
@@ -193,190 +239,236 @@ def _dequant_factors(h: _Header):
 
 # --------------------------------------------------------------- tokens
 
-def _decode_coeffs(br: _Bool, probs, ctx: int, first: int,
-                   dq_dc: int, dq_ac: int, out: list) -> int:
-    """Decode one 4x4 block's coefficient tokens into ``out`` (16-int
-    list, natural order, dequantized).  Returns 1 if any nonzero.
+# coefficient token tree, §13.2; leaves are DCT_0 (0), ONE..FOUR (1..4),
+# DCT_CAT1..6 (5..10) and EOB (11).  The EOB and DCT_0 bools are decoded
+# inline, so the walk starts at node 4, the "one or bigger" bool.
+_COEF_TREE = (-11, 2, 0, 4, -1, 6, 8, 12, -2, 10, -3, -4, 14, 16,
+              -5, -6, 18, 20, -7, -8, -9, -10)
+# token -> (smallest magnitude, split tables of its extra bits, MSB
+# first, followed by the prob-128 sign bit)
+_TOKEN_TAIL = [None] + [(v, (_SPLIT[128],)) for v in (1, 2, 3, 4)] + [
+    (base, tuple(_SPLIT[p] for p in probs) + (_SPLIT[128],))
+    for base, probs in zip(CAT_BASE, K_CAT)]
 
-    The boolean decoder is manually inlined (local state + the _GET
-    pattern) — this is the per-coefficient hot loop where method-call
-    overhead on millions of bools dominates; state is written back to
-    ``br`` once on exit.  Bit-exactness vs _Bool.get is pinned by the
-    libwebp parity suite."""
+
+def _split_tables(probs) -> list:
+    """The frame's coefficient probabilities as split tables, indexed
+    [block type][position][context][tree node]."""
+    return [[[[_SPLIT[p] for p in ctx] for ctx in probs[t][K_BANDS[n]]]
+             for n in range(16)] for t in range(4)]
+
+
+def _block_schedule(by_pos, dq: tuple, has_y2: bool) -> list[tuple]:
+    """The blocks of one macroblock in bitstream order, as
+    ``_decode_residuals`` reads them: (``_split_tables`` of the block
+    type, first position, DC and AC dequant factors, left and above
+    nonzero-context slots, offset in the 400-int coefficient list, mask
+    bit).  Y blocks are 0..15, U 16..19, V 20..23 and Y2 24."""
+    y1dc, y1ac, y2dc, y2ac, uvdc, uvac = dq
+    out = []
+    if has_y2:
+        out.append((by_pos[1], 0, y2dc, y2ac, 8, 8, 384, 1 << 24))
+    ty, first = (0, 1) if has_y2 else (3, 0)
+    for b in range(16):
+        out.append((by_pos[ty], first, y1dc, y1ac, b >> 2, b & 3,
+                    16 * b, 1 << b))
+    for base, ctx in ((16, 4), (20, 6)):
+        for b in range(4):
+            out.append((by_pos[2], 0, uvdc, uvac, ctx + (b >> 1),
+                        ctx + (b & 1), 16 * (base + b), 1 << (base + b)))
+    return out
+
+
+def _decode_residuals(br: _Bool, blocks: list[tuple], lnz: list[int],
+                      anz: list[int], out: list[int]) -> int:
+    """Decode one macroblock's coefficient tokens, §13, into ``out``
+    (dequantized, natural order, 16 ints per block at the schedule's
+    offsets).  Each block's nonzero flag goes to its ``lnz``/``anz``
+    context slots; returns the mask of blocks with a nonzero token.
+
+    The boolean decoder is inlined with its state in locals: every
+    ``# bool`` step below is the step of ``_Bool.tree``, with the
+    split table of the node's probability (``p`` holds the 11 of the
+    current position and context), and the state goes back to ``br``
+    once per macroblock."""
     data = br.data
     dlen = len(data)
     pos = br.pos
     value = br.value
-    rng = br.range
+    rm = br.rm
     bits = br.bits
-    renorm = _RENORM
-    bands = K_BANDS
+    shift = _SHIFT
+    norm = _NORM
+    tree = _COEF_TREE
+    tails = _TOKEN_TAIL
     zig = ZIGZAG
-    n = first
-    nz = 0
-    allow_eob = True
-
-    while n < 16:
-        p = probs[bands[n]][ctx]
-        if allow_eob:
-            prob = p[0]                             # EOB bool
-            split = 1 + (((rng - 1) * prob) >> 8)
-            big = split << 8
+    mask = 0
+    for tabs, n, dq_dc, dq_ac, li, ai, off, bit in blocks:
+        p = tabs[n][lnz[li] + anz[ai]]
+        nz = 0
+        while True:
+            # bool p[0]: 0 = end of block
+            split = p[0][rm]
+            big = split << bits
             if value >= big:
-                rng -= split
                 value -= big
+                rm -= split
                 b = 1
             else:
-                rng = split
+                rm = split - 1
                 b = 0
-            if rng < 128:
-                s = renorm[rng]
-                rng <<= s
-                value <<= s
-                bits += s
-                if bits >= 8:
-                    bits -= 8
-                    value |= (data[pos] if pos < dlen else 0) << bits
-                    pos += 1
+            if rm < 127:
+                bits -= shift[rm]
+                rm = norm[rm]
+                if bits < 0:
+                    value = (value << 16) | (
+                        (data[pos] << 8) | data[pos + 1] if pos + 1 < dlen
+                        else (data[pos] << 8 if pos < dlen else 0))
+                    pos += 2
+                    bits += 16
             if not b:
                 break
-        prob = p[1]                                 # zero/nonzero
-        split = 1 + (((rng - 1) * prob) >> 8)
-        big = split << 8
-        if value >= big:
-            rng -= split
-            value -= big
-            b = 1
-        else:
-            rng = split
-            b = 0
-        if rng < 128:
-            s = renorm[rng]
-            rng <<= s
-            value <<= s
-            bits += s
-            if bits >= 8:
-                bits -= 8
-                value |= (data[pos] if pos < dlen else 0) << bits
-                pos += 1
-        if not b:                                   # DCT_0
-            ctx = 0
+            while True:
+                # bool p[1]: 0 = DCT_0, which no end of block follows
+                split = p[1][rm]
+                big = split << bits
+                if value >= big:
+                    value -= big
+                    rm -= split
+                    b = 1
+                else:
+                    rm = split - 1
+                    b = 0
+                if rm < 127:
+                    bits -= shift[rm]
+                    rm = norm[rm]
+                    if bits < 0:
+                        value = (value << 16) | (
+                            (data[pos] << 8) | data[pos + 1]
+                            if pos + 1 < dlen
+                            else (data[pos] << 8 if pos < dlen else 0))
+                        pos += 2
+                        bits += 16
+                if b:
+                    break
+                n += 1
+                if n == 16:
+                    break
+                p = tabs[n][0]
+            if n == 16:
+                break
+            i = 4
+            while i > 0:
+                # bool p[i >> 1]: one step down the token tree
+                split = p[i >> 1][rm]
+                big = split << bits
+                if value >= big:
+                    value -= big
+                    rm -= split
+                    i = tree[i + 1]
+                else:
+                    rm = split - 1
+                    i = tree[i]
+                if rm < 127:
+                    bits -= shift[rm]
+                    rm = norm[rm]
+                    if bits < 0:
+                        value = (value << 16) | (
+                            (data[pos] << 8) | data[pos + 1]
+                            if pos + 1 < dlen
+                            else (data[pos] << 8 if pos < dlen else 0))
+                        pos += 2
+                        bits += 16
+            base, tail = tails[-i]
+            v = 0
+            for tab in tail:
+                # bool: extra bits MSB first, then the sign
+                split = tab[rm]
+                big = split << bits
+                if value >= big:
+                    value -= big
+                    rm -= split
+                    v += v + 1
+                else:
+                    rm = split - 1
+                    v += v
+                if rm < 127:
+                    bits -= shift[rm]
+                    rm = norm[rm]
+                    if bits < 0:
+                        value = (value << 16) | (
+                            (data[pos] << 8) | data[pos + 1]
+                            if pos + 1 < dlen
+                            else (data[pos] << 8 if pos < dlen else 0))
+                        pos += 2
+                        bits += 16
+            out[off + zig[n]] = (-(base + (v >> 1)) if v & 1
+                                 else base + (v >> 1)) \
+                * (dq_ac if n else dq_dc)
+            nz = 1
             n += 1
-            allow_eob = False
-            continue
-        allow_eob = True
-        prob = p[2]                                 # one/bigger
-        split = 1 + (((rng - 1) * prob) >> 8)
-        big = split << 8
-        if value >= big:
-            rng -= split
-            value -= big
-            b = 1
-        else:
-            rng = split
-            b = 0
-        if rng < 128:
-            s = renorm[rng]
-            rng <<= s
-            value <<= s
-            bits += s
-            if bits >= 8:
-                bits -= 8
-                value |= (data[pos] if pos < dlen else 0) << bits
-                pos += 1
-        if not b:
-            v = 1
-            ctx = 1
-        else:
-            # rare path: restore state, use the method-call decoder
-            br.pos, br.value, br.range, br.bits = pos, value, rng, bits
-            ctx = 2
-            if not br.get(p[3]):                    # 2 / 3 / 4
-                if not br.get(p[4]):
-                    v = 2
-                else:
-                    v = 4 if br.get(p[5]) else 3
-            else:                                   # categories
-                if not br.get(p[6]):
-                    cat = 1 if br.get(p[7]) else 0
-                else:
-                    if not br.get(p[8]):
-                        cat = 3 if br.get(p[9]) else 2
-                    else:
-                        cat = 5 if br.get(p[10]) else 4
-                v = 0
-                for cp in K_CAT[cat]:
-                    v = (v << 1) | br.get(cp)
-                v += CAT_BASE[cat]
-            pos, value, rng, bits = br.pos, br.value, br.range, br.bits
-        # sign flag (prob 128)
-        split = 1 + (((rng - 1) * 128) >> 8)
-        big = split << 8
-        if value >= big:
-            rng -= split
-            value -= big
-            v = -v
-        else:
-            rng = split
-        if rng < 128:
-            s = renorm[rng]
-            rng <<= s
-            value <<= s
-            bits += s
-            if bits >= 8:
-                bits -= 8
-                value |= (data[pos] if pos < dlen else 0) << bits
-                pos += 1
-        out[zig[n]] = v * (dq_dc if n == 0 else dq_ac)
-        nz = 1
-        n += 1
-    br.pos, br.value, br.range, br.bits = pos, value, rng, bits
-    return nz
+            if n == 16:
+                break
+            p = tabs[n][1 if i == -1 else 2]
+        lnz[li] = anz[ai] = nz
+        if nz:
+            mask |= bit
+    br.pos = pos
+    br.value = value
+    br.rm = rm
+    br.bits = bits
+    return mask
 
 
 # ----------------------------------------------------------- transforms
 
-def _idct4x4_add(c: list, dst: np.ndarray, y0: int, x0: int) -> None:
-    """In-place 4x4 inverse DCT added to prediction, §14.3 (integer
-    exact: MUL1(a) = ((a*20091)>>16)+a, MUL2(a) = (a*35468)>>16);
-    plain ints — numpy temporaries dominate at 4x4 size."""
-    tmp = [0] * 16
-    for i in range(4):                              # vertical pass
-        a = c[i] + c[8 + i]
-        b = c[i] - c[8 + i]
-        c1 = ((c[4 + i] * 35468) >> 16) \
-            - (((c[12 + i] * 20091) >> 16) + c[12 + i])
-        d = (((c[4 + i] * 20091) >> 16) + c[4 + i]) \
-            + ((c[12 + i] * 35468) >> 16)
-        tmp[i] = a + d
-        tmp[12 + i] = a - d
-        tmp[4 + i] = b + c1
-        tmp[8 + i] = b - c1
-    blk = dst[y0:y0 + 4, x0:x0 + 4].tolist()
-    for i in range(4):                              # horizontal pass
-        r = 4 * i
-        dc = tmp[r] + 4
-        a = dc + tmp[r + 2]
-        b = dc - tmp[r + 2]
-        c1 = ((tmp[r + 1] * 35468) >> 16) \
-            - (((tmp[r + 3] * 20091) >> 16) + tmp[r + 3])
-        d = (((tmp[r + 1] * 20091) >> 16) + tmp[r + 1]) \
-            + ((tmp[r + 3] * 35468) >> 16)
-        row = blk[i]
-        v = row[0] + ((a + d) >> 3)
-        row[0] = 0 if v < 0 else (255 if v > 255 else v)
-        v = row[1] + ((b + c1) >> 3)
-        row[1] = 0 if v < 0 else (255 if v > 255 else v)
-        v = row[2] + ((b - c1) >> 3)
-        row[2] = 0 if v < 0 else (255 if v > 255 else v)
-        v = row[3] + ((a - d) >> 3)
-        row[3] = 0 if v < 0 else (255 if v > 255 else v)
-    dst[y0:y0 + 4, x0:x0 + 4] = blk
+def _idct4x4_add(c: list, P: bytearray, o: int, S: int) -> None:
+    """4x4 inverse DCT added to the prediction at offset ``o`` of the
+    row-stride-``S`` plane ``P``, §14.3 (integer exact:
+    MUL1(a) = ((a*20091)>>16)+a, MUL2(a) = (a*35468)>>16).  A DC-only
+    block adds (DC + 4) >> 3 to every pixel, as the full passes do."""
+    if any(c[1:]):
+        tmp = [0] * 16
+        for i in range(4):                              # vertical pass
+            a = c[i] + c[8 + i]
+            b = c[i] - c[8 + i]
+            c1 = ((c[4 + i] * 35468) >> 16) \
+                - (((c[12 + i] * 20091) >> 16) + c[12 + i])
+            d = (((c[4 + i] * 20091) >> 16) + c[4 + i]) \
+                + ((c[12 + i] * 35468) >> 16)
+            tmp[i] = a + d
+            tmp[12 + i] = a - d
+            tmp[4 + i] = b + c1
+            tmp[8 + i] = b - c1
+        res = []
+        for r in range(0, 16, 4):                       # horizontal pass
+            dc = tmp[r] + 4
+            a = dc + tmp[r + 2]
+            b = dc - tmp[r + 2]
+            c1 = ((tmp[r + 1] * 35468) >> 16) \
+                - (((tmp[r + 3] * 20091) >> 16) + tmp[r + 3])
+            d = (((tmp[r + 1] * 20091) >> 16) + tmp[r + 1]) \
+                + ((tmp[r + 3] * 35468) >> 16)
+            res.append(((a + d) >> 3, (b + c1) >> 3, (b - c1) >> 3,
+                        (a - d) >> 3))
+    else:                                           # DC only
+        dc = (c[0] + 4) >> 3
+        res = ((dc, dc, dc, dc),) * 4
+    for d0, d1, d2, d3 in res:
+        p0, p1, p2, p3 = P[o:o + 4]
+        v0 = p0 + d0
+        v1 = p1 + d1
+        v2 = p2 + d2
+        v3 = p3 + d3
+        P[o:o + 4] = (0 if v0 < 0 else (255 if v0 > 255 else v0),
+                      0 if v1 < 0 else (255 if v1 > 255 else v1),
+                      0 if v2 < 0 else (255 if v2 > 255 else v2),
+                      0 if v3 < 0 else (255 if v3 > 255 else v3))
+        o += S
 
 
-def _iwht4x4(coeffs: np.ndarray) -> list[int]:
+def _iwht4x4(c: list[int]) -> list[int]:
     """Inverse Walsh-Hadamard for the Y2 block -> 16 luma DCs, §14.3."""
-    c = coeffs
     tmp = [0] * 16
     for i in range(4):
         a = c[i] + c[12 + i]
@@ -403,133 +495,157 @@ def _iwht4x4(coeffs: np.ndarray) -> list[int]:
 
 
 # ------------------------------------------------------ intra predictors
+#
+# Both predictors write into a padded plane P (row stride S) at the
+# offset o of the block's top-left pixel: the row above is at o - S and
+# the column to the left at o - 1.
 
-def _avg2(a, b):
-    return (a + b + 1) >> 1
+_ROW4 = [bytes((v,)) * 4 for v in range(256)]      # a 4-pixel run of v
 
 
-def _avg3(a, b, c):
-    return (a + 2 * b + c + 2) >> 2
-
-
-def _pred_block(plane: np.ndarray, y0: int, x0: int, size: int,
-                mode: int, have_above: bool, have_left: bool) -> None:
-    """16x16 / 8x8 whole-block prediction written into the padded
-    plane at (y0, x0), §12.2."""
-    above = plane[y0 - 1, x0:x0 + size].astype(np.int32)
-    left = plane[y0:y0 + size, x0 - 1].astype(np.int32)
-    al = int(plane[y0 - 1, x0 - 1])
+def _pred_block(P: bytearray, o: int, S: int, size: int, mode: int,
+                have_above: bool, have_left: bool) -> None:
+    """16x16 / 8x8 whole-block prediction, §12.2."""
+    above = P[o - S:o - S + size]
+    left = P[o - 1:o - 1 + size * S:S]
     if mode == DC_PRED:
         if have_above and have_left:
-            dc = (int(above.sum()) + int(left.sum()) + size) \
+            dc = (sum(above) + sum(left) + size) \
                 >> (5 if size == 16 else 4)
         elif have_above:
-            dc = (int(above.sum()) + (size >> 1)) \
-                >> (4 if size == 16 else 3)
+            dc = (sum(above) + (size >> 1)) >> (4 if size == 16 else 3)
         elif have_left:
-            dc = (int(left.sum()) + (size >> 1)) \
-                >> (4 if size == 16 else 3)
+            dc = (sum(left) + (size >> 1)) >> (4 if size == 16 else 3)
         else:
             dc = 128
-        plane[y0:y0 + size, x0:x0 + size] = dc
+        rows = [bytes((dc,)) * size] * size
     elif mode == V_PRED:
-        plane[y0:y0 + size, x0:x0 + size] = above
+        rows = [above] * size
     elif mode == H_PRED:
-        plane[y0:y0 + size, x0:x0 + size] = left[:, None]
+        rows = [bytes((v,)) * size for v in left]
     else:                                           # TM_PRED
-        blk = left[:, None] + above[None, :] - al
-        plane[y0:y0 + size, x0:x0 + size] = np.clip(blk, 0, 255)
+        al = P[o - S - 1]
+        rows = [bytes(0 if v < 0 else (255 if v > 255 else v)
+                      for v in (l - al + a for a in above))
+                for l in left]
+    for r, row in enumerate(rows):
+        q = o + r * S
+        P[q:q + size] = row
 
 
-def _pred_b(plane: np.ndarray, sy: int, sx: int, mode: int,
-            tr: list[int]) -> None:
-    """4x4 B-mode prediction at padded coords (sy, sx); ``tr`` is the
-    4-pixel above-right context, §12.3."""
-    t = [int(v) for v in plane[sy - 1, sx:sx + 4]]
-    l = [int(v) for v in plane[sy:sy + 4, sx - 1]]
-    x = int(plane[sy - 1, sx - 1])
-    A, B, C, D = t
-    E, F, G, H = tr
-    I, J, K, L = l
-    o = [[0] * 4 for _ in range(4)]
-    if mode == B_DC:
-        dc = (A + B + C + D + I + J + K + L + 4) >> 3
-        for j in range(4):
-            for i in range(4):
-                o[j][i] = dc
-    elif mode == B_TM:
-        for j in range(4):
-            for i in range(4):
-                v = l[j] + t[i] - x
-                o[j][i] = 0 if v < 0 else (255 if v > 255 else v)
-    elif mode == B_VE:
-        vals = (_avg3(x, A, B), _avg3(A, B, C), _avg3(B, C, D),
-                _avg3(C, D, E))
-        for j in range(4):
-            o[j] = list(vals)
-    elif mode == B_HE:
-        rows = (_avg3(x, I, J), _avg3(I, J, K), _avg3(J, K, L),
-                _avg3(K, L, L))
-        for j in range(4):
-            o[j] = [rows[j]] * 4
-    elif mode == B_RD:
-        o[3][0] = _avg3(J, K, L)
-        o[2][0] = o[3][1] = _avg3(I, J, K)
-        o[1][0] = o[2][1] = o[3][2] = _avg3(x, I, J)
-        o[0][0] = o[1][1] = o[2][2] = o[3][3] = _avg3(A, x, I)
-        o[0][1] = o[1][2] = o[2][3] = _avg3(B, A, x)
-        o[0][2] = o[1][3] = _avg3(C, B, A)
-        o[0][3] = _avg3(D, C, B)
-    elif mode == B_VR:
-        o[0][0] = o[2][1] = _avg2(x, A)
-        o[0][1] = o[2][2] = _avg2(A, B)
-        o[0][2] = o[2][3] = _avg2(B, C)
-        o[0][3] = _avg2(C, D)
-        o[3][0] = _avg3(K, J, I)
-        o[2][0] = _avg3(J, I, x)
-        o[1][0] = o[3][1] = _avg3(I, x, A)
-        o[1][1] = o[3][2] = _avg3(x, A, B)
-        o[1][2] = o[3][3] = _avg3(A, B, C)
-        o[1][3] = _avg3(B, C, D)
-    elif mode == B_LD:
-        o[0][0] = _avg3(A, B, C)
-        o[0][1] = o[1][0] = _avg3(B, C, D)
-        o[0][2] = o[1][1] = o[2][0] = _avg3(C, D, E)
-        o[0][3] = o[1][2] = o[2][1] = o[3][0] = _avg3(D, E, F)
-        o[1][3] = o[2][2] = o[3][1] = _avg3(E, F, G)
-        o[2][3] = o[3][2] = _avg3(F, G, H)
-        o[3][3] = _avg3(G, H, H)
-    elif mode == B_VL:
-        o[0][0] = _avg2(A, B)
-        o[0][1] = o[2][0] = _avg2(B, C)
-        o[0][2] = o[2][1] = _avg2(C, D)
-        o[0][3] = o[2][2] = _avg2(D, E)
-        o[1][0] = _avg3(A, B, C)
-        o[1][1] = o[3][0] = _avg3(B, C, D)
-        o[1][2] = o[3][1] = _avg3(C, D, E)
-        o[1][3] = o[3][2] = _avg3(D, E, F)
-        o[2][3] = _avg3(E, F, G)
-        o[3][3] = _avg3(F, G, H)
-    elif mode == B_HD:
-        o[0][0] = o[1][2] = _avg2(I, x)
-        o[1][0] = o[2][2] = _avg2(J, I)
-        o[2][0] = o[3][2] = _avg2(K, J)
-        o[3][0] = _avg2(L, K)
-        o[0][3] = _avg3(A, B, C)
-        o[0][2] = _avg3(x, A, B)
-        o[0][1] = o[1][3] = _avg3(I, x, A)
-        o[1][1] = o[2][3] = _avg3(x, I, J)
-        o[2][1] = o[3][3] = _avg3(I, J, K)
-        o[3][1] = _avg3(J, K, L)
-    else:                                           # B_HU
-        o[0][0] = _avg2(I, J)
-        o[0][1] = _avg3(I, J, K)
-        o[0][2] = o[1][0] = _avg2(J, K)
-        o[0][3] = o[1][1] = _avg3(J, K, L)
-        o[1][2] = o[2][0] = _avg2(K, L)
-        o[1][3] = o[2][1] = _avg3(K, L, L)
-        o[2][2] = o[2][3] = o[3][0] = o[3][1] = o[3][2] = o[3][3] = L
-    plane[sy:sy + 4, sx:sx + 4] = o
+def _pred_i4x4(P: bytearray, o: int, S: int, bmodes: list[int], tr_mb,
+               mask: int, coeffs: list[int]) -> None:
+    """The 16 subblocks of a B_PRED macroblock in raster order: 4x4
+    prediction (§12.3), then the inverse transform of each subblock
+    whose ``mask`` bit is set.  ``tr_mb`` is the above-right context of
+    the right column.  Pixel names follow the RFC: x the corner, A..D
+    above, E..H above-right, I..L left."""
+    b = 0
+    for j in range(4):
+        o4 = o + 4 * j * S
+        for i in range(4):
+            mode = bmodes[b]
+            t = o4 - S
+            if i == 3:
+                x, A, B, C, D = P[t - 1:t + 4]
+                E, F, G, H = tr_mb
+            else:
+                x, A, B, C, D, E, F, G, H = P[t - 1:t + 8]
+            I, J, K, L = P[o4 - 1:o4 + 3 * S:S]
+            if mode == B_DC:
+                dc = (A + B + C + D + I + J + K + L + 4) >> 3
+                r0 = r1 = r2 = r3 = _ROW4[dc]
+            elif mode == B_TM:
+                r0, r1, r2, r3 = (
+                    tuple(0 if v < 0 else (255 if v > 255 else v)
+                          for v in (d + A, d + B, d + C, d + D))
+                    for d in (I - x, J - x, K - x, L - x))
+            elif mode == B_VE:
+                r0 = r1 = r2 = r3 = ((x + 2 * A + B + 2) >> 2,
+                                     (A + 2 * B + C + 2) >> 2,
+                                     (B + 2 * C + D + 2) >> 2,
+                                     (C + 2 * D + E + 2) >> 2)
+            elif mode == B_HE:
+                r0 = ((x + 2 * I + J + 2) >> 2,) * 4
+                r1 = ((I + 2 * J + K + 2) >> 2,) * 4
+                r2 = ((J + 2 * K + L + 2) >> 2,) * 4
+                r3 = ((K + 3 * L + 2) >> 2,) * 4
+            elif mode == B_RD:
+                e0 = (J + 2 * K + L + 2) >> 2
+                e1 = (I + 2 * J + K + 2) >> 2
+                e2 = (x + 2 * I + J + 2) >> 2
+                e3 = (A + 2 * x + I + 2) >> 2
+                e4 = (B + 2 * A + x + 2) >> 2
+                e5 = (C + 2 * B + A + 2) >> 2
+                e6 = (D + 2 * C + B + 2) >> 2
+                r0, r1, r2, r3 = ((e3, e4, e5, e6), (e2, e3, e4, e5),
+                                  (e1, e2, e3, e4), (e0, e1, e2, e3))
+            elif mode == B_VR:
+                a0 = (x + A + 1) >> 1
+                a1 = (A + B + 1) >> 1
+                a2 = (B + C + 1) >> 1
+                a3 = (C + D + 1) >> 1
+                b0 = (K + 2 * J + I + 2) >> 2
+                b1 = (J + 2 * I + x + 2) >> 2
+                b2 = (I + 2 * x + A + 2) >> 2
+                b3 = (x + 2 * A + B + 2) >> 2
+                b4 = (A + 2 * B + C + 2) >> 2
+                b5 = (B + 2 * C + D + 2) >> 2
+                r0, r1, r2, r3 = ((a0, a1, a2, a3), (b2, b3, b4, b5),
+                                  (b1, a0, a1, a2), (b0, b2, b3, b4))
+            elif mode == B_LD:
+                e0 = (A + 2 * B + C + 2) >> 2
+                e1 = (B + 2 * C + D + 2) >> 2
+                e2 = (C + 2 * D + E + 2) >> 2
+                e3 = (D + 2 * E + F + 2) >> 2
+                e4 = (E + 2 * F + G + 2) >> 2
+                e5 = (F + 2 * G + H + 2) >> 2
+                e6 = (G + 3 * H + 2) >> 2
+                r0, r1, r2, r3 = ((e0, e1, e2, e3), (e1, e2, e3, e4),
+                                  (e2, e3, e4, e5), (e3, e4, e5, e6))
+            elif mode == B_VL:
+                a0 = (A + B + 1) >> 1
+                a1 = (B + C + 1) >> 1
+                a2 = (C + D + 1) >> 1
+                a3 = (D + E + 1) >> 1
+                b0 = (A + 2 * B + C + 2) >> 2
+                b1 = (B + 2 * C + D + 2) >> 2
+                b2 = (C + 2 * D + E + 2) >> 2
+                b3 = (D + 2 * E + F + 2) >> 2
+                c0 = (E + 2 * F + G + 2) >> 2
+                c1 = (F + 2 * G + H + 2) >> 2
+                r0, r1, r2, r3 = ((a0, a1, a2, a3), (b0, b1, b2, b3),
+                                  (a1, a2, a3, c0), (b1, b2, b3, c1))
+            elif mode == B_HD:
+                a0 = (I + x + 1) >> 1
+                a1 = (J + I + 1) >> 1
+                a2 = (K + J + 1) >> 1
+                a3 = (L + K + 1) >> 1
+                b0 = (A + 2 * B + C + 2) >> 2
+                b1 = (x + 2 * A + B + 2) >> 2
+                b2 = (I + 2 * x + A + 2) >> 2
+                b3 = (x + 2 * I + J + 2) >> 2
+                b4 = (I + 2 * J + K + 2) >> 2
+                b5 = (J + 2 * K + L + 2) >> 2
+                r0, r1, r2, r3 = ((a0, b2, b1, b0), (a1, b3, a0, b2),
+                                  (a2, b4, a1, b3), (a3, b5, a2, b4))
+            else:                                           # B_HU
+                a0 = (I + J + 1) >> 1
+                a1 = (I + 2 * J + K + 2) >> 2
+                a2 = (J + K + 1) >> 1
+                a3 = (J + 2 * K + L + 2) >> 2
+                a4 = (K + L + 1) >> 1
+                a5 = (K + 3 * L + 2) >> 2
+                r0, r1, r2, r3 = ((a0, a1, a2, a3), (a2, a3, a4, a5),
+                                  (a4, a5, L, L), (L, L, L, L))
+            P[o4:o4 + 4] = r0
+            P[o4 + S:o4 + S + 4] = r1
+            P[o4 + 2 * S:o4 + 2 * S + 4] = r2
+            P[o4 + 3 * S:o4 + 3 * S + 4] = r3
+            if mask >> b & 1:
+                _idct4x4_add(coeffs[16 * b:16 * b + 16], P, o4, S)
+            b += 1
+            o4 += 4
 
 
 # ------------------------------------------------------------ loop filter
@@ -764,21 +880,26 @@ def vp8_decode_yuv(data: bytes):
     mb_w = (width + 15) >> 4
     mb_h = (height + 15) >> 4
     dq = _dequant_factors(h)
-    probs = h.probs
+    by_pos = _split_tables(h.probs)
+    schedules = [[_block_schedule(by_pos, dq[s], has_y2)
+                  for has_y2 in (False, True)] for s in range(4)]
 
-    Y = np.empty((mb_h * 16 + 1, mb_w * 16 + 1), np.uint8)
-    U = np.empty((mb_h * 8 + 1, mb_w * 8 + 1), np.uint8)
-    V = np.empty((mb_h * 8 + 1, mb_w * 8 + 1), np.uint8)
-    for P in (Y, U, V):
-        P[0, :] = 127
-        P[:, 0] = 129
-        P[0, 0] = 127
+    # padded planes, row stride SY / SC: row 0 and column 0 are the
+    # §12.2 borders (127 above, 129 to the left, 127 in the corner)
+    SY = 16 * mb_w + 1
+    SC = 8 * mb_w + 1
+    Y = bytearray(b"\x81") * (SY * (16 * mb_h + 1))
+    Y[:SY] = b"\x7f" * SY
+    U = bytearray(b"\x81") * (SC * (8 * mb_h + 1))
+    U[:SC] = b"\x7f" * SC
+    V = bytearray(U)
 
     above_bmode = [B_DC] * (4 * mb_w)
     above_nz = [[0] * 9 for _ in range(mb_w)]
     mb_info = []
     _IMPLIED = {DC_PRED: B_DC, V_PRED: B_VE, H_PRED: B_HE,
                 TM_PRED: B_TM}
+    seg_probs = h.seg_tree_probs
 
     for mb_y in range(mb_h):
         left_bmode = [B_DC] * 4
@@ -786,154 +907,70 @@ def vp8_decode_yuv(data: bytes):
         tbr = parts[mb_y % nparts]
         for mb_x in range(mb_w):
             # ---- modes (first partition)
-            seg = 0
-            if h.update_map:
-                tp = h.seg_tree_probs
-                seg = (2 + br.get(tp[2])) if br.get(tp[0]) \
-                    else br.get(tp[1])
+            seg = br.tree(_SEGMENT_TREE, seg_probs) if h.update_map else 0
             skip = br.get(h.skip_prob) if h.use_skip else 0
-            is_i4x4 = not br.get(145)
-            bmodes = None
-            if not is_i4x4:
-                if br.get(156):
-                    ymode = TM_PRED if br.get(128) else H_PRED
-                else:
-                    ymode = V_PRED if br.get(163) else DC_PRED
-                ib = _IMPLIED[ymode]
-                for k in range(4):
-                    above_bmode[4 * mb_x + k] = ib
-                    left_bmode[k] = ib
-            else:
-                ymode = B_PRED
-                bmodes = [0] * 16
-                for j in range(4):
-                    for i in range(4):
-                        a = above_bmode[4 * mb_x + i]
-                        l = left_bmode[j]
-                        p = K_BMODES_PROBA[a][l]
-                        if not br.get(p[0]):
-                            m = B_DC
-                        elif not br.get(p[1]):
-                            m = B_TM
-                        elif not br.get(p[2]):
-                            m = B_VE
-                        elif not br.get(p[3]):
-                            if not br.get(p[4]):
-                                m = B_HE
-                            else:
-                                m = B_VR if br.get(p[5]) else B_RD
-                        elif not br.get(p[6]):
-                            m = B_LD
-                        elif not br.get(p[7]):
-                            m = B_VL
-                        else:
-                            m = B_HU if br.get(p[8]) else B_HD
-                        bmodes[4 * j + i] = m
-                        above_bmode[4 * mb_x + i] = m
-                        left_bmode[j] = m
-            if br.get(142):
-                if br.get(114):
-                    uvmode = TM_PRED if br.get(183) else H_PRED
-                else:
-                    uvmode = V_PRED
-            else:
-                uvmode = DC_PRED
-
-            # ---- residuals (token partition)
+            ymode = br.tree(_KF_YMODE_TREE, _KF_YMODE_PROBS)
+            ab = 4 * mb_x
             has_y2 = ymode != B_PRED
-            coefY = [[0] * 16 for _ in range(16)]
-            coefU = [[0] * 16 for _ in range(4)]
-            coefV = [[0] * 16 for _ in range(4)]
-            nzY = [0] * 16
-            nzU = [0] * 4
-            nzV = [0] * 4
-            any_coeff = False
-            anz = above_nz[mb_x]
-            if not skip:
-                y1dc, y1ac, y2dc, y2ac, uvdc, uvac = dq[seg]
-                if has_y2:
-                    c2 = [0] * 16
-                    nz2 = _decode_coeffs(tbr, probs[1],
-                                         left_nz[8] + anz[8], 0,
-                                         y2dc, y2ac, c2)
-                    left_nz[8] = anz[8] = nz2
-                    dcs = _iwht4x4(c2)
-                    ty, first = 0, 1
-                else:
-                    ty, first = 3, 0
-                for j in range(4):
-                    for i in range(4):
-                        blk = coefY[4 * j + i]
-                        nz = _decode_coeffs(tbr, probs[ty],
-                                            left_nz[j] + anz[i],
-                                            first, y1dc, y1ac, blk)
-                        left_nz[j] = anz[i] = nz
-                        if has_y2:
-                            blk[0] = dcs[4 * j + i]
-                        if nz or blk[0]:
-                            nzY[4 * j + i] = 1
-                            any_coeff = True
-                for pl, coefP, nzP, base in ((0, coefU, nzU, 4),
-                                             (1, coefV, nzV, 6)):
-                    for j in range(2):
-                        for i in range(2):
-                            blk = coefP[2 * j + i]
-                            nz = _decode_coeffs(
-                                tbr, probs[2],
-                                left_nz[base + j] + anz[base + i],
-                                0, uvdc, uvac, blk)
-                            left_nz[base + j] = anz[base + i] = nz
-                            if nz:
-                                nzP[2 * j + i] = 1
-                                any_coeff = True
+            if has_y2:
+                ib = _IMPLIED[ymode]
+                above_bmode[ab:ab + 4] = left_bmode = [ib] * 4
             else:
-                for k in range(8):
+                bmodes = [0] * 16
+                for b in range(16):
+                    i, j = b & 3, b >> 2
+                    m = br.tree(_BMODE_TREE, K_BMODES_PROBA[
+                        above_bmode[ab + i]][left_bmode[j]])
+                    bmodes[b] = above_bmode[ab + i] = left_bmode[j] = m
+            uvmode = br.tree(_UV_MODE_TREE, _KF_UV_MODE_PROBS)
+
+            # ---- residuals (token partition); mask bit b = block b
+            # (Y 0..15, U 16..19, V 20..23) needs its inverse transform
+            anz = above_nz[mb_x]
+            coeffs = [0] * 400
+            if skip:
+                mask = 0
+                for k in range(9 if has_y2 else 8):
                     left_nz[k] = anz[k] = 0
+            else:
+                mask = _decode_residuals(tbr, schedules[seg][has_y2],
+                                         left_nz, anz, coeffs) & 0xFFFFFF
                 if has_y2:
-                    left_nz[8] = anz[8] = 0
+                    for b, dc in enumerate(_iwht4x4(coeffs[384:])):
+                        if dc:
+                            coeffs[16 * b] = dc
+                            mask |= 1 << b
 
             # ---- reconstruction
-            y0, x0 = 1 + mb_y * 16, 1 + mb_x * 16
-            if is_i4x4:
-                if mb_y == 0:
-                    tr_mb = [127, 127, 127, 127]
-                elif mb_x == mb_w - 1:
-                    tr_mb = [int(Y[y0 - 1, x0 + 15])] * 4
-                else:
-                    tr_mb = [int(v) for v in
-                             Y[y0 - 1, x0 + 16:x0 + 20]]
-                for j in range(4):
-                    for i in range(4):
-                        sy, sx = y0 + 4 * j, x0 + 4 * i
-                        if i < 3:
-                            tr = [int(v) for v in
-                                  Y[sy - 1, sx + 4:sx + 8]]
-                        else:
-                            tr = tr_mb
-                        _pred_b(Y, sy, sx, bmodes[4 * j + i], tr)
-                        if nzY[4 * j + i]:
-                            _idct4x4_add(coefY[4 * j + i], Y, sy, sx)
+            o = (16 * mb_y + 1) * SY + 16 * mb_x + 1
+            if has_y2:
+                _pred_block(Y, o, SY, 16, ymode, mb_y > 0, mb_x > 0)
+                for b in range(16):
+                    if mask >> b & 1:
+                        _idct4x4_add(coeffs[16 * b:16 * b + 16], Y,
+                                     o + (b >> 2) * 4 * SY + (b & 3) * 4, SY)
             else:
-                _pred_block(Y, y0, x0, 16, ymode, mb_y > 0, mb_x > 0)
-                for j in range(4):
-                    for i in range(4):
-                        if nzY[4 * j + i]:
-                            _idct4x4_add(coefY[4 * j + i], Y,
-                                         y0 + 4 * j, x0 + 4 * i)
-            cy, cx = 1 + mb_y * 8, 1 + mb_x * 8
-            _pred_block(U, cy, cx, 8, uvmode, mb_y > 0, mb_x > 0)
-            _pred_block(V, cy, cx, 8, uvmode, mb_y > 0, mb_x > 0)
-            for j in range(2):
-                for i in range(2):
-                    if nzU[2 * j + i]:
-                        _idct4x4_add(coefU[2 * j + i], U,
-                                     cy + 4 * j, cx + 4 * i)
-                    if nzV[2 * j + i]:
-                        _idct4x4_add(coefV[2 * j + i], V,
-                                     cy + 4 * j, cx + 4 * i)
-            mb_info.append((seg, 1 if is_i4x4 else 0,
-                            1 if (any_coeff or is_i4x4) else 0))
+                if mb_y == 0:
+                    tr_mb = b"\x7f\x7f\x7f\x7f"
+                elif mb_x == mb_w - 1:
+                    tr_mb = bytes((Y[o - SY + 15],)) * 4
+                else:
+                    tr_mb = Y[o - SY + 16:o - SY + 20]
+                _pred_i4x4(Y, o, SY, bmodes, tr_mb, mask, coeffs)
+            co = (8 * mb_y + 1) * SC + 8 * mb_x + 1
+            for P, first in ((U, 16), (V, 20)):
+                _pred_block(P, co, SC, 8, uvmode, mb_y > 0, mb_x > 0)
+                for b in range(first, first + 4):
+                    if mask >> b & 1:
+                        _idct4x4_add(coeffs[16 * b:16 * b + 16], P,
+                                     co + ((b - first) >> 1) * 4 * SC
+                                     + ((b - first) & 1) * 4, SC)
+            mb_info.append((seg, 0 if has_y2 else 1,
+                            1 if (mask or not has_y2) else 0))
 
+    Y = np.frombuffer(Y, np.uint8).reshape(16 * mb_h + 1, SY)
+    U = np.frombuffer(U, np.uint8).reshape(8 * mb_h + 1, SC)
+    V = np.frombuffer(V, np.uint8).reshape(8 * mb_h + 1, SC)
     # libwebp parity (ParseFilterHeader): a header filter_level of 0
     # disables the loop filter ENTIRELY — filter_type_ = level_ == 0 ?
     # 0 : ... — even when segment-mode absolute strengths or positive
@@ -967,23 +1004,24 @@ def _mix_rows(tl, t, l, c):
 
 
 def _upsample_pair(tu, cu, width):
-    """One chroma component: (top chroma row, bottom chroma row) ->
-    (top luma-row chroma, bottom luma-row chroma) at full width."""
-    tl, t = tu[:-1], tu[1:]
-    l, c = cu[:-1], cu[1:]
+    """One chroma component: (top chroma rows, bottom chroma rows) ->
+    (top luma-row chroma, bottom luma-row chroma) at full width; the
+    rows are the last axis, so a whole plane of row pairs goes at once."""
+    tl, t = tu[..., :-1], tu[..., 1:]
+    l, c = cu[..., :-1], cu[..., 1:]
     to, te, bo, be = _mix_rows(tl, t, l, c)
-    out_t = np.empty(width, np.int32)
-    out_b = np.empty(width, np.int32)
-    out_t[0] = (3 * tu[0] + cu[0] + 2) >> 2
-    out_b[0] = (3 * cu[0] + tu[0] + 2) >> 2
-    n = len(tu) - 1                         # chroma pairs
-    out_t[1:2 * n:2] = to
-    out_t[2:2 * n + 1:2] = te
-    out_b[1:2 * n:2] = bo
-    out_b[2:2 * n + 1:2] = be
+    out_t = np.empty(tu.shape[:-1] + (width,), np.int32)
+    out_b = np.empty(tu.shape[:-1] + (width,), np.int32)
+    out_t[..., 0] = (3 * tu[..., 0] + cu[..., 0] + 2) >> 2
+    out_b[..., 0] = (3 * cu[..., 0] + tu[..., 0] + 2) >> 2
+    n = tu.shape[-1] - 1                    # chroma pairs
+    out_t[..., 1:2 * n:2] = to
+    out_t[..., 2:2 * n + 1:2] = te
+    out_b[..., 1:2 * n:2] = bo
+    out_b[..., 2:2 * n + 1:2] = be
     if width & 1 == 0:                      # even width: last col fixup
-        out_t[width - 1] = (3 * tu[-1] + cu[-1] + 2) >> 2
-        out_b[width - 1] = (3 * cu[-1] + tu[-1] + 2) >> 2
+        out_t[..., width - 1] = (3 * tu[..., -1] + cu[..., -1] + 2) >> 2
+        out_b[..., width - 1] = (3 * cu[..., -1] + tu[..., -1] + 2) >> 2
     return out_t, out_b
 
 
@@ -994,20 +1032,14 @@ def _fancy_upsample(U: np.ndarray, width: int, height: int) -> np.ndarray:
     (2j+1, 2j+2) across chroma rows (j, j+1)."""
     out = np.empty((height, width), np.int32)
     Ui = U.astype(np.int32)
-    t0, _ = _upsample_pair(Ui[0], Ui[0], width)
-    out[0] = t0
+    out[0] = _upsample_pair(Ui[0], Ui[0], width)[0]
     ch = U.shape[0]
-    for j in range(ch - 1):
-        r = 2 * j + 1
-        if r >= height:
-            break
-        ot, ob = _upsample_pair(Ui[j], Ui[j + 1], width)
-        out[r] = ot
-        if r + 1 < height:
-            out[r + 1] = ob
+    if ch > 1:
+        ot, ob = _upsample_pair(Ui[:-1], Ui[1:], width)
+        out[1:2 * ch - 1:2] = ot
+        out[2:2 * ch - 1:2] = ob
     if height > 1 and (height & 1) == 0:
-        tl, _ = _upsample_pair(Ui[ch - 1], Ui[ch - 1], width)
-        out[height - 1] = tl
+        out[height - 1] = _upsample_pair(Ui[ch - 1], Ui[ch - 1], width)[0]
     return out
 
 

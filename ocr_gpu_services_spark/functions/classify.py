@@ -3,51 +3,30 @@
 Exact Spark twin of core/classify.py, which mirrors
 /root/reference/src/infrastructure/services/classification_service.py:29-43.
 The order semantics ("first type with >= 1 hit wins", dict insertion order)
-are encoded as an ORDERED when-chain — NOT a groupBy argmax — per
-SURVEY.md §7.3 item 5.  Everything stays inside whole-stage codegen: no UDF.
+are encoded as an ORDERED CASE WHEN chain — NOT a groupBy argmax — per
+SURVEY.md §7.3 item 5.  One SQL definition, ``classify_case_sql``, serves
+Spark (through ``F.expr``) and the DuckDB oracle alike.  Everything stays
+inside whole-stage codegen: no UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.classify import DOCUMENT_KEYWORDS
 
 
-def _hits(low: Column, keywords: list[str]) -> Column:
-    out = F.lit(0)
-    for kw in keywords:
-        out = out + F.when(low.contains(F.lit(kw.lower())), 1).otherwise(0)
-    return out
-
-
-def doc_type_cols(text_col: str = "extracted_text") -> tuple[Column, Column]:
-    """(doc_type, doc_type_conf) expression pair."""
-    low = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    hit_cols = [(name, _hits(low, kws), len(kws))
-                for name, kws in DOCUMENT_KEYWORDS]
-    dt: Column = F.lit("unknown")
-    conf: Column = F.lit(0.0)
-    # build the chain from the LAST type backwards so the first match wins
-    for name, hits, n in reversed(hit_cols):
-        dt = F.when(hits > 0, F.lit(name)).otherwise(dt)
-        conf = F.when(hits > 0, hits.cast("double") / F.lit(float(n))) \
-                .otherwise(conf)
-    return dt, conf
-
-
 def with_classification(df: DataFrame,
                         text_col: str = "extracted_text") -> DataFrame:
-    dt, conf = doc_type_cols(text_col)
-    return df.withColumn("doc_type", dt).withColumn("doc_type_conf", conf)
+    dt, conf = classify_case_sql(text_col)
+    return df.withColumns({"doc_type": F.expr(dt),
+                           "doc_type_conf": F.expr(conf)})
 
 
 def classify_case_sql(text_expr: str) -> tuple[str, str]:
-    """ANSI-SQL twin (DuckDB oracle) of doc_type_cols: (type_sql, conf_sql).
-
-    Generated from the same DOCUMENT_KEYWORDS constant so Spark and oracle
-    can never drift apart.
+    """(type_sql, conf_sql): the (doc_type, doc_type_conf) pair as ANSI SQL
+    that Spark and DuckDB both parse, generated from DOCUMENT_KEYWORDS.
     """
     def hits(kws):
         return " + ".join(

@@ -17,7 +17,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.classify import classify_case_sql, doc_type_cols
+from ..functions.classify import classify_case_sql
 from ..functions.textops import clean_text_col, clean_text_sql, token_count_col
 from ..operators import ann, boxes, dedup, textstats
 from ..operators.layout_match import classify_against_templates
@@ -127,9 +127,9 @@ _DT_SQL, _CONF_SQL = classify_case_sql("text")
     SELECT doc_id, {_DT_SQL} AS doc_type, {_CONF_SQL} AS doc_type_conf
     FROM documents""")
 def keyword_classify(spark, sf_dir):
-    dt, conf = doc_type_cols("text")
     return _tw(spark, sf_dir, "documents").select(
-        "doc_id", dt.alias("doc_type"), conf.alias("doc_type_conf"))
+        "doc_id", F.expr(_DT_SQL).alias("doc_type"),
+        F.expr(_CONF_SQL).alias("doc_type_conf"))
 
 
 @q("text_clean", f"""

@@ -6,7 +6,8 @@ Spark partition discovery gives real partition pruning).
 Commit protocol per partition value (e.g. ``warc_day=2024-03-04``):
 1. Spark writes the partition directory (dynamic partition overwrite)
 2. the driver fsyncs a manifest ``_manifests/<part>.json`` with the file
-   list, byte sizes, and row count, via tmp-file + atomic ``os.replace``
+   list, byte sizes, and row count (summed from the files' parquet
+   footers), via tmp-file + atomic ``os.replace``
 
 The manifest is the commit point: a killed run leaves either no manifest
 (partition will be rewritten on resume — idempotent overwrite) or a complete
@@ -23,8 +24,8 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class IcebergLikeTable:
@@ -40,12 +41,17 @@ class IcebergLikeTable:
         return {f[:-5] for f in os.listdir(self.manifest_dir)
                 if f.endswith(".json")}
 
-    def _write_manifest(self, part_value: str, rows: int, run_id: str,
-                        files: list[str] | None = None):
+    def _write_manifest(self, part_value: str, run_id: str,
+                        files: list[str] | None = None) -> int:
+        """Commit the manifest of one partition directory (default: every
+        parquet file in it) and return its row count, the sum of the
+        files' footer ``num_rows``: no Spark job reads the data back."""
         part_dir = os.path.join(self.path, f"{self.partition_col}={part_value}")
         if files is None:
             files = sorted(f for f in os.listdir(part_dir)
                            if f.endswith(".parquet"))
+        rows = sum(pq.read_metadata(os.path.join(part_dir, f)).num_rows
+                   for f in files)
         manifest = {
             "partition": f"{self.partition_col}={part_value}",
             "files": [{"name": f,
@@ -62,6 +68,7 @@ class IcebergLikeTable:
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(self.manifest_dir, f"{part_value}.json"))
+        return rows
 
     # -- write with resume -----------------------------------------------------
     def write(self, df: DataFrame, run_id: str) -> dict:
@@ -70,30 +77,19 @@ class IcebergLikeTable:
         already-committed partitions from ``df``'s SOURCE (below the kernel)
         so resume skips the expensive work, not just the write.
 
-        The single .write is the only materialization of the lineage; row
-        counts for the manifests come from a read-back count over the
-        freshly written parquet (column-pruned scan: row-group counts only
-        — far cheaper than running the extraction lineage twice).
-        Returns {partition_value: row_count} committed now."""
+        The single .write is the only materialization of the lineage; the
+        manifests' row counts come from the parquet footers of the files
+        each one lists.  Returns {partition_value: row_count} committed
+        now."""
         pc = self.partition_col
-        spark = df.sparkSession
         done = self.committed_partitions()
         (df.write.mode("overwrite")
            .option("partitionOverwriteMode", "dynamic")
            .partitionBy(pc).parquet(self.path))
         on_disk = {d.split("=", 1)[1] for d in os.listdir(self.path)
                    if d.startswith(pc + "=")}
-        new_parts = sorted(on_disk - done)
-        if not new_parts:
-            return {}
-        counts = {str(r[pc]): r["cnt"]
-                  for r in (spark.read.parquet(self.path)
-                            .filter(F.col(pc).cast("string").isin(new_parts))
-                            .groupBy(pc).agg(F.count("*").alias("cnt"))
-                            .collect())}
-        for part_value in new_parts:
-            self._write_manifest(part_value, counts.get(part_value, 0), run_id)
-        return counts
+        return {part_value: self._write_manifest(part_value, run_id)
+                for part_value in sorted(on_disk - done)}
 
     # -- read ---------------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
@@ -295,8 +291,7 @@ class IcebergLikeTable:
                            os.path.join(part_dir, name))
                 new_names.append(name)
         shutil.rmtree(tmp)
-        self._write_manifest(part_value, man["row_count"], run_id,
-                             files=new_names)
+        self._write_manifest(part_value, run_id, files=new_names)
         return {"files_before": len(files), "files_after": len(new_names),
                 "bytes": total}
 

@@ -192,3 +192,25 @@ def test_crafted_progressive_header_capped():
     huge[sof + 5:sof + 9] = b"\xff\xff\xff\xff"     # h = w = 65535
     with pytest.raises(ValueError):
         jpeg_decode(bytes(huge))
+
+
+def test_scan_naming_a_component_the_frame_lacks_is_rejected(monkeypatch):
+    """A progressive SOS naming a component id the SOF lacks is a
+    ValueError from the parse, so pdf_extract's per-image skip drops
+    just that XObject and the PDF keeps its text layer (a KeyError from
+    the scan decoder would lose the whole document)."""
+    from ocr_gpu_services_spark.core.pdf_extract import extract_pdf
+    from ocr_gpu_services_spark.fixtures.codecs import jpeg as jpeg_codec
+    from ocr_gpu_services_spark.fixtures.pdf_write import (
+        DctScanPage, build_pdf, content_stream_ops)
+    g = np.full((16, 16), 90, np.uint8)
+    bad = bytearray(jpeg_encode_progressive(g))
+    bad[bad.index(b"\xff\xda") + 5] = 77        # first SOS component id
+    bad = bytes(bad)
+    with pytest.raises(ValueError, match="component"):
+        jpeg_decode(bad)
+    monkeypatch.setattr(jpeg_codec, "jpeg_encode", lambda img: bad)
+    pdf = build_pdf([content_stream_ops(["TEXT LAYER KEPT"]),
+                     DctScanPage(g)])
+    text, _spans = extract_pdf(pdf)
+    assert text == "TEXT LAYER KEPT"

@@ -183,6 +183,20 @@ def test_frozen_stream_regression():
         assert np.array_equal(out, _lw_rgb(_FROZEN))
 
 
+def test_skipped_b_pred_macroblock_decodes():
+    """Two changed bytes in the frozen stream's first partition turn on
+    the skip flag of a B_PRED macroblock before any macroblock has
+    coefficients: it is predicted subblock by subblock and gets no
+    residual.  The planes are the ones the per-bit decoder produced."""
+    m = bytearray(_FROZEN[20:])
+    m[56], m[59] = 104, 223
+    h = hashlib.sha256()
+    for plane in vp8.vp8_decode_yuv(bytes(m)):
+        h.update(plane.tobytes())
+    assert h.hexdigest() == ("7daf59749231e330a8ffeb885eda24e7"
+                             "f9e39c6949abe1ab02321b3fb0df88a9")
+
+
 def test_header_error_paths():
     with pytest.raises(ValueError):
         vp8.vp8_decode_yuv(b"\x00" * 4)               # truncated
