@@ -417,23 +417,38 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         coefs = decode_scans(scans, comps, h, w, mcus_x, mcus_y)
     else:
         coefs = _baseline_coefs(scans[0], comps, mcus_x, mcus_y)
-    planes = []
-    for coef, (_cid, hs, vs, tq) in zip(coefs, comps):
+    # one component at a time, so its dequantized coefficients and IDCT
+    # temporaries are freed before the next is built; color components
+    # add their terms straight into one float RGB array, in the order
+    # y + 1.402 cr, y - 0.344136286 cb - 0.714136286 cr, y + 1.772 cb
+    for k, (_cid, hs, vs, tq) in enumerate(comps):
+        deq = coefs[k] * qt[tq][_UNZIGZAG].astype(np.float64)
+        coefs[k] = None
+        blocks = _DCT.T @ deq.reshape(-1, 8, 8)
+        del deq
+        blocks = blocks @ _DCT
         bw, bh = mcus_x * hs, mcus_y * vs
-        deq = coef * qt[tq][_UNZIGZAG].astype(np.float64)
-        blocks = _DCT.T @ deq.reshape(-1, 8, 8) @ _DCT
         plane = blocks.reshape(bh, bw, 8, 8) \
             .transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
+        del blocks
         if hs != hmax or vs != vmax:             # chroma upsample
             plane = plane.repeat(vmax // vs, axis=0) \
                          .repeat(hmax // hs, axis=1)
-        planes.append(plane[:h, :w] + 128.0)
-    if len(planes) == 1:
-        return np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = planes
-    cb = cb - 128.0
-    cr = cr - 128.0
-    rgb = np.stack([y + 1.402 * cr,
-                    y - 0.344136286 * cb - 0.714136286 * cr,
-                    y + 1.772 * cb], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+        plane = plane[:h, :w] + 128.0
+        if len(comps) == 1:
+            return np.clip(np.rint(plane), 0, 255).astype(np.uint8)
+        if k == 0:                               # Y
+            rgb = np.empty((h, w, 3))
+            rgb[...] = plane[..., None]
+            continue
+        plane -= 128.0
+        if k == 1:                               # Cb
+            rgb[..., 1] -= 0.344136286 * plane
+            rgb[..., 2] += 1.772 * plane
+        else:                                    # Cr
+            rgb[..., 0] += 1.402 * plane
+            rgb[..., 1] -= 0.714136286 * plane
+        del plane
+    np.rint(rgb, out=rgb)
+    np.clip(rgb, 0, 255, out=rgb)
+    return rgb.astype(np.uint8)

@@ -7,7 +7,7 @@ strictly more robust.  ``SIGNATURES`` states each format's magic bytes
 once; ``sniff_content_type`` (the kernel and oracle route), its Spark
 twin ``operators/sniff.content_type_col`` (generated from the table),
 ``core/extract.decode_image`` and ``probe_image_format`` dispatch on its
-families.  Codecs import their magic constants and ``MAX_PIXELS`` from
+families.  Codecs import their magic constants and pixel caps from
 here; this module imports no codec.
 """
 
@@ -31,6 +31,12 @@ CT_TEXT = "text"
 CT_UNKNOWN = "unknown"
 
 MAX_PIXELS = 1 << 28      # every raster decoder's crafted-header guard
+# Lossy VP8's own cap.  Its frame header gives 14-bit dimensions, so the
+# largest frame is 16383 x 16383 < 2**28 pixels and MAX_PIXELS alone could
+# never trip.  2**26 (64 Mpix, e.g. 8192 x 8192) is the value the decoder
+# has always used; at its ~1 s/Mpix (tools/kernel_cost.py pool) that is
+# still about a minute of CPU, a quarter of what 16383**2 would cost.
+MAX_PIXELS_VP8 = 1 << 26
 
 # (family, clauses, content type).  A payload is in the family when, for
 # every clause (offset, alternatives), the bytes at ``offset`` start with

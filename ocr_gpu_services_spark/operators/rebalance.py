@@ -16,12 +16,19 @@ task before the expensive kernel:
 
 The small branch is two waves per core (2 x defaultParallelism), not
 spark.sql.shuffle.partitions: every partition becomes one Python task of
-the kernel stage, and each such task pays a fixed cost before its first
-row (PySpark's per-task ``importlib.invalidate_caches()`` rescans every
-zip on the worker's path — ~0.2 s of worker CPU each on CPython 3.11,
-re-measure with tools/python_task_cost.py).  A 4-core run of the 420-row
-crawl mix measured 5.7-7.1 s at 32 partitions vs 2.7-3.1 s at 8; below
-two waves the heavy-tailed documents straggle.  At 1000 executors the
+the kernel stage, and one output file per day it holds.  Per-document
+cost is heavy-tailed (on the crawl mix the slowest 1% of rows take ~45% of
+the kernel CPU, perfbench's ``core.top1pct_cpu_share``), and more than one
+task per core lets the other cores take the rest of the rows while one
+task works through a heavy row.  A task's fixed cost no longer sets the
+width: PySpark's per-task ``importlib.invalidate_caches()`` used to cost
+~0.2 s of worker CPU per task (32 partitions took 5.7-7.1 s against
+2.7-3.1 s at 8), and since ``zipdirs`` only a fresh worker's first task
+pays it (tools/python_task_cost.py).  Re-measured since, on a 4-core run
+of the 420-row crawl mix: 4 waves per core did not beat 2 and wrote 73
+output files instead of 39; 1 wave read higher docs/s than 2 in each of 3
+interleaved rounds, too few on a noisy host to change the width
+(ROADMAP item 4).  At 1000 executors the
 same rule holds (defaultParallelism is executors x cores), and each
 mega-page is one task by row atomicity — the best any engine can do
 without splitting documents.

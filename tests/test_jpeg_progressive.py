@@ -55,6 +55,27 @@ def test_progressive_subsampled_color_matches_baseline(subsampling):
         assert np.array_equal(prog, base)
 
 
+def test_color_reconstruction_peak_is_bounded():
+    """Components are reconstructed one at a time into one float RGB
+    array (24 B/px), so a 4:4:4 decode peaks at ~74 B/px here; building
+    all three float planes and the stacked RGB together took ~170."""
+    import tracemalloc
+    h, w = 200, 264
+    y, x = np.mgrid[0:h, 0:w]
+    rgb = np.stack([x * 255 // w, y * 255 // h, (x + y) * 3 % 256],
+                   -1).astype(np.uint8)
+    data = jpeg_encode_progressive(rgb, quant=4)
+    tracemalloc.start()
+    try:
+        prog = jpeg_decode(data)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= 96 * h * w, peak / (h * w)
+    assert np.array_equal(prog, jpeg_decode(
+        jpeg_encode_color(rgb, quant=4, subsampling="444")))
+
+
 def test_eob_runs_across_flat_image():
     # a large flat image maximizes EOB-run lengths (every AC band empty)
     img = np.full((128, 160), 200, np.uint8)

@@ -23,7 +23,8 @@ import pytest
 
 from ocr_gpu_services_spark.core import vp8
 from ocr_gpu_services_spark.core.extract import decode_image
-from ocr_gpu_services_spark.core.sniff import (probe_image_format,
+from ocr_gpu_services_spark.core.sniff import (MAX_PIXELS_VP8,
+                                               probe_image_format,
                                                sniff_content_type)
 from ocr_gpu_services_spark.core.webp import webp_decode
 
@@ -211,6 +212,22 @@ def test_header_error_paths():
         vp8.vp8_decode_yuv(bytes(bad))
     with pytest.raises(ValueError):
         vp8.vp8_decode_yuv(chunk[:30])                # truncated part0
+
+
+def _key_frame_header(width, height):
+    tag = (1 << 4) | (100 << 5)             # key frame, shown, part0 100 B
+    return (struct.pack("<I", tag)[:3] + b"\x9d\x01\x2a"
+            + struct.pack("<HH", width, height))
+
+
+def test_pixel_cap_is_sniffs():
+    assert 16383 * 16383 > MAX_PIXELS_VP8 == 8192 * 8192
+    with pytest.raises(ValueError, match="bad dimensions"):
+        vp8.vp8_decode_yuv(_key_frame_header(8192, 8193))
+    # at the cap the header passes the dimension check and fails on the
+    # 100-byte first partition it does not carry
+    with pytest.raises(ValueError, match="truncated first partition"):
+        vp8.vp8_decode_yuv(_key_frame_header(8192, 8192))
 
 
 def test_adversarial_lossy_payloads_never_crash():
