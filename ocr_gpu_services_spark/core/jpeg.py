@@ -8,12 +8,40 @@ Both modes run one pipeline:
 1. parse: ``_segments`` walks the markers; ``_parse`` turns an 8-bit
    gray or YCbCr SOF0/SOF2 frame into components, quant tables and
    scans, each holding the Huffman tables in force at its SOS;
-2. entropy decode, the only step that differs by mode: ``_decode_scan``
-   for the one sequential scan, ``core/jpeg_progressive.decode_scans``
-   for the Annex G scans; both fill dense coefficient planes (natural
-   8x8 order, raster block order over the MCU-padded component grids);
+2. entropy decode: ``decode_scans`` runs every scan into per-component
+   coefficient arrays.  A scan with Ss = 0 -- the one sequential scan,
+   or a progressive DC scan -- runs ``_mcu_scan``, which walks the
+   scan's coding units (whole MCUs when it is interleaved, else the
+   blocks of one component's grid) and decodes each block's DC and,
+   when Se > 0, its AC band 1..63;
 3. one reconstruction: dequantize, batched 8x8 IDCT, plane assembly,
    chroma upsample (4:4:4, 4:2:2, 4:2:0), YCbCr->RGB.
+
+Progressive streams (Annex G) add, on top of that one walk:
+
+* spectral selection: AC coefficients arrive in per-band scans
+  (Ss..Se), always single-component; DC scans (Ss=Se=0) may be
+  interleaved across components
+* successive approximation: first scans carry the point-transformed
+  coefficients (>> Al); refinement scans (Ah = Al+1) add one bit of
+  precision per coefficient -- newly-significant coefficients are coded
+  as +-1<<Al with a sign bit, previously-significant ones receive
+  plain correction bits appended after each symbol
+* EOB runs: a run of blocks whose remaining band is all zero is coded
+  once as an EOBn symbol with n extra bits
+* DRI restart intervals reset EOB runs, as they reset the DC
+  predictors in both modes
+
+Each component's coefficients live in one flat int32 ``array`` (64
+per block, zigzag order) while the scans run: plain-int element access
+at 4 bytes a coefficient, where a list would also hold a 32-byte int
+object for most nonzero values.  Each scan keeps its bit position in a
+local: a Huffman symbol is one peek-LUT index into the sliding 32-bit
+windows of ``_unstuffed_u32``, and a raw bit or bit field is one window
+read.  The arrays become the dense natural-order planes once, after the
+last scan.  A scan that runs past the end of its data reads past the
+end of the window list and raises IndexError, as a truncated stream
+should.
 
 Malformed streams raise ValueError or IndexError, so the row lands in
 the kernel's ``error`` column and pdf_extract skips just that image.
@@ -22,6 +50,8 @@ the kernel's ``error`` column and pdf_extract skips just that image.
 from __future__ import annotations
 
 import re
+from array import array
+from functools import lru_cache
 
 import numpy as np
 
@@ -148,17 +178,20 @@ def apply_exif_orientation(img: np.ndarray, o: int) -> np.ndarray:
 # directly to (code length << 8 | symbol), so each Huffman symbol costs
 # one list index instead of up to 16 read_bit calls.
 
-from functools import lru_cache
-
-
 @lru_cache(maxsize=32)
 def _build_peek_lut(counts: tuple, values: tuple) -> list[int]:
-    """lut[next16bits] = (codelen << 8) | symbol; 0 = invalid prefix."""
+    """lut[next16bits] = (codelen << 8) | symbol; 0 = invalid prefix.
+    A table whose codes do not fit their lengths, or whose last code is
+    all ones, is rejected as libjpeg's ``jpeg_make_d_derived_tbl`` does
+    (and before any entry is written: an over-subscribed length would
+    otherwise write past the 65536 entries and grow the list)."""
     lut = [0] * 65536
     code = 0
     k = 0
     for length in range(1, 17):
         span = 1 << (16 - length)
+        if code + counts[length - 1] >= 1 << length:
+            raise ValueError("bad Huffman table")
         for _ in range(counts[length - 1]):
             base = code << (16 - length)
             lut[base:base + span] = [(length << 8) | values[k]] * span
@@ -171,9 +204,7 @@ def _build_peek_lut(counts: tuple, values: tuple) -> list[int]:
 def _unstuffed_u32(scan: bytes) -> list[int]:
     """Byte-unstuffed entropy segment as a sliding 32-bit window list:
     u32[i] = big-endian bytes i..i+3 = the 32 bits starting at bit 8*i
-    (4 zero pad bytes keep the last window readable).  Shared by the
-    sequential and the progressive scan decoders so the stuffing,
-    padding, and window-shape invariants live in ONE place."""
+    (4 zero pad bytes keep the last window readable)."""
     data = scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
     b = np.frombuffer(data, dtype=np.uint8).astype(np.uint32)
     return ((b[:-3] << 24) | (b[1:-2] << 16)
@@ -189,76 +220,247 @@ def _sync_restart_pos(u32: list[int], pos: int) -> int:
     return pos + 16
 
 
-def _decode_scan(scan: bytes, schedule: list[tuple], n_mcus: int,
-                 ncomp: int, restart_interval: int = 0):
-    """Entropy-decode ``n_mcus`` MCUs.  ``schedule`` lists the blocks of
-    one MCU in order as (component index, dc_lut, ac_lut).  Returns, per
-    component, parallel lists (sequential block index, zigzag index,
-    dequant-ready value) with DC prediction already folded in (values
-    are absolute DC / raw AC).  Honors DRI restart markers: every
-    ``restart_interval`` MCUs the stream byte-aligns, an RSTn marker is
-    skipped, and the DC predictors reset."""
-    u32 = _unstuffed_u32(scan)
+def decode_scans(scans: list[tuple], comps: list[tuple], h: int, w: int,
+                 mcus_x: int, mcus_y: int) -> list[np.ndarray]:
+    """Entropy-decode every scan (``_parse``'s scan tuples) into
+    per-component dense coefficient planes in frame order: (blocks, 64)
+    int32, natural 8x8 order, in raster block order over the MCU-padded
+    component grid."""
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    geo = {}
+    for cid, hs, vs, _tq in comps:
+        cw = -(-w * hs // hmax)
+        ch = -(-h * vs // vmax)
+        geo[cid] = (hs, vs, mcus_x * hs, -(-cw // 8), -(-ch // 8))
+    for scomps, ss, se, _ah, _al, _ri, sdata in scans:
+        # every block of a scan with Ss = 0 codes at least one bit, two
+        # with an AC band; a scan too short for its blocks would run
+        # past its data, so it fails before a crafted header's planes
+        # are allocated (4 bytes a coefficient)
+        if ss == 0:
+            if len(comps) > 1 and len(scomps) > 1:
+                blocks = mcus_x * mcus_y * sum(geo[cid][0] * geo[cid][1]
+                                               for cid, _dc, _ac in scomps)
+            else:
+                blocks = geo[scomps[0][0]][3] * geo[scomps[0][0]][4]
+            if blocks * (2 if se else 1) > 8 * (len(sdata) + 4):
+                raise IndexError("scan data ends before its blocks do")
+    coef = {cid: array("i", [0]) * (64 * mcus_x * hs * mcus_y * vs)
+            for cid, hs, vs, _tq in comps}
+
+    for scomps, ss, se, ah, al, ri, sdata in scans:
+        u32 = _unstuffed_u32(sdata)
+        if ss == 0:
+            _mcu_scan(u32, scomps, geo, coef, se, ah, al, ri, mcus_x, mcus_y,
+                      len(comps) > 1 and len(scomps) > 1)
+        else:
+            if len(scomps) != 1:
+                raise ValueError("AC progressive scan must be 1-component")
+            cid, _dc, ac_lut = scomps[0]
+            scan = _ac_first_scan if ah == 0 else _ac_refine_scan
+            scan(u32, ac_lut, geo[cid], coef[cid], ss, se, al, ri)
+    return [np.frombuffer(coef[cid], np.int32).reshape(-1, 64)[:, _UNZIGZAG]
+            for cid, _hs, _vs, _tq in comps]
+
+
+def _mcu_scan(u32, scomps, geo, coef, se, ah, al, ri, mcus_x, mcus_y,
+              interleaved):
+    """A scan with Ss = 0: DC first (ah == 0) or refinement, plus the AC
+    band 1..se of each block when se > 0 (the sequential scan).  Its
+    coding units are whole MCUs when the scan is interleaved, else the
+    blocks of one component's own grid; ``layout`` lists each unit's
+    blocks in scan-header order (T.81 A.2.3) as (DC predictor index,
+    coefficient array, DC table, AC table, offset in unit (0, 0), offset
+    step per unit row, per unit column).  Restart intervals count
+    units."""
+    cids = [cid for cid, _dc, _ac in scomps]
+    if interleaved:
+        grid_h, grid_w = mcus_y, mcus_x
+        layout = []
+        for cid, dc_lut, ac_lut in scomps:
+            hs, vs, bw_, _cbw, _cbh = geo[cid]
+            layout += [(cids.index(cid), coef[cid], dc_lut, ac_lut,
+                        64 * (jr * bw_ + jc), 64 * vs * bw_, 64 * hs)
+                       for jr in range(vs) for jc in range(hs)]
+    else:
+        cid, dc_lut, ac_lut = scomps[0]
+        _hs, _vs, bw_, grid_w, grid_h = geo[cid]
+        layout = [(0, coef[cid], dc_lut, ac_lut, 0, 64 * bw_, 64)]
+    pred = [0] * len(scomps)
+    bit_al = 1 << al
     pos = 0
-    prev_dc = [0] * ncomp
-    nblk = [0] * ncomp
-    out = [([], [], []) for _ in range(ncomp)]
-    for mi in range(n_mcus):
-        if restart_interval and mi and mi % restart_interval == 0:
-            pos = _sync_restart_pos(u32, pos)
-            prev_dc = [0] * ncomp
-        for ci, dc_lut, ac_lut in schedule:
-            w = u32[pos >> 3]
-            e = dc_lut[(w >> (16 - (pos & 7))) & 0xFFFF]
-            if not e:
-                raise ValueError("invalid Huffman code")
-            cat = e & 0xFF
-            pos += e >> 8
-            if cat:
-                r = pos & 7
-                bits = (u32[pos >> 3] >> (32 - r - cat)) & ((1 << cat) - 1)
-                pos += cat
-                prev_dc[ci] += bits if bits >> (cat - 1) \
-                    else bits - (1 << cat) + 1
-            bidx, kidx, vals = out[ci]
-            bi = nblk[ci]
-            nblk[ci] = bi + 1
-            bidx.append(bi)
-            kidx.append(0)
-            vals.append(prev_dc[ci])
-            k = 1
-            while k < 64:
+    mi = 0
+    for uy in range(grid_h):
+        for ux in range(grid_w):
+            if ri and mi and mi % ri == 0:
+                pos = _sync_restart_pos(u32, pos)
+                pred = [0] * len(scomps)
+            mi += 1
+            for pi, cf, dc_lut, ac_lut, off, row, col in layout:
+                off += uy * row + ux * col
+                if ah:
+                    if (u32[pos >> 3] >> (31 - (pos & 7))) & 1:
+                        cf[off] |= bit_al
+                    pos += 1
+                    continue
+                e = dc_lut[(u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                if not e:
+                    raise ValueError("invalid Huffman code")
+                pos += e >> 8
+                s = e & 0xFF
+                if s:
+                    v = (u32[pos >> 3] >> (32 - (pos & 7) - s)) \
+                        & ((1 << s) - 1)
+                    pos += s
+                    pred[pi] += v if v >> (s - 1) else v - (1 << s) + 1
+                # a crafted stream can push a DC sum past int32; the
+                # plane keeps it wrapped, as int32 arithmetic would
+                cf[off] = (((pred[pi] << al) + 0x80000000) & 0xFFFFFFFF) \
+                    - 0x80000000
+                k = 1
+                while k <= se:
+                    e = ac_lut[(u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                    if not e:
+                        raise ValueError("invalid Huffman code")
+                    pos += e >> 8
+                    s = e & 15
+                    if s:
+                        k += (e >> 4) & 15
+                        if k > se:
+                            raise ValueError("AC index overflow")
+                        v = (u32[pos >> 3] >> (32 - (pos & 7) - s)) \
+                            & ((1 << s) - 1)
+                        pos += s
+                        cf[off + k] = v if v >> (s - 1) else v - (1 << s) + 1
+                        k += 1
+                    elif e & 0xF0 == 0xF0:           # ZRL
+                        k += 16
+                    else:                            # EOB (T.81 F.13)
+                        break
+
+
+def _ac_first_scan(u32, ac_lut, g, cf, ss, se, al, ri):
+    """AC first scan over one component's real block grid: run/size
+    symbols, magnitudes << Al, EOB runs."""
+    _hs, _vs, bw_, cbw, cbh = g
+    pos = 0
+    eobrun = 0
+    k_blk = 0
+    for by in range(cbh):
+        for bx in range(cbw):
+            if ri and k_blk and k_blk % ri == 0:
+                pos = _sync_restart_pos(u32, pos)
+                eobrun = 0
+            k_blk += 1
+            if eobrun:
+                eobrun -= 1
+                continue
+            base = 64 * (by * bw_ + bx)
+            k = ss
+            while k <= se:
                 w = u32[pos >> 3]
                 e = ac_lut[(w >> (16 - (pos & 7))) & 0xFFFF]
                 if not e:
                     raise ValueError("invalid Huffman code")
-                rs = e & 0xFF
                 pos += e >> 8
-                if rs == 0x00:                   # EOB
+                r = (e >> 4) & 15
+                s = e & 15
+                if s:
+                    k += r
+                    if k > se:
+                        raise ValueError("AC index overflow")
+                    v = (u32[pos >> 3] >> (32 - (pos & 7) - s)) \
+                        & ((1 << s) - 1)
+                    pos += s
+                    cf[base + k] = (v if v >> (s - 1)
+                                    else v - (1 << s) + 1) << al
+                    k += 1
+                elif r != 15:
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += (u32[pos >> 3] >> (32 - (pos & 7) - r)) \
+                            & ((1 << r) - 1)
+                        pos += r
+                    eobrun -= 1
                     break
-                if rs == 0xF0:                   # ZRL
+                else:
                     k += 16
-                    continue
-                k += rs >> 4
-                cat = rs & 0xF
-                if k > 63:
-                    raise ValueError("AC index overflow")
-                if cat:
-                    r = pos & 7
-                    bits = (u32[pos >> 3] >> (32 - r - cat)) \
-                        & ((1 << cat) - 1)
-                    pos += cat
-                    vals.append(bits if bits >> (cat - 1)
-                                else bits - (1 << cat) + 1)
-                    bidx.append(bi)
-                    kidx.append(k)
-                k += 1
-    return out
+
+
+def _ac_refine_scan(u32, ac_lut, g, cf, ss, se, al, ri):
+    """AC refinement scan (G.1.2.3) over one component's real block
+    grid: newly-significant coefficients are coded as +-1<<Al; every
+    nonzero coefficient crossed receives one correction bit, which sets
+    bit Al of its magnitude."""
+    _hs, _vs, bw_, cbw, cbh = g
+    p1 = 1 << al
+    m1 = -(1 << al)
+    pos = 0
+    eobrun = 0
+    k_blk = 0
+    for by in range(cbh):
+        for bx in range(cbw):
+            if ri and k_blk and k_blk % ri == 0:
+                pos = _sync_restart_pos(u32, pos)
+                eobrun = 0
+            k_blk += 1
+            base = 64 * (by * bw_ + bx)
+            k = ss
+            if eobrun == 0:
+                while k <= se:
+                    w = u32[pos >> 3]
+                    e = ac_lut[(w >> (16 - (pos & 7))) & 0xFFFF]
+                    if not e:
+                        raise ValueError("invalid Huffman code")
+                    pos += e >> 8
+                    r = (e >> 4) & 15
+                    val = 0
+                    if e & 15:
+                        val = p1 if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                            else m1
+                        pos += 1
+                    elif r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += (u32[pos >> 3]
+                                       >> (32 - (pos & 7) - r)) \
+                                & ((1 << r) - 1)
+                            pos += r
+                        break
+                    # skip r zero-history coefficients; each nonzero one
+                    # crossed gets its correction bit
+                    while k <= se:
+                        c = cf[base + k]
+                        if c:
+                            if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                                    and not c & p1:
+                                cf[base + k] = c + p1 if c > 0 else c + m1
+                            pos += 1
+                        elif r:
+                            r -= 1
+                        else:
+                            break
+                        k += 1
+                    if val and k <= se:
+                        cf[base + k] = val
+                    k += 1
+            if eobrun:
+                # rest of the band: only correction bits
+                band = cf[base + k:base + se + 1]
+                if any(band):
+                    for j, c in enumerate(band, base + k):
+                        if c:
+                            if (u32[pos >> 3] >> (31 - (pos & 7))) & 1 \
+                                    and not c & p1:
+                                cf[j] = c + p1 if c > 0 else c + m1
+                            pos += 1
+                eobrun -= 1
 
 
 def _parse(data: bytes):
     """Frame and scans of a baseline (SOF0) or progressive (SOF2)
-    stream: ``(progressive, h, w, comps, qt, scans)``.  ``comps`` lists
+    stream: ``(h, w, comps, qt, scans)``.  ``comps`` lists
     (cid, hs, vs, tq) in SOF order; each scan is (scan components, Ss,
     Se, Ah, Al, restart interval, entropy bytes) and its components are
     (cid, dc_lut, ac_lut) with the Huffman tables in force at its SOS
@@ -328,16 +530,17 @@ def _parse(data: bytes):
             scomps = [(seg[1 + 2 * c], dc_tabs.get(seg[2 + 2 * c] >> 4),
                        ac_tabs.get(seg[2 + 2 * c] & 0xF))
                       for c in range(ns)]
+            if {cid for cid, _dc, _ac in scomps} \
+                    - {cid for cid, *_ in comps}:
+                raise ValueError("scan names a component the frame lacks")
             if progressive:
+                # Ss = 0 with Se > 0 is sequential-only: _mcu_scan reads
+                # an AC band exactly when Se > 0
                 ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
                 ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
                 if (ss == 0) != (se == 0) or se > 63 or \
                         (ah != 0 and ah != al + 1):
                     raise ValueError("invalid progressive scan header")
-                if {cid for cid, _dc, _ac in scomps} \
-                        - {cid for cid, *_ in comps}:
-                    raise ValueError("scan names a component the frame "
-                                     "lacks")
             else:
                 # a sequential scan codes the full band, whatever
                 # its header says
@@ -363,8 +566,8 @@ def _parse(data: bytes):
     if not progressive and \
             {cid for cid, *_ in comps} - {cid for cid, *_ in scans[0][0]}:
         # a 3-component frame whose SOS covers fewer components is a
-        # multi-scan sequential file this single-scan decoder does not
-        # handle — reject cleanly instead of KeyError
+        # multi-scan sequential file; only its first scan is read, so
+        # reject it rather than leave the other components all zero
         raise ValueError("multi-scan baseline unsupported")
     if any(tq not in qt for _c, _h, _v, tq in comps):
         raise ValueError("component references undefined quant table")
@@ -372,51 +575,19 @@ def _parse(data: bytes):
     vmax = max(c[2] for c in comps)
     if any(hmax % c[1] or vmax % c[2] for c in comps):
         raise ValueError("unsupported sampling factors")
-    return progressive, h, w, comps, qt, scans
-
-
-def _baseline_coefs(scan: tuple, comps: list[tuple], mcus_x: int,
-                    mcus_y: int) -> list[np.ndarray]:
-    """Entropy-decode the sequential scan into per-component dense
-    coefficient planes: (blocks, 64) int32, natural 8x8 order, in raster
-    block order over the MCU-padded component grid."""
-    scomps, _ss, _se, _ah, _al, restart_interval, entropy = scan
-    tabs = {cid: (dc_lut, ac_lut) for cid, dc_lut, ac_lut in scomps}
-    schedule = [(ci, *tabs[cid])
-                for ci, (cid, hs, vs, _tq) in enumerate(comps)
-                for _ in range(hs * vs)]
-    per_comp = _decode_scan(entropy, schedule, mcus_x * mcus_y,
-                            len(comps), restart_interval)
-    out = []
-    for (bidx, kidx, vals), (_cid, hs, vs, _tq) in zip(per_comp, comps):
-        # _decode_scan numbers blocks in MCU order (MCU, then row and
-        # column within it); raster[i] is the i-th block's raster index
-        raster = np.arange(mcus_y * vs * mcus_x * hs).reshape(
-            mcus_y, vs, mcus_x, hs).transpose(0, 2, 1, 3).ravel()
-        coef = np.zeros((raster.size, 64), dtype=np.int32)
-        # via int64: a crafted DC sum can leave int32, and numpy rejects
-        # out-of-range Python ints with an OverflowError (arrays wrap)
-        coef[raster[np.asarray(bidx, dtype=np.int64)],
-             _ZIGZAG[np.asarray(kidx, dtype=np.int64)]] = \
-            np.asarray(vals, dtype=np.int64)
-        out.append(coef)
-    return out
+    return h, w, comps, qt, scans
 
 
 def jpeg_decode(data: bytes) -> np.ndarray:
     """Decode a baseline or progressive JPEG: grayscale streams return
     an (H, W) uint8 array; 3-component YCbCr streams (4:4:4, 4:2:2,
     4:2:0) return an (H, W, 3) uint8 RGB array."""
-    progressive, h, w, comps, qt, scans = _parse(data)
+    h, w, comps, qt, scans = _parse(data)
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    if progressive:
-        from .jpeg_progressive import decode_scans
-        coefs = decode_scans(scans, comps, h, w, mcus_x, mcus_y)
-    else:
-        coefs = _baseline_coefs(scans[0], comps, mcus_x, mcus_y)
+    coefs = decode_scans(scans, comps, h, w, mcus_x, mcus_y)
     # one component at a time, so its dequantized coefficients and IDCT
     # temporaries are freed before the next is built; color components
     # add their terms straight into one float RGB array, in the order

@@ -31,12 +31,14 @@ CT_TEXT = "text"
 CT_UNKNOWN = "unknown"
 
 MAX_PIXELS = 1 << 28      # every raster decoder's crafted-header guard
-# Lossy VP8's own cap.  Its frame header gives 14-bit dimensions, so the
-# largest frame is 16383 x 16383 < 2**28 pixels and MAX_PIXELS alone could
-# never trip.  2**26 (64 Mpix, e.g. 8192 x 8192) is the value the decoder
-# has always used; at its ~1 s/Mpix (tools/kernel_cost.py pool) that is
-# still about a minute of CPU, a quarter of what 16383**2 would cost.
-MAX_PIXELS_VP8 = 1 << 26
+# WebP's family cap, for lossy VP8 and lossless VP8L alike.  Both headers
+# give 14-bit dimensions, so the largest frame is 16384 x 16384 <= 2**28
+# pixels and MAX_PIXELS alone could never trip.  2**26 (64 Mpix, e.g.
+# 8192 x 8192) is the value the VP8 decoder has always used; at its
+# ~1 s/Mpix (tools/kernel_cost.py pool) that is still about a minute of
+# CPU, and an 8-byte VP8L payload of 8192 x 8192 single-symbol pixels
+# still takes ~2.9 GB RSS.
+MAX_PIXELS_WEBP = 1 << 26
 
 # (family, clauses, content type).  A payload is in the family when, for
 # every clause (offset, alternatives), the bytes at ``offset`` start with

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .sniff import MAX_PIXELS_VP8
+from .sniff import MAX_PIXELS_WEBP
 from .vp8_tables import (CAT_BASE, COEFF_PROBA0, COEFF_UPDATE_PROBA,
                          K_AC_TABLE, K_BANDS, K_BMODES_PROBA, K_CAT,
                          K_DC_TABLE, ZIGZAG)
@@ -852,7 +852,7 @@ def vp8_decode_yuv(data: bytes):
         raise ValueError("VP8: bad start code")
     width = (data[6] | (data[7] << 8)) & 0x3FFF
     height = (data[8] | (data[9] << 8)) & 0x3FFF
-    if not width or not height or width * height > MAX_PIXELS_VP8:
+    if not width or not height or width * height > MAX_PIXELS_WEBP:
         raise ValueError("VP8: bad dimensions")
     if 10 + part0_size > len(data):
         raise ValueError("VP8: truncated first partition")

@@ -31,7 +31,7 @@ via ctypes where present: libwebp-encoded images (which exercise
 transforms, cache and backrefs) must decode to the exact pixels.
 
 Per-row failures raise ValueError, including the crafted-header
-pixel-count cap shared with the BMP/TIFF/GIF decoders.
+pixel-count cap WebP shares with core/vp8 (``MAX_PIXELS_WEBP``).
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ import struct
 
 import numpy as np
 
-from .sniff import MAGIC_RIFF, MAGIC_WEBP, MAX_PIXELS
+from .sniff import MAGIC_RIFF, MAGIC_WEBP, MAX_PIXELS_WEBP
 
 _VP8L_SIG = 0x2F
 
@@ -81,8 +81,8 @@ class _BitReader:
     windows (word[i] = bytes i..i+3 little-endian = the 32 bits
     starting at bit 8*i), built once and cached: the entropy-decode
     hot loop indexes these instead of slicing bytes per read — the
-    same table-driven playbook as the JPEG scan decoder
-    (core/jpeg.py _decode_scan)."""
+    same table-driven playbook as the JPEG scan decoders
+    (core/jpeg.py _mcu_scan)."""
 
     __slots__ = ("data", "pos", "_w", "_wnp")
 
@@ -661,7 +661,7 @@ def vp8l_decode(data: bytes) -> np.ndarray:
     br.bit()                                        # alpha hint
     if br.bits(3) != 0:
         raise ValueError("WebP: unknown VP8L version")
-    if w * h > MAX_PIXELS:                          # crafted-header guard
+    if w * h > MAX_PIXELS_WEBP:                     # crafted-header guard
         raise ValueError("WebP: bad dimensions")
 
     # transforms, in bitstream order; inverses apply in reverse

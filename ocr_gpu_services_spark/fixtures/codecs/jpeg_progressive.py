@@ -1,6 +1,6 @@
 """Progressive JPEG (ITU T.81 Annex G) encoder for the fixture
-generator.  The decoder is core/jpeg.jpeg_decode (scan decoders in
-core/jpeg_progressive.py).
+generator.  The decoder is core/jpeg.jpeg_decode, which decodes the
+Annex G scans too.
 
 The encoder emits a libjpeg-style script (DC with one bit of successive
 approximation, two spectral AC bands, two AC refinement passes, one DC

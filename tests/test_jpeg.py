@@ -185,3 +185,75 @@ def test_exif_fixture_rows_match_pixel_truth():
             n_exif += 1
             assert exif_orientation(bytes(payload)) == exif
     assert n_exif >= 2          # exif5 plants orientations 4 and 6 in tiny
+
+
+def _gray8x8(tables: list[tuple[int, tuple, tuple]], entropy: bytes) -> bytes:
+    """A hand-built 8x8 gray baseline stream: every quant entry 100, one
+    DHT per (class << 4 | slot, counts by length, symbols), one scan
+    over ``entropy``."""
+    def seg(marker: int, body: bytes) -> bytes:
+        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") \
+            + body
+
+    dht = b"".join(bytes([tc_th]) + bytes(counts).ljust(16, b"\0")
+                   + bytes(values) for tc_th, counts, values in tables)
+    return (b"\xff\xd8" + seg(0xDB, b"\x00" + bytes([100]) * 64)
+            + seg(0xC0, b"\x08\x00\x08\x00\x08\x01\x01\x11\x00")
+            + seg(0xC4, dht) + seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")
+            + entropy + b"\xff\xd9")
+
+
+def test_oversubscribed_huffman_table_rejected():
+    """A length whose codes do not fit in it, or a table whose last code
+    is all ones, raises as libjpeg's jpeg_make_d_derived_tbl does; the
+    peek LUT would otherwise grow past its 65536 entries (255 codes at
+    every length build a 16.7M-entry list)."""
+    import pytest
+    eob_ac = (0x10, (1,), (0x00,))                # '0' -> EOB
+    ok = _gray8x8([(0x00, (1,), (0,)), eob_ac], b"\x00")
+    assert (jpeg_decode(ok) == 128).all()
+    for counts, values in (((3,), (0, 1, 2)),     # three 1-bit codes
+                           ((2,), (0, 1)),        # '1' is all ones
+                           ((255,) * 16, (0,) * 4080)):
+        with pytest.raises(ValueError, match="Huffman table"):
+            jpeg_decode(_gray8x8([(0x00, counts, values), eob_ac], b"\x00"))
+
+
+def test_ac_run_without_size_ends_block():
+    """T.81 Figure F.13: in a sequential scan, an AC symbol with SSSS = 0
+    and RRRR != 15 ends the block, as libjpeg's decode_mcu does.  Here
+    the stream is DC '0' (category 0), then AC '01' (0x10): end of
+    block.  Skipping R + 1 coefficients and reading on would decode the
+    next AC '00' (0x01) and its bit '1' as a +1 at zigzag index 3, and
+    the block would no longer be flat."""
+    data = _gray8x8([(0x00, (1,), (0,)),
+                     (0x10, (0, 3), (0x01, 0x10, 0x00))], b"\x26")
+    img = jpeg_decode(data)
+    assert img.shape == (8, 8) and (img == 128).all(), img
+
+
+def test_short_scan_fails_before_planes_are_allocated():
+    """A crafted frame header declaring 16384 x 16384 over a few hundred
+    bytes of scan data fails with IndexError, the class a scan run past
+    its data raises, before the coefficient planes (1 GB a component)
+    are allocated."""
+    import tracemalloc
+
+    import pytest
+    from ocr_gpu_services_spark.fixtures.codecs.jpeg_progressive import (
+        jpeg_encode_progressive)
+    rgb = np.zeros((16, 16, 3), np.uint8)
+    for enc, sof in ((jpeg_encode(rgb[..., 0]), b"\xff\xc0"),
+                     (jpeg_encode_color(rgb, subsampling="420"), b"\xff\xc0"),
+                     (jpeg_encode_progressive(rgb), b"\xff\xc2")):
+        data = bytearray(enc)
+        i = data.find(sof)
+        data[i + 5:i + 9] = (16384).to_bytes(2, "big") * 2
+        tracemalloc.start()
+        try:
+            with pytest.raises(IndexError):
+                jpeg_decode(bytes(data))
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, peak

@@ -23,7 +23,7 @@ import pytest
 
 from ocr_gpu_services_spark.core import vp8
 from ocr_gpu_services_spark.core.extract import decode_image
-from ocr_gpu_services_spark.core.sniff import (MAX_PIXELS_VP8,
+from ocr_gpu_services_spark.core.sniff import (MAX_PIXELS_WEBP,
                                                probe_image_format,
                                                sniff_content_type)
 from ocr_gpu_services_spark.core.webp import webp_decode
@@ -221,7 +221,7 @@ def _key_frame_header(width, height):
 
 
 def test_pixel_cap_is_sniffs():
-    assert 16383 * 16383 > MAX_PIXELS_VP8 == 8192 * 8192
+    assert 16383 * 16383 > MAX_PIXELS_WEBP == 8192 * 8192
     with pytest.raises(ValueError, match="bad dimensions"):
         vp8.vp8_decode_yuv(_key_frame_header(8192, 8193))
     # at the cap the header passes the dimension check and fails on the

@@ -83,17 +83,32 @@ def test_roundtrip_rgb():
     assert np.array_equal(out, c)
 
 
+def _uniform_vp8l(w: int, h: int) -> bytes:
+    """An 8-byte VP8L payload of w x h zero pixels: no transform, no
+    color cache, no meta codes, five single-symbol prefix codes."""
+    bw = webp_enc._BitWriter()
+    bw.write(webp._VP8L_SIG, 8)
+    bw.write(w - 1, 14)
+    bw.write(h - 1, 14)
+    bw.write(0, 4)                                 # alpha hint, version
+    bw.write(0, 3)                                 # transform, cache, meta
+    for _ in range(5):
+        bw.write(0b0001, 4)                        # simple, 1 symbol: 0
+    return bw.done()
+
+
 def test_dimension_limits_and_pixel_cap():
     with pytest.raises(ValueError):
         webp_enc.vp8l_encode(np.zeros((1, 1 << 15), np.uint8))
-    # crafted 16384x16384 header trips the pixel cap before allocation
-    bw = webp_enc._BitWriter()
-    bw.write(webp._VP8L_SIG, 8)
-    bw.write((1 << 14) - 1, 14)
-    bw.write((1 << 14) - 1, 14)
-    bw.write(0, 4)
-    with pytest.raises(ValueError):
-        webp.vp8l_decode(bw.done() + b"\x00" * 64)
+    # VP8L's 14-bit dimensions reach 16384 x 16384 = MAX_PIXELS, so the
+    # raster cap alone never trips; WebP's family cap does, before
+    # allocation (without it this 8-byte payload asks for ~3 GB)
+    data = _uniform_vp8l(16, 8)
+    assert len(data) == 8
+    assert not webp.vp8l_decode(data).any()
+    for w, h in ((1 << 14, 1 << 14), (8192, 8193)):
+        with pytest.raises(ValueError, match="bad dimensions"):
+            webp.vp8l_decode(_uniform_vp8l(w, h))
 
 
 # ---------------------------------------------------------------------------
